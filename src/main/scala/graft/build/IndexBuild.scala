@@ -1,6 +1,6 @@
 package graft.build
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Chunker, Gram, Postings, Tokenizer}
 import java.sql.Timestamp
@@ -101,25 +101,33 @@ object IndexBuild {
     chunk_text: String, terms: Array[TermFreq], grams: Array[Int],
     explicit_grams: Array[Int] = null)
 
-  /** Engine stats + build params. `nextDocId` is the monotone id
-    * high-water mark (reference nextOID, fts-lmdb.go:855-867): incremental
-    * updates allocate fresh ids from here; compact/rebuild re-densifies.
-    * avgdl/k1/b/rangeSize are FROZEN between compacts — posting block-max
-    * bounds were computed with them, so queries must score with the same
-    * values (reference analog: stats stale until compact).
-    */
-  /** `chunkMode` is persisted so maintenance re-chunks changed documents
-    * with the SAME chunker the index was built with (the reference
-    * remembers each group's org flag, fts-lmdb.go:997-1006).
-    * `docParts == 0` means UNKNOWN (a docstats.json written before the
-    * field existed) — consumers must fall back to unpruned scans, never
-    * guess: pruning with a wrong modulus silently matches nothing.
+  /** Engine stats + build params, persisted as `docstats.json`. Every
+    * writer after the build (update, addChunk) takes the index's own
+    * parameters from here, never from the caller's [[Config]]:
+    *  - `nextDocId` is the monotone id high-water mark (reference nextOID,
+    *    fts-lmdb.go:855-867): incremental updates allocate fresh ids from
+    *    here; compact/rebuild re-densifies.
+    *  - avgdl/k1/b/rangeSize are FROZEN between compacts — posting
+    *    block-max bounds were computed with them, so appends encode and
+    *    queries score with the same values (reference analog: stats stale
+    *    until compact). `nBuckets` addresses both posting tables.
+    *  - `chunkMode` makes maintenance re-chunk changed documents with the
+    *    SAME chunker the index was built with (the reference remembers
+    *    each group's org flag, fts-lmdb.go:997-1006).
+    *  - `docParts == 0` means UNKNOWN (a docstats.json written before the
+    *    field existed) — scans must fall back to unpruned, never guess:
+    *    pruning with a wrong modulus silently matches nothing.
     */
   final case class DocStats(nDocs: Long, sumDl: Long, avgdl: Double,
                             rangeSize: Long, nBuckets: Int, nRanges: Int,
                             k1: Double, b: Double, watermark: String,
                             nextDocId: Long, docParts: Int = 0,
-                            chunkMode: String = ChunkMode.Lines)
+                            chunkMode: String = ChunkMode.Lines) {
+    /** The docpart modulus for NEW rows: the persisted one, or `legacy`
+      * when a pre-field docstats.json left it unknown.
+      */
+    def docPartsOr(legacy: Int): Int = if (docParts > 0) docParts else legacy
+  }
 
   final case class BuildStats(nDocs: Long, nChunkParts: Int, nTermBuckets: Int,
                               nGramBuckets: Int, resumedChunks: Int,
@@ -300,21 +308,6 @@ object IndexBuild {
     else org.apache.commons.io.FileUtils.sizeOfDirectory(f)
   }
 
-  /** Stage 2 — stable dense doc ids: global rank in (url, chunk_seq) order,
-    * computed as a distributed prefix sum over per-url chunk counts
-    * (doc_id = base(url) + chunk_seq; chunk_seq is dense 0..n-1 per url, so
-    * this equals the global rank). Deterministic and independent of
-    * partition count (reference analog: monotone OID allocation,
-    * fts-lmdb.go:855-867, made reproducible per SURVEY §2.6 M6).
-    *
-    * Below the broadcast gate only the tiny (url, count) pairs shuffle;
-    * the heavy chunk rows (text) are id-stamped map-side and written
-    * straight back out — at the 10^12-doc target the docs write is
-    * embarrassingly parallel. Above the gate see the shuffle-hash note in
-    * [[assignIds]]; in production the same join runs as an Iceberg
-    * storage-partitioned join on the shared hash(url) bucketing with no
-    * big-side shuffle either.
-    */
   /** Stamp dense, deterministic doc ids `base + rank(url, chunk_seq)` onto
     * chunk rows via a distributed prefix sum: only tiny (url, count) pairs
     * shuffle; the heavy chunk rows are id-stamped map-side. Returns the
@@ -378,6 +371,21 @@ object IndexBuild {
     (withIds, () => { perUrl.unpersist(blocking = false); () })
   }
 
+  /** Stage 2 — stable dense doc ids: global rank in (url, chunk_seq) order,
+    * computed as a distributed prefix sum over per-url chunk counts
+    * (doc_id = base(url) + chunk_seq; chunk_seq is dense 0..n-1 per url, so
+    * this equals the global rank). Deterministic and independent of
+    * partition count (reference analog: monotone OID allocation,
+    * fts-lmdb.go:855-867, made reproducible per SURVEY §2.6 M6).
+    *
+    * Below the broadcast gate only the tiny (url, count) pairs shuffle;
+    * the heavy chunk rows (text) are id-stamped map-side and written
+    * straight back out — at the 10^12-doc target the docs write is
+    * embarrassingly parallel. Above the gate see the shuffle-hash note in
+    * [[assignIds]]; in production the same join runs as an Iceberg
+    * storage-partitioned join on the shared hash(url) bucketing with no
+    * big-side shuffle either.
+    */
   private[graft] def stageIds(spark: SparkSession, dir: String, cfg: Config): DocStats = {
     import spark.implicits._
     if (Manifest.completed(dir, "ids")("all")) return readDocStats(dir)
@@ -414,17 +422,6 @@ object IndexBuild {
     stats
   }
 
-  final case class Posting(key: String, bucket: Int, range_id: Int,
-                           doc_id: Long, tf: Int, dl: Long)
-  /** Gram-path posting: int key, no tf/dl payload. The gram index only ever
-    * answers membership/intersection (candidates, fuzzy overlap) — never
-    * BM25 — so the shuffled row is 20 bytes of primitives instead of an
-    * allocated "g12345" string plus dead tf/dl columns. At web scale the
-    * gram explode is the single largest shuffle in the build (~50-130 grams
-    * per chunk); this halves its bytes and removes per-row allocation.
-    */
-  final case class GramPosting(bucket: Int, gkey: Int, range_id: Int,
-                               doc_id: Long)
   /** One chunk's terms that hash to one bucket — the transposed-term-build
     * shuffle row (doc_id/dl travel once per slice, not once per posting).
     * Terms ride as ONE array<struct<t,f>>: a parallel-arrays layout
@@ -439,6 +436,7 @@ object IndexBuild {
 
   /** Bucket of a term — must match `pmod(xxhash64(term), nBuckets)` (seed
     * 42, Spark's xxhash64 default) everywhere: build, query, maintenance.
+    * The same hash places a url in its docpart (`nBuckets` = docParts).
     */
   private[graft] def termBucket(t: String, nBuckets: Int): Int = {
     val h = org.apache.spark.sql.catalyst.expressions.XxHash64Function
@@ -452,281 +450,242 @@ object IndexBuild {
                           sum_tf: Long, max_tf: Int, n_bytes: Int,
                           postings: Array[Byte])
 
-  /** Stage 3/4 — posting segments. ONE shuffle: range-repartition + sort on
-    * (bucket, key, range_id, doc_id); the streaming segment builder then
-    * emits one delta+varint block segment per (key, range_id) run. Resume
-    * unit: bucket.
+  /** Gram segments are keyed `g<code>` in the postings table (term segments
+    * by the term itself). The one encoding of that key and its two
+    * decodings: a driver-side one for query bucket pruning and a `Column`
+    * one for the gram dictionary.
     */
-  /** Posting segment rows for id-stamped chunk rows. ONE shuffle: hash
-    * repartition on (key, range_id) + in-partition sort; the streaming
-    * segment builder then emits one delta+varint block segment per
-    * (key, range_id) run. Shared by the full build (stage 3/4) and the
-    * incremental update's delta append ([[graft.maint.Maintenance.update]]).
+  private[graft] def gramKey(code: Int): String = s"g$code"
+  private[graft] def gramCode(key: String): Int = key.substring(1).toInt
+  private[graft] def gramCode(key: Column): Column = substring(key, 2, 10).cast("int")
+
+  /** Per-key state of the open group in [[SegmentKernel]]. */
+  private final class SegAcc(val sb: Postings.SegmentBuilder, val first: Long) {
+    var last: Long = first
+    var n: Long = 0L
+    var sumTf: Long = 0L
+    var maxTf: Int = 0
+
+    def row(bucket: Int, key: String, range: Int): SegRow = {
+      val bytes = sb.result()
+      SegRow(bucket, key, range, first, last, n, sumTf, maxTf, bytes.length, bytes)
+    }
+  }
+
+  /** The posting-segment kernel of both families. Rows arrive sorted by
+    * (group, doc_id), so exactly one group is open at a time: each posting
+    * a row yields goes to its key's [[Postings.SegmentBuilder]], and the
+    * open group's segments flush on the group break (flush materializes
+    * one group's rows — the same bytes the builders already hold, freed as
+    * the map clears). A family says only how a row yields its
+    * (key, tf, dl) postings — [[consume]] calls [[add]] in a direct loop,
+    * no closure or tuple per posting — and where a finished key's segment
+    * goes ([[emit]]). Membership-only segments (`hasTfDl = false`) add
+    * tf = 1, so their `sum_tf` is `n_docs` and their `max_tf` is 1.
     */
-  private[graft] def buildSegRows(spark: SparkSession, docsT: DataFrame,
+  private abstract class SegmentKernel[R, K](rows: Iterator[R], hasTfDl: Boolean,
+      k1: Double, b: Double, avgdl: Double, blockSize: Int)
+      extends Iterator[SegRow] {
+    protected def group(r: R): Long
+    protected def consume(r: R): Unit
+    protected def emit(key: K, group: Long, acc: SegAcc): SegRow
+
+    private var cur = Long.MinValue
+    private val open = new java.util.HashMap[K, SegAcc]()
+    private var drain: Iterator[SegRow] = Iterator.empty
+
+    protected final def add(key: K, docId: Long, tf: Int, dl: Long): Unit = {
+      var acc = open.get(key)
+      if (acc == null) {
+        acc = new SegAcc(new Postings.SegmentBuilder(k1, b, avgdl, blockSize,
+          hasTfDl), docId)
+        open.put(key, acc)
+      }
+      acc.sb.add(docId, tf, dl)
+      acc.last = docId
+      acc.n += 1
+      acc.sumTf += tf
+      if (tf > acc.maxTf) acc.maxTf = tf
+    }
+
+    private def flush(): Iterator[SegRow] = {
+      val buf = new scala.collection.mutable.ArrayBuffer[SegRow](open.size)
+      open.forEach((key, acc) => buf += emit(key, cur, acc))
+      open.clear()
+      buf.iterator
+    }
+
+    /** Read rows until a finished group is ready to drain. */
+    @annotation.tailrec
+    private def fill(): Unit =
+      if (drain.hasNext) ()
+      else if (rows.hasNext) {
+        val r = rows.next()
+        val g = group(r)
+        if (g != cur && !open.isEmpty) drain = flush()
+        cur = g
+        consume(r)
+        fill() // returns at once after a flush: the finished group drains first
+      } else if (!open.isEmpty) drain = flush()
+
+    override def hasNext: Boolean = { fill(); drain.hasNext }
+    override def next(): SegRow = {
+      if (!hasNext) throw new NoSuchElementException
+      drain.next()
+    }
+  }
+
+  /** Posting segment rows of id-stamped docs-store rows (`docs`: doc_id,
+    * dl, chunk_text, explicit_grams) for the given buckets. ONE shuffle per
+    * family, then [[SegmentKernel]]; shared by the full build (stage 3/4)
+    * and the maintenance appends ([[graft.maint.Maintenance.update]],
+    * [[graft.maint.Maintenance.addChunk]]). Bucket count, k1 and b come
+    * from `stats` — the index's own parameters — so an append lands in the
+    * buckets queries prune to and encodes the block maxima queries score
+    * with; `cfg` supplies only the block size and the shuffle width.
+    *
+    * Token arrays are derived here from the chunk text (ids already
+    * stamped — no join, no shuffle before the transposed repartition;
+    * tokenization is deterministic, so a bucket rebuilt years later
+    * produces byte-identical segments). Explicit grams (reference `chunk`
+    * command) are data, not derivable — they ride in the nullable
+    * explicit_grams column.
+    */
+  private[graft] def buildSegRows(spark: SparkSession, docs: DataFrame,
                                   cfg: Config, stats: DocStats, grams: Boolean,
                                   buckets: Seq[Int]): Dataset[SegRow] = {
     import spark.implicits._
-    val missing = buckets
+    val missingSet = buckets.toSet
+    val nBuckets = stats.nBuckets
     val rangeSize = stats.rangeSize
-    val (k1, b, avgdl, blockSize) = (cfg.k1, cfg.b, stats.avgdl, cfg.blockSize)
-    // hash repartition on (key, range_id) — NOT repartitionByRange, whose
+    val (k1, b, avgdl, blockSize) = (stats.k1, stats.b, stats.avgdl, cfg.blockSize)
+    // hash repartition on the group — NOT repartitionByRange, whose
     // sampling pass would evaluate the full explode twice. Skew is already
     // bounded: a hot term's postings split across nRanges range_id shards
     // (the salt), so no partition receives more than ~rangeSize rows per
-    // term. The in-partition sort leads with bucket so the partitionBy
-    // writer streams one bucket dir at a time.
-    val segRows: Dataset[SegRow] =
-      if (grams) {
-        // RANGE-TRANSPOSED gram build: ship ONE row per chunk
-        // (range_id, doc_id, grams[]) instead of exploding ~50-130
-        // (gram, doc) pairs per chunk — ~5x fewer shuffle bytes and a
-        // |chunks|-row sort instead of a |postings|-row sort. The kernel
-        // walks each range's chunks in doc-id order and appends to one
-        // SegmentBuilder per gram; per-task memory is BOUNDED at any corpus
-        // size because the gram space is capped (37^3 codes: ~2 KB idle
-        // builder state each) and a range's posting bytes are capped by
-        // rangeSize (the nRanges knob sizes kernels to executor memory).
-        // Works for the incremental delta append too (any doc-id range).
-        // Resume granularity: on a partial resume each chunk's gram array
-        // is pre-filtered MAP-SIDE to the missing buckets (and empty rows
-        // dropped), so the resumed shuffle carries only the missing
-        // buckets' share of postings — ~|missing|/nBuckets of the full
-        // stage's bytes — instead of re-shipping every gram and dropping
-        // completed buckets in the kernel.
-        val missingSet = missing.toSet
-        val allBuckets = missingSet.size == cfg.nBuckets
-        val nBuckets = cfg.nBuckets
-        val gramRows = docsT
-          .select(($"doc_id" / lit(rangeSize)).cast("int").as("range_id"),
-            $"doc_id", $"grams")
-          .as[(Int, Long, Array[Int])]
-        val pruned =
-          if (allBuckets) gramRows
-          else gramRows
-            .map { case (r, d, gs) =>
-              (r, d, gs.filter(g => missingSet.contains(g % nBuckets)))
+    // term. The term sort leads with bucket so the partitionBy writer
+    // streams one bucket dir at a time.
+    if (grams) {
+      // RANGE-TRANSPOSED gram build: ship ONE row per chunk
+      // (range_id, doc_id, grams[]) instead of exploding ~50-130
+      // (gram, doc) pairs per chunk — ~5x fewer shuffle bytes and a
+      // |chunks|-row sort instead of a |postings|-row sort. The group is
+      // the range; per-task memory is BOUNDED at any corpus size because
+      // the gram space is capped (37^3 codes: ~2 KB idle builder state
+      // each) and a range's posting bytes are capped by rangeSize (the
+      // nRanges knob sizes kernels to executor memory).
+      // Resume granularity: on a partial resume each chunk's gram array
+      // is pre-filtered MAP-SIDE to the missing buckets (and empty rows
+      // dropped), so the resumed shuffle carries only the missing
+      // buckets' share of postings — ~|missing|/nBuckets of the full
+      // stage's bytes — instead of re-shipping every gram and dropping
+      // completed buckets in the kernel.
+      val allBuckets = missingSet.size == nBuckets
+      docs.select(($"doc_id" / lit(rangeSize)).cast("int").as("range_id"),
+          $"doc_id", $"chunk_text", $"explicit_grams")
+        .as[(Int, Long, String, Array[Int])]
+        .map { case (r, d, text, eg) =>
+          val gs = if (eg != null) eg else Gram.gramsSorted(partial = false, Seq(text))
+          (r, d, if (allBuckets) gs else gs.filter(g => missingSet.contains(g % nBuckets)))
+        }
+        .filter(_._3.nonEmpty)
+        .toDF("range_id", "doc_id", "grams")
+        .repartition(cfg.shufflePartitions, $"range_id")
+        .sortWithinPartitions($"range_id", $"doc_id")
+        .as[(Int, Long, Array[Int])]
+        .mapPartitions { it =>
+          // membership-only layout: no tf/dl sections (the gram index
+          // never scores — candidates/fuzzy need ids only)
+          new SegmentKernel[(Int, Long, Array[Int]), Int](it, hasTfDl = false,
+              k1, b, avgdl, blockSize) {
+            protected def group(r: (Int, Long, Array[Int])): Long = r._1
+            protected def consume(r: (Int, Long, Array[Int])): Unit = {
+              val docId = r._2
+              val gs = r._3
+              var i = 0
+              while (i < gs.length) {
+                add(gs(i), docId, 1, 1L)
+                i += 1
+              }
             }
-            .filter(_._3.nonEmpty)
-            .toDF("range_id", "doc_id", "grams")
-            .as[(Int, Long, Array[Int])]
-        pruned
-          .repartition(cfg.shufflePartitions, $"range_id")
-          .sortWithinPartitions($"range_id", $"doc_id")
-          .mapPartitions { it =>
-            // per-gram accumulator within the open range
-            final class Acc(val sb: Postings.SegmentBuilder, val first: Long) {
-              var last: Long = first
-              var n: Long = 0L
+            protected def emit(g: Int, range: Long, acc: SegAcc): SegRow =
+              acc.row(g % nBuckets, gramKey(g), range.toInt)
+          }
+        }
+    } else {
+      // BUCKET+RANGE-TRANSPOSED term build (same idea as the gram branch):
+      // one row per (chunk, term-bucket) with that bucket's TermFreq slice
+      // — doc_id/dl shuffle once per bucket-slice instead of once per
+      // posting, and the sort is over slice rows, not postings. The group
+      // is (bucket, range); the kernel's live-builder state is bounded by
+      // distinct-terms-per-range / nBuckets (nBuckets is the memory knob at
+      // web scale: 100s of buckets keep the per-task term map small).
+      docs.select(($"doc_id" / lit(rangeSize)).cast("int").as("range_id"),
+          $"doc_id", $"dl".cast("long").as("dl"), $"chunk_text")
+        .as[(Int, Long, Long, String)]
+        .mapPartitions { rows =>
+        // per-task term->bucket memo: xxhash64 over a fresh UTF8String per
+        // term-occurrence is the slicer's hottest path, and real-corpus
+        // term frequency is Zipf — the memo hits for nearly every
+        // occurrence. Size-capped so task memory stays bounded on
+        // arbitrary vocabularies.
+        val memo = new java.util.HashMap[String, Integer](1 << 12)
+        // per-PARTITION slice workspace: one buffer per bucket, cleared
+        // after each chunk (a fresh HashMap + buffers per chunk was the
+        // slicer's dominant allocation — it runs once per chunk row)
+        val bufs = new Array[scala.collection.mutable.ArrayBuffer[TermFreq]](nBuckets)
+        rows.flatMap { case (range, docId, dl, text) =>
+          Tokenizer.termFreqs(text).foreach { case (t, f) =>
+            val bkt = {
+              var b = memo.get(t)
+              if (b == null) {
+                b = Integer.valueOf(termBucket(t, nBuckets))
+                if (memo.size < (1 << 16)) memo.put(t, b)
+              }
+              b.intValue
             }
-            new Iterator[SegRow] {
-              // rows arrive sorted by (range_id, doc_id): exactly one range
-              // is open at a time; its segments flush on the range break
-              // (flush materializes one range's rows — the same bytes the
-              // builders already hold, freed as the map clears)
-              private var curRange = Int.MinValue
-              private val open = new java.util.HashMap[Int, Acc]()
-              private var drain: Iterator[SegRow] = Iterator.empty
-
-              private def consumeRow(docId: Long, gs: Array[Int]): Unit = {
-                var i = 0
-                while (i < gs.length) {
-                  val g = gs(i)
-                  if (allBuckets || missingSet.contains(g % nBuckets)) {
-                    var acc = open.get(g)
-                    if (acc == null) {
-                      // membership-only layout: no tf/dl sections (the gram
-                      // index never scores — candidates/fuzzy need ids only)
-                      acc = new Acc(new Postings.SegmentBuilder(k1, b, avgdl,
-                        blockSize, hasTfDl = false), docId)
-                      open.put(g, acc)
-                    }
-                    acc.sb.add(docId, 1, 1L)
-                    acc.last = docId
-                    acc.n += 1
-                  }
-                  i += 1
-                }
+            if (missingSet.contains(bkt)) {
+              var buf = bufs(bkt)
+              if (buf == null) {
+                buf = new scala.collection.mutable.ArrayBuffer[TermFreq](8)
+                bufs(bkt) = buf
               }
-
-              private def flush(): Iterator[SegRow] = {
-                val range = curRange
-                val buf = new scala.collection.mutable.ArrayBuffer[SegRow](open.size)
-                val e = open.entrySet().iterator()
-                while (e.hasNext) {
-                  val ent = e.next()
-                  val g = ent.getKey
-                  val acc = ent.getValue
-                  val bytes = acc.sb.result()
-                  buf += SegRow(g % nBuckets, s"g$g", range, acc.first,
-                    acc.last, acc.n, acc.n, 1, bytes.length, bytes)
-                }
-                open.clear()
-                buf.iterator
-              }
-
-              @annotation.tailrec
-              private def fill(): Unit = {
-                if (drain.hasNext) return
-                if (!it.hasNext) {
-                  if (!open.isEmpty) drain = flush()
-                  return
-                }
-                val (range, docId, gs) = it.next()
-                if (range != curRange && !open.isEmpty) {
-                  drain = flush()
-                  curRange = range
-                  consumeRow(docId, gs)
-                  // drain is non-empty: emit the finished range now
-                } else {
-                  curRange = range
-                  consumeRow(docId, gs)
-                  fill()
-                }
-              }
-
-              override def hasNext: Boolean = { fill(); drain.hasNext }
-              override def next(): SegRow = {
-                if (!hasNext) throw new NoSuchElementException
-                drain.next()
-              }
+              buf += TermFreq(t, f)
             }
           }
-      } else {
-        // BUCKET+RANGE-TRANSPOSED term build (same idea as the gram branch):
-        // one row per (chunk, term-bucket) with that bucket's TermFreq slice
-        // — doc_id/dl shuffle once per bucket-slice instead of once per
-        // posting, and the sort is over slice rows, not postings. The
-        // kernel's live-builder state is bounded by distinct-terms-per-range
-        // / nBuckets (nBuckets is the memory knob at web scale: 100s of
-        // buckets keep the per-task term map small).
-        val missingSet = missing.toSet
-        val nBuckets = cfg.nBuckets
-        docsT.select(($"doc_id" / lit(rangeSize)).cast("int").as("range_id"),
-            $"doc_id", $"dl".cast("long").as("dl"), $"terms")
-          .as[(Int, Long, Long, Array[TermFreq])]
-          .mapPartitions { rows =>
-          // per-task term->bucket memo: xxhash64 over a fresh UTF8String per
-          // term-occurrence is the slicer's hottest path, and real-corpus
-          // term frequency is Zipf — the memo hits for nearly every
-          // occurrence. Size-capped so task memory stays bounded on
-          // arbitrary vocabularies.
-          val memo = new java.util.HashMap[String, Integer](1 << 12)
-          // per-PARTITION slice workspace: one buffer per bucket, cleared
-          // after each chunk (a fresh HashMap + buffers per chunk was the
-          // slicer's dominant allocation — it runs once per chunk row)
-          val bufs = new Array[scala.collection.mutable.ArrayBuffer[TermFreq]](nBuckets)
-          rows.flatMap { case (range, docId, dl, tfs) =>
-            tfs.foreach { tf =>
-              val bkt = {
-                var b = memo.get(tf.t)
-                if (b == null) {
-                  b = Integer.valueOf(termBucket(tf.t, nBuckets))
-                  if (memo.size < (1 << 16)) memo.put(tf.t, b)
-                }
-                b.intValue
-              }
-              if (missingSet.contains(bkt)) {
-                var buf = bufs(bkt)
-                if (buf == null) {
-                  buf = new scala.collection.mutable.ArrayBuffer[TermFreq](8)
-                  bufs(bkt) = buf
-                }
-                buf += tf
-              }
+          val out = new scala.collection.mutable.ArrayBuffer[TermSlice](8)
+          var bkt = 0
+          while (bkt < nBuckets) {
+            val buf = bufs(bkt)
+            if (buf != null && buf.nonEmpty) {
+              out += TermSlice(bkt, range, docId, dl, buf.toArray)
+              buf.clear()
             }
-            val out = new scala.collection.mutable.ArrayBuffer[TermSlice](8)
-            var bkt = 0
-            while (bkt < nBuckets) {
-              val buf = bufs(bkt)
-              if (buf != null && buf.nonEmpty) {
-                out += TermSlice(bkt, range, docId, dl, buf.toArray)
-                buf.clear()
-              }
-              bkt += 1
-            }
-            out
+            bkt += 1
           }
-          }
-          .repartition(cfg.shufflePartitions, $"bucket", $"range_id")
-          .sortWithinPartitions($"bucket", $"range_id", $"doc_id")
-          .mapPartitions { it =>
-            final class Acc(val sb: Postings.SegmentBuilder, val first: Long) {
-              var last: Long = first
-              var n: Long = 0L
-              var sumTf: Long = 0L
-              var maxTf: Int = 0
-            }
-            new Iterator[SegRow] {
-              // rows sorted by (bucket, range_id, doc_id): one (bucket,
-              // range) group open at a time, flushed on the break
-              private var curBucket = Int.MinValue
-              private var curRange = Int.MinValue
-              private val open = new java.util.HashMap[String, Acc]()
-              private var drain: Iterator[SegRow] = Iterator.empty
-
-              private def consumeRow(s: TermSlice): Unit = {
-                var i = 0
-                while (i < s.terms.length) {
-                  val tf = s.terms(i)
-                  var acc = open.get(tf.t)
-                  if (acc == null) {
-                    acc = new Acc(new Postings.SegmentBuilder(k1, b, avgdl,
-                      blockSize), s.doc_id)
-                    open.put(tf.t, acc)
-                  }
-                  acc.sb.add(s.doc_id, tf.f, s.dl)
-                  acc.last = s.doc_id
-                  acc.n += 1
-                  acc.sumTf += tf.f
-                  if (tf.f > acc.maxTf) acc.maxTf = tf.f
-                  i += 1
-                }
-              }
-
-              private def flush(): Iterator[SegRow] = {
-                val (bucket, range) = (curBucket, curRange)
-                val buf = new scala.collection.mutable.ArrayBuffer[SegRow](open.size)
-                val e = open.entrySet().iterator()
-                while (e.hasNext) {
-                  val ent = e.next()
-                  val acc = ent.getValue
-                  val bytes = acc.sb.result()
-                  buf += SegRow(bucket, ent.getKey, range, acc.first, acc.last,
-                    acc.n, acc.sumTf, acc.maxTf, bytes.length, bytes)
-                }
-                open.clear()
-                buf.iterator
-              }
-
-              @annotation.tailrec
-              private def fill(): Unit = {
-                if (drain.hasNext) return
-                if (!it.hasNext) {
-                  if (!open.isEmpty) drain = flush()
-                  return
-                }
-                val s = it.next()
-                if ((s.bucket != curBucket || s.range_id != curRange) && !open.isEmpty) {
-                  drain = flush()
-                  curBucket = s.bucket; curRange = s.range_id
-                  consumeRow(s)
-                } else {
-                  curBucket = s.bucket; curRange = s.range_id
-                  consumeRow(s)
-                  fill()
-                }
-              }
-
-              override def hasNext: Boolean = { fill(); drain.hasNext }
-              override def next(): SegRow = {
-                if (!hasNext) throw new NoSuchElementException
-                drain.next()
+          out
+        }
+        }
+        .repartition(cfg.shufflePartitions, $"bucket", $"range_id")
+        .sortWithinPartitions($"bucket", $"range_id", $"doc_id")
+        .mapPartitions { it =>
+          new SegmentKernel[TermSlice, String](it, hasTfDl = true,
+              k1, b, avgdl, blockSize) {
+            protected def group(s: TermSlice): Long =
+              (s.bucket.toLong << 32) | s.range_id.toLong
+            protected def consume(s: TermSlice): Unit = {
+              var i = 0
+              while (i < s.terms.length) {
+                val tf = s.terms(i)
+                add(tf.t, s.doc_id, tf.f, s.dl)
+                i += 1
               }
             }
+            protected def emit(t: String, group: Long, acc: SegAcc): SegRow =
+              acc.row((group >>> 32).toInt, t, group.toInt)
           }
-      }
-    segRows
+        }
+    }
   }
 
   /** Stage 3/4 — posting segments. Resume unit: bucket. */
@@ -736,33 +695,11 @@ object IndexBuild {
     val stage = if (grams) "postings_grams" else "postings_terms"
     val outDir = if (grams) gramPostingsDir(dir) else termPostingsDir(dir)
     val done = Manifest.completed(dir, stage)
-    val missing = (0 until cfg.nBuckets).filterNot(b => done(b.toString))
-    if (missing.isEmpty) return cfg.nBuckets
+    val missing = (0 until stats.nBuckets).filterNot(b => done(b.toString))
+    if (missing.isEmpty) return stats.nBuckets
     val t0 = System.nanoTime()
-    // Token arrays are re-derived from the docs store's chunk text (ids
-    // already stamped — no join, no shuffle before the transposed
-    // repartition; tokenization is deterministic, so a bucket rebuilt
-    // years later produces byte-identical segments). Explicit grams
-    // (reference `chunk` command) are data, not derivable — they ride in
-    // the nullable explicit_grams column.
-    val docsT: DataFrame =
-      if (grams)
-        spark.read.parquet(docsDir(dir))
-          .select($"doc_id", $"dl", $"chunk_text", $"explicit_grams")
-          .as[(Long, Int, String, Array[Int])]
-          .map { case (id, dl, text, eg) =>
-            (id, dl,
-              if (eg != null) eg
-              else Gram.gramsSorted(partial = false, Seq(text)))
-          }.toDF("doc_id", "dl", "grams")
-      else
-        spark.read.parquet(docsDir(dir))
-          .select($"doc_id", $"dl", $"chunk_text")
-          .as[(Long, Int, String)]
-          .map { case (id, dl, text) =>
-            (id, dl, Tokenizer.termFreqs(text).map { case (t, f) => TermFreq(t, f) })
-          }.toDF("doc_id", "dl", "terms")
-    val segRows = buildSegRows(spark, docsT, cfg, stats, grams, missing)
+    val segRows = buildSegRows(spark, spark.read.parquet(docsDir(dir)), cfg,
+      stats, grams, missing)
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     segRows.write.mode("overwrite").partitionBy("bucket").parquet(outDir)
     val wallMs = (System.nanoTime() - t0) / 1000000
@@ -778,35 +715,40 @@ object IndexBuild {
     done.size
   }
 
-  /** Stage 5 — dictionary + gram dictionary from segment *metadata* only
-    * (the postings binary column is pruned from the scan).
-    */
+  /** Stage 5 — the dictionaries ([[writeDictionaries]]). */
   private[graft] def stageDictionary(spark: SparkSession, dir: String): Unit = {
-    import spark.implicits._
     if (Manifest.completed(dir, "dictionary")("all")) return
     val t0 = System.nanoTime()
-    val obs = org.apache.spark.sql.Observation()
-    // term and gram dictionaries aggregate DIFFERENT posting tables into
-    // DIFFERENT output dirs — run the two write jobs concurrently (§2.6)
-    inParallel(
-      () => {
-        val seg = spark.read.parquet(termPostingsDir(dir))
-          .groupBy($"key".as("term"))
-          .agg(sum($"n_docs").as("df"), sum($"sum_tf").as("cf"), max($"max_tf").as("max_tf"))
-        seg.repartitionByRange(8, $"term").sortWithinPartitions("term")
-          .observe(obs, count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(dictDir(dir))
-      },
-      () => {
-        val gseg = spark.read.parquet(gramPostingsDir(dir))
-          .groupBy(substring($"key", 2, 10).cast("int").as("gram"))
-          .agg(sum($"n_docs").as("df"))
-        gseg.repartitionByRange(8, $"gram").sortWithinPartitions("gram")
-          .write.mode("overwrite").parquet(gramDictDir(dir))
-      })
-    val n = obs.get("n").asInstanceOf[Long]
+    val n = writeDictionaries(spark, dir)(_.write.mode("overwrite").parquet(_))
     Manifest.append(dir, Manifest.Entry("dictionary", "all", n, 0L, "",
       (System.nanoTime() - t0) / 1000000))
+  }
+
+  /** The dictionary derivation of the build and of every maintenance
+    * writer: (term, df, cf, max_tf) and (gram, df) aggregated from segment
+    * *metadata* only (the postings binary column is pruned from the scan),
+    * so it is exact over any mix of built, appended and spliced segments.
+    * Each frame goes to `write(frame, targetDir)`; the term and gram
+    * dictionaries aggregate DIFFERENT posting tables into DIFFERENT dirs,
+    * so their two write jobs run concurrently (§2.6). Returns the number
+    * of terms.
+    */
+  private[graft] def writeDictionaries(spark: SparkSession, dir: String)(
+      write: (DataFrame, String) => Unit): Long = {
+    import spark.implicits._
+    // (name, df, extra...) per key of one posting table, sorted by key
+    def derive(postings: String, key: Column, name: String, extra: Column*) =
+      spark.read.parquet(postings).groupBy(key.as(name))
+        .agg(sum($"n_docs").as("df"), extra: _*)
+        .repartitionByRange(8, col(name)).sortWithinPartitions(name)
+    val obs = org.apache.spark.sql.Observation()
+    inParallel(
+      () => write(derive(termPostingsDir(dir), $"key", "term",
+          sum($"sum_tf").as("cf"), max($"max_tf").as("max_tf"))
+        .observe(obs, count(lit(1)).as("n")), dictDir(dir)),
+      () => write(derive(gramPostingsDir(dir), gramCode($"key"), "gram"),
+        gramDictDir(dir)))
+    obs.get("n").asInstanceOf[Long]
   }
 
   def writeDocStats(dir: String, s: DocStats): Unit = {

@@ -32,8 +32,10 @@ import graft.core.Postings
   * count tombstoned postings (idf base), and avgdl / rangeSize / k1 / b are
   * FROZEN (posting block-max bounds were built with them) until compact.
   *
-  * NOTE: `cfg.docParts` must match the value the index was built with
-  * (docpart = hash(url) % docParts addresses the chunk store).
+  * Appends take the index's parameters (bucket count, k1/b, chunk mode,
+  * docParts) from its docstats.json, not from the caller's `cfg`: docpart =
+  * hash(url) % docParts addresses the docs store, and the buckets and
+  * block maxima must match what queries prune to and score with.
   */
 object Maintenance {
 
@@ -380,15 +382,17 @@ object Maintenance {
     // hashes overflows under ANSI arithmetic on real-size deltas
     val deltaKey = java.lang.Long.toHexString(cRow.getLong(3)) + "_" + deltaCount
 
-    // 2. chunk + tokenize the delta only
-    val chunkMode = cfg.chunkMode
-    val docParts = cfg.docParts
+    // 2. chunk + tokenize the delta only, with the index's own chunker
+    //    and docpart modulus (docsOfUrls prunes with the persisted one)
+    val stats0 = IndexBuild.readDocStats(dir)
+    val chunkMode = stats0.chunkMode
+    val docParts = stats0.docPartsOr(cfg.docParts)
     val deltaChunks = newDocs.join(delta.select($"url"), Seq("url"))
       .withColumn("docpart", pmod(xxhash64($"url"), lit(docParts)).cast("int"))
       .select($"url", $"warc_ts", $"lang", $"text", $"docpart")
       .as[(String, java.sql.Timestamp, String, String, Int)]
       .flatMap { case (url, ts, lang, text, part) =>
-        IndexBuild.chunkDoc(url, ts, lang, part, text, chunkMode)
+        IndexBuild.chunkDocMeta(url, ts, lang, part, text, chunkMode)
       }.toDF().cache()
     val aggRow = deltaChunks.agg(count(lit(1)), sum($"dl".cast("long")),
       max($"warc_ts").cast("string")).head()
@@ -401,7 +405,6 @@ object Maintenance {
     val deltaSumDl = if (aggRow.isNullAt(1)) 0L else aggRow.getLong(1)
     val deltaWm = if (aggRow.isNullAt(2)) "" else aggRow.getString(2)
 
-    val stats0 = IndexBuild.readDocStats(dir)
     val statsDone = Manifest.completed(dir, "upd_stats")(deltaKey)
     // ids are reserved by the upd_stats stage; on resume, recover the base
     // from the (deterministic) delta size
@@ -426,7 +429,10 @@ object Maintenance {
       nDeltaChunks
     }
 
-    // 4. append delta posting segments (both families) + docs store rows.
+    // 4-6. append the delta's posting segments (both families), recompute
+    //    the dictionaries, and LAST append its docs store rows — the diff
+    //    source, so completing it makes the whole update a no-op on re-run
+    //    ([[appendDelta]]; every write guarded by its own manifest stage).
     // SCALE-ADAPTIVE shuffle partitioning (not the full-build constant): a
     // changelog delta is usually a tiny fraction of the corpus, and pushing
     // its few thousand rows through the full build's partition count pays
@@ -442,43 +448,11 @@ object Maintenance {
     // cache the id-stamped delta: three consumers (two posting appends +
     // the docs append) would otherwise each re-run the sort + url-base join
     val withIds = withIds0.cache()
-    val allBuckets = 0 until stats0.nBuckets
-    // the two posting-family appends are independent jobs over the cached
-    // delta (separate outputs, separate guards) — overlap them (§2.6);
-    // each stage still commits its own manifest entry after its own job
-    IndexBuild.inParallel(
-      () => guarded("upd_postings_terms") {
-        IndexBuild.buildSegRows(spark, withIds.select($"doc_id", $"dl", $"terms"),
-            deltaCfg, stats0, grams = false, allBuckets)
-          .write.mode("append").partitionBy("bucket")
-          .parquet(IndexBuild.termPostingsDir(dir))
-        nDeltaChunks
-      },
-      () => guarded("upd_postings_grams") {
-        IndexBuild.buildSegRows(spark, withIds.select($"doc_id", $"grams"),
-            deltaCfg, stats0, grams = true, allBuckets)
-          .write.mode("append").partitionBy("bucket")
-          .parquet(IndexBuild.gramPostingsDir(dir))
-        nDeltaChunks
-      })
-    // 5. dictionaries: idempotent full recompute from segment metadata —
-    //    this batch's appended segments AND any pending deferred-add
-    //    contributions are all on disk by now
-    guarded("upd_dict") {
-      rebuildDictionaries(spark, dir)
-      Manifest.invalidateStage(dir, "dict_pending")
-      0L
-    }
-
-    // 6. LAST: append the delta to the docs store — the diff source — so
-    //    completing it makes the whole update a no-op on re-run
-    guarded("upd_docs") {
-      // align column order with the existing docs-store schema
-      val cols = spark.read.parquet(IndexBuild.docsDir(dir)).schema.fieldNames
-      withIds.select(cols.map(col).toIndexedSeq: _*)
-        .write.mode("append").partitionBy("docpart")
-        .parquet(IndexBuild.docsDir(dir))
-      nDeltaChunks
+    // the dictionary step is an idempotent full recompute from segment
+    // metadata — this batch's appended segments AND any pending
+    // deferred-add contributions are all on disk by then
+    appendDelta(spark, dir, withIds, nDeltaChunks, deltaCfg, stats0)(guarded) {
+      guarded("upd_dict") { rebuildDictionaries(spark, dir); 0L }
     }
     cleanup()
     withIds.unpersist()
@@ -516,44 +490,21 @@ object Maintenance {
       .agg(max($"chunk_seq")).head()
     val nextSeq = if (seqRow.isNullAt(0)) 0 else seqRow.getInt(0) + 1
     val gs = grams.distinct.sorted.toArray
-    val tfs = graft.core.Tokenizer.termFreqs(data)
-      .map { case (t, f) => IndexBuild.TermFreq(t, f) }
-    val dl = { var s = 0; tfs.foreach(s += _.f); s }
-    val part = {
-      val h = org.apache.spark.sql.catalyst.expressions.XxHash64Function
-        .hash(org.apache.spark.unsafe.types.UTF8String.fromString(url),
-          org.apache.spark.sql.types.StringType, 42L)
-      math.floorMod(h, cfg.docParts.toLong).toInt
-    }
+    val dl = graft.core.Tokenizer.docLength(data)
+    val part = IndexBuild.termBucket(url, stats0.docPartsOr(cfg.docParts))
     val byteLen = data.getBytes("UTF-8").length.toLong
-    val row = IndexBuild.ChunkRow(url, warcTs, "", part, nextSeq, nextSeq + 1,
+    val row = IndexBuild.ChunkMeta(url, warcTs, "", part, nextSeq, nextSeq + 1,
       0L, data.codePointCount(0, data.length).toLong, 0L, byteLen, dl,
-      gs.length, data, tfs, gs, explicit_grams = gs)
-    val delta = Seq(row).toDS().toDF()
-    val withId = delta.withColumn("doc_id", lit(docId))
+      gs.length, data, explicit_grams = gs)
+    val withId = Seq(row).toDS().toDF().withColumn("doc_id", lit(docId))
     // reserve the id first (same crash discipline as update)
     IndexBuild.writeDocStats(dir, stats0.copy(nDocs = stats0.nDocs + 1,
       sumDl = stats0.sumDl + dl, nextDocId = docId + 1))
-    val allBuckets = 0 until stats0.nBuckets
-    IndexBuild.buildSegRows(spark, withId.select($"doc_id", $"dl", $"terms"),
-        cfg, stats0, grams = false, allBuckets)
-      .write.mode("append").partitionBy("bucket")
-      .parquet(IndexBuild.termPostingsDir(dir))
-    IndexBuild.buildSegRows(spark, withId.select($"doc_id", $"grams"),
-        cfg, stats0, grams = true, allBuckets)
-      .write.mode("append").partitionBy("bucket")
-      .parquet(IndexBuild.gramPostingsDir(dir))
-    if (mergeDict) {
-      rebuildDictionaries(spark, dir)
-      Manifest.invalidateStage(dir, "dict_pending")
-    } else
-      Manifest.append(dir, Manifest.Entry("dict_pending", docId.toString,
+    appendDelta(spark, dir, withId, 1L, cfg, stats0)(_ => body => { body; () }) {
+      if (mergeDict) rebuildDictionaries(spark, dir)
+      else Manifest.append(dir, Manifest.Entry("dict_pending", docId.toString,
         1L, 0L, "", 0L))
-    // LAST: the docs store is the diff/live view — append commits the chunk
-    val cols = spark.read.parquet(IndexBuild.docsDir(dir)).schema.fieldNames
-    withId.select(cols.map(col).toIndexedSeq: _*)
-      .write.mode("append").partitionBy("docpart")
-      .parquet(IndexBuild.docsDir(dir))
+    }
     Manifest.append(dir, Manifest.Entry("chunk_add", docId.toString, 1L, 0L,
       "", 0L))
     autoMergeIfNeeded(spark, dir, cfg.autoMergeSegments)
@@ -570,7 +521,6 @@ object Maintenance {
     val pend = Manifest.completed(dir, "dict_pending").map(_.toLong)
     if (pend.isEmpty) return 0L
     rebuildDictionaries(spark, dir)
-    Manifest.invalidateStage(dir, "dict_pending")
     pend.size.toLong
   }
 
@@ -607,7 +557,8 @@ object Maintenance {
   }
 
   /** Recompute BOTH dictionaries from segment metadata (postings column
-    * pruned) and atomically swap them in. IDEMPOTENT — an additive
+    * pruned), atomically swap them in and clear the pending deferred-add
+    * markers they now include. IDEMPOTENT — an additive
     * delta merge (old + first_doc>=base) double-counts if a crash lands
     * between the rewrite and its bookkeeping and the merge re-runs; the
     * full recompute just repeats the identical rewrite. Exact across
@@ -617,25 +568,46 @@ object Maintenance {
     * scan side grows — and it is postings-column-pruned. df/cf keep
     * counting tombstoned postings until compact, like the reference.
     */
-  private def rebuildDictionaries(spark: SparkSession, dir: String): Unit =
-    // the two dictionary recomputes read different posting tables and swap
-    // different dirs — run their jobs concurrently (§2.6)
+  private def rebuildDictionaries(spark: SparkSession, dir: String): Unit = {
+    IndexBuild.writeDictionaries(spark, dir)(swapWrite)
+    Manifest.invalidateStage(dir, "dict_pending")
+  }
+
+  /** The append path shared by [[update]] and [[addChunk]], for an
+    * id-stamped delta of `rows` docs-store rows, in commit order:
+    *  1. its segments of both posting families — independent jobs over
+    *     the same delta with separate outputs, overlapped (§2.6);
+    *  2. `dict`, the caller's dictionary step;
+    *  3. LAST its docs-store rows: the docs store is the diff source and
+    *     the live view, so this append commits the delta.
+    * `step(stage)(write)` runs each write: [[update]] guards it with a
+    * manifest entry keyed by its delta (a killed update resumes without
+    * duplicating postings), [[addChunk]] runs it bare.
+    */
+  private def appendDelta(spark: SparkSession, dir: String, withIds: DataFrame,
+                          rows: Long, cfg: IndexBuild.Config,
+                          stats: IndexBuild.DocStats)(
+      step: String => (=> Long) => Unit)(dict: => Unit): Unit = {
+    def postings(grams: Boolean): Long = {
+      IndexBuild.buildSegRows(spark, withIds, cfg, stats, grams, 0 until stats.nBuckets)
+        .write.mode("append").partitionBy("bucket")
+        .parquet(if (grams) IndexBuild.gramPostingsDir(dir)
+                 else IndexBuild.termPostingsDir(dir))
+      rows
+    }
     IndexBuild.inParallel(
-      () => {
-        val seg = spark.read.parquet(IndexBuild.termPostingsDir(dir))
-          .groupBy(col("key").as("term"))
-          .agg(sum("n_docs").as("df"), sum("sum_tf").as("cf"),
-            max("max_tf").as("max_tf"))
-          .repartitionByRange(8, col("term")).sortWithinPartitions("term")
-        swapWrite(seg, IndexBuild.dictDir(dir))
-      },
-      () => {
-        val gseg = spark.read.parquet(IndexBuild.gramPostingsDir(dir))
-          .groupBy(substring(col("key"), 2, 10).cast("int").as("gram"))
-          .agg(sum("n_docs").as("df"))
-          .repartitionByRange(8, col("gram")).sortWithinPartitions("gram")
-        swapWrite(gseg, IndexBuild.gramDictDir(dir))
-      })
+      () => step("upd_postings_terms")(postings(grams = false)),
+      () => step("upd_postings_grams")(postings(grams = true)))
+    dict
+    step("upd_docs") {
+      // align column order with the existing docs-store schema
+      val cols = spark.read.parquet(IndexBuild.docsDir(dir)).schema.fieldNames
+      withIds.select(cols.map(col).toIndexedSeq: _*)
+        .write.mode("append").partitionBy("docpart")
+        .parquet(IndexBuild.docsDir(dir))
+      rows
+    }
+  }
 
   /** Coalesce multi-segment (key, range_id) groups left by incremental
     * appends into single segments with [[Postings.spliceShards]] — a

@@ -99,14 +99,15 @@ class Search(spark: SparkSession, dir: String,
   private def termBucket(t: String): Int =
     IndexBuild.termBucket(t, stats.nBuckets)
 
-  /** Size-gated driver cache of the whole term dictionary: below
-    * [[Search.MaxInlineDictTerms]] rows (a parquet-footer count, no data
-    * read) the (term, df) map is collected once per Search instance and
-    * every query's dictionary slice is a driver map probe instead of a
-    * Spark job — the same bounded-collect discipline as [[gramDict]] /
-    * [[tombstonedIds]]. Above the gate (web-scale vocabularies) the cache
-    * stays empty and [[dictLookup]] falls back to the pruned per-query
-    * scan. Bound to the index state at construction, like `stats`.
+  /** Size-gated driver cache of the whole term dictionary: at or below
+    * [[Search.MaxInlineDictTerms]] rows (one bounded `limit(gate + 1)`
+    * collect decides, see below) the (term, df) map is collected once per
+    * Search instance and every query's dictionary slice is a driver map
+    * probe instead of a Spark job — the same bounded-collect discipline as
+    * [[gramDict]] / [[tombstonedIds]]. Above the gate (web-scale
+    * vocabularies) the cache stays empty and [[dictLookup]] falls back to
+    * the pruned per-query scan. Bound to the index state at construction,
+    * like `stats`.
     */
   private lazy val inlineDict: Option[Map[String, Long]] = {
     // ONE bounded job, not count-then-collect: a LIMIT gate+1 collect
@@ -154,7 +155,7 @@ class Search(spark: SparkSession, dir: String,
     val path = if (gramsTable) IndexBuild.gramPostingsDir(dir)
                else IndexBuild.termPostingsDir(dir)
     val buckets =
-      if (gramsTable) keys.map(k => k.drop(1).toInt % stats.nBuckets).distinct
+      if (gramsTable) keys.map(k => IndexBuild.gramCode(k) % stats.nBuckets).distinct
       else keys.map(termBucket).distinct
     spark.read.parquet(path)
       .where($"bucket".isin(buckets: _*) && $"key".isin(keys: _*))
@@ -276,7 +277,7 @@ class Search(spark: SparkSession, dir: String,
   private def candidatesFromGrams(grams: Array[Int], df: Map[Int, Long]): DataFrame = {
     if (grams.isEmpty || grams.exists(g => !df.contains(g)))
       return spark.range(0).select($"id".as("doc_id"))
-    val keys = grams.map(g => s"g$g").toSeq
+    val keys = grams.map(IndexBuild.gramKey).toSeq
     val nKeys = keys.size
     perRangeKernel(segments(keys, gramsTable = true)) { (rows, live) =>
       val byKey = rows.toArray.groupBy(_.key)
@@ -299,7 +300,7 @@ class Search(spark: SparkSession, dir: String,
     val df = gramDictLookup(grams.toSeq)
     if (grams.isEmpty || grams.exists(g => !df.contains(g)))
       return spark.range(0).select($"id".as("doc_id"))
-    val keys = grams.map(g => s"g$g").toSeq
+    val keys = grams.map(IndexBuild.gramKey).toSeq
     liveFilter(exploded(keys, gramsTable = true))
       .groupBy($"doc_id").agg(count(lit(1)).as("hits"))
       .where($"hits" === grams.length)
@@ -317,10 +318,10 @@ class Search(spark: SparkSession, dir: String,
     if (grams.exists(g => !dfs.contains(g)))
       return spark.range(0).select($"id".as("doc_id"))
     val ordered = grams.sortBy(g => dfs(g)) // ascending df: seed smallest
-    var acc = liveFilter(exploded(Seq(s"g${ordered.head}"), gramsTable = true))
+    var acc = liveFilter(exploded(Seq(IndexBuild.gramKey(ordered.head)), gramsTable = true))
       .select("doc_id")
     ordered.tail.foreach { g =>
-      acc = acc.join(exploded(Seq(s"g$g"), gramsTable = true).select("doc_id"),
+      acc = acc.join(exploded(Seq(IndexBuild.gramKey(g)), gramsTable = true).select("doc_id"),
         Seq("doc_id"), "left_semi")
     }
     acc
@@ -339,7 +340,7 @@ class Search(spark: SparkSession, dir: String,
         lit(0.0).as("ratio"))
     val q = grams.length.toDouble
     val minR = minRatio
-    perRangeKernel(segments(grams.map(g => s"g$g").toSeq, gramsTable = true)) {
+    perRangeKernel(segments(grams.map(IndexBuild.gramKey).toSeq, gramsTable = true)) {
       (rows, live) =>
         val cursors = rows.toArray.groupBy(_.key).toArray.sortBy(_._1)
           .zipWithIndex.map { case ((_, segs), i) =>

@@ -549,4 +549,53 @@ class MaintenanceSpec extends SparkSuite {
         assert(Files.getLastModifiedTime(Paths.get(f)).toMillis == t, s"clean file rewritten: $f")
     }
   }
+
+  test("appends take bucket count, k1/b, chunk mode and docParts from docstats, not the caller's Config") {
+    val dir = tmpDir("maint-params")
+    val base = WebCorpus.generate(spark, 60, seed = 47L, partitions = 2)
+    IndexBuild.build(spark, base, dir, cfg) // 4 buckets, 4 docparts, lines
+    // a caller Config that disagrees with the index on every parameter an
+    // append uses
+    val other = cfg.copy(nBuckets = 8, k1 = 2.0, b = 0.3, docParts = 3,
+      chunkMode = IndexBuild.ChunkMode.Doc)
+    // words only the appends bring whose bucket under 8 buckets is >= 4:
+    // bucketed with the caller's count, their postings fell outside the
+    // index's buckets 0..3 and were dropped
+    val words = Seq("okapi", "quagga", "wallaby", "zebra", "ibex", "kudu",
+      "dingo", "tapir", "lemur", "marmot", "numbat", "quokka", "serval")
+      .filter(w => IndexBuild.termBucket(w, 8) >= 4)
+    val (w1, w2) = (words(0), words(1))
+    val url1 = "https://params.example/upd"
+    val url2 = "https://params.example/chunk"
+
+    val batch = Seq((url1, java.sql.Timestamp.valueOf("2023-01-01 00:00:00"),
+      Array.empty[Byte], s"the $w1 runs\nsecond line of the page\n", "en"))
+      .toDF("url", "warc_ts", "html", "text", "lang")
+    assert(Maintenance.update(spark, dir, batch, other, partialSnapshot = true) ==
+      (1L, 0L, 0L))
+    // chunked by the index's line chunker, not the caller's whole-doc mode
+    assert(Maintenance.liveDocs(spark, dir).where($"url" === url1).count() == 2)
+    val id2 = Maintenance.addChunk(spark, dir, url2, s"$w2 payload",
+      graft.core.Gram.gramsSorted(partial = false, Seq(w2)).toSeq,
+      java.sql.Timestamp.valueOf("2023-01-02 00:00:00"), other)
+
+    val s = new Search(spark, dir)
+    assert(s.search(Seq(w1)).select("url").as[String].collect().toSeq == Seq(url1))
+    assert(s.candidates(Seq(w2)).as[Long].collect().toSeq == Seq(id2))
+    assert(s.bm25TopK(Seq(w2), 10, conjunctive = false)
+      .collect().map(_.getLong(0)).toSeq == Seq(id2))
+    // block maxima encoded with the index's k1/b: WAND stays exact
+    for (q <- Seq(Seq(w1), Seq(w1, "the"), Seq("the", "of", "second"))) {
+      val wand = s.bm25TopK(q, 10, conjunctive = false)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      val brute = s.bm25BruteForce(q, 10, conjunctive = false)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(wand.nonEmpty && wand == brute, s"query $q")
+    }
+    // both rows sit in the docpart the index prunes to, so a delete finds them
+    Maintenance.delete(spark, dir, Seq(url1, url2))
+    val s2 = new Search(spark, dir)
+    assert(s2.search(Seq(w1)).count() == 0)
+    assert(s2.candidates(Seq(w2)).count() == 0)
+  }
 }
