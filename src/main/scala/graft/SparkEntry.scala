@@ -208,7 +208,7 @@ object SparkEntry {
     // ---- engine-backed: real index + candidates/verify/fuzzy/BM25-WAND
     "q10_candidates" -> ((s, d) => {
       val e = engine(s, d)
-      val docs = s.read.parquet(IndexBuild.docsDir(indexFor(s, d)))
+      val docs = IndexBuild.readTable(s, indexFor(s, d), IndexBuild.DocsTable)
       e.candidates(Seq("order", "batch")).join(docs.select("doc_id", "url"), "doc_id")
         .select(urlToDocId.as("doc_id")).orderBy("doc_id")
     }),
@@ -220,7 +220,7 @@ object SparkEntry {
         .select(urlToDocId.as("doc_id")).orderBy("doc_id")),
     "q13_fuzzy" -> ((s, d) => {
       val e = engine(s, d)
-      val docs = s.read.parquet(IndexBuild.docsDir(indexFor(s, d)))
+      val docs = IndexBuild.readTable(s, indexFor(s, d), IndexBuild.DocsTable)
       e.fuzzy(FuzzyArgs, 0.5).join(docs.select("doc_id", "url"), "doc_id")
         .select(urlToDocId.as("doc_id"), col("hits").cast("long"),
           expr(s"CAST((hits * 1000) div ${FuzzyGrams.length} AS long)").as("permille"))
@@ -357,7 +357,7 @@ object SparkEntry {
     // chunkMode=org over the synthesized org corpus; oracle recomputes the
     // template's element boundaries analytically
     "q30_org_chunks" -> ((s, d) =>
-      s.read.parquet(IndexBuild.docsDir(orgIndexFor(s, d)))
+      IndexBuild.readTable(s, orgIndexFor(s, d), IndexBuild.DocsTable)
         .select(urlToDocId.as("doc_id"), col("chunk_seq").cast("long"),
           col("line").cast("long"), col("rune_off"), col("rune_len"),
           col("byte_start"), col("byte_len"), col("chunk_text"))
@@ -365,7 +365,7 @@ object SparkEntry {
     // ---- explicit-gram candidates (reference search -candidates -grams)
     "q31_candidates_by_grams" -> ((s, d) => {
       val e = engine(s, d)
-      val docs = s.read.parquet(IndexBuild.docsDir(indexFor(s, d)))
+      val docs = IndexBuild.readTable(s, indexFor(s, d), IndexBuild.DocsTable)
       e.candidatesByGrams(CandGramCodes)
         .join(docs.select("doc_id", "url"), "doc_id")
         .select(urlToDocId.as("doc_id")).orderBy("doc_id")

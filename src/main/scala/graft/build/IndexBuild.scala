@@ -1,7 +1,8 @@
 package graft.build
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.core.{Chunker, Gram, Postings, Tokenizer}
 import java.sql.Timestamp
 
@@ -133,12 +134,54 @@ object IndexBuild {
                               nGramBuckets: Int, resumedChunks: Int,
                               resumedTermBuckets: Int)
 
-  def chunksDir(dir: String) = s"$dir/chunks"
-  def docsDir(dir: String) = s"$dir/docs"
-  def termPostingsDir(dir: String) = s"$dir/postings_terms"
-  def gramPostingsDir(dir: String) = s"$dir/postings_grams"
-  def dictDir(dir: String) = s"$dir/dictionary"
-  def gramDictDir(dir: String) = s"$dir/gram_dict"
+  /** An engine-owned parquet table: its directory under the index dir and
+    * the schema its writer produces, in the order a schema-inferring read
+    * returns it (data columns in write order, the partition column last).
+    * An `optional` table exists only once something is written to it.
+    */
+  final case class Table(name: String, schema: StructType, optional: Boolean = false) {
+    def path(dir: String): String = s"$dir/$name"
+  }
+
+  /** `T`'s encoder schema, plus `extra`, as a read returns it: every field
+    * nullable and the partition column `part` last.
+    */
+  private def readSchema[T <: Product : scala.reflect.runtime.universe.TypeTag](
+      part: String, extra: StructField*): StructType = {
+    val s = GraftBridge.asNullable(StructType(Encoders.product[T].schema ++ extra))
+    StructType(s.filterNot(_.name == part) :+ s(part))
+  }
+
+  val ChunksTable = Table("chunks", readSchema[ChunkMeta]("docpart"))
+  val DocsTable = Table("docs",
+    readSchema[ChunkMeta]("docpart", StructField("doc_id", LongType)))
+  val TermPostingsTable = Table("postings_terms", readSchema[SegRow]("bucket"))
+  val GramPostingsTable = TermPostingsTable.copy(name = "postings_grams")
+  /** Written by [[writeDictionaries]]. */
+  val DictTable = Table("dictionary",
+    StructType.fromDDL("term STRING, df BIGINT, cf BIGINT, max_tf INT"))
+  val GramDictTable = Table("gram_dict", StructType.fromDDL("gram INT, df BIGINT"))
+
+  def chunksDir(dir: String) = ChunksTable.path(dir)
+  def docsDir(dir: String) = DocsTable.path(dir)
+  def termPostingsDir(dir: String) = TermPostingsTable.path(dir)
+  def gramPostingsDir(dir: String) = GramPostingsTable.path(dir)
+  def dictDir(dir: String) = DictTable.path(dir)
+  def gramDictDir(dir: String) = GramDictTable.path(dir)
+
+  /** The one reader of every engine-owned table. It reads with the declared
+    * schema, so no read runs a schema-inference job, and it lists the
+    * table's files once: a frame keeps that file list for its lifetime. An
+    * absent optional table reads as a typed empty frame; an absent required
+    * one fails.
+    */
+  def readTable(spark: SparkSession, dir: String, table: Table): DataFrame =
+    if (table.optional && !java.nio.file.Files.exists(java.nio.file.Paths.get(table.path(dir))))
+      emptyTable(spark, table)
+    else spark.read.schema(table.schema).parquet(table.path(dir))
+
+  def emptyTable(spark: SparkSession, table: Table): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), table.schema)
 
   /** Mode dispatch shared by [[chunkDoc]] and [[chunkDocMeta]] — one place
     * decides what a "chunk" is.
@@ -286,7 +329,7 @@ object IndexBuild {
     // tiny column). Each docpart's manifest entry records its own true max
     // — the manifest is the durable audit record, and a batch-global max
     // would overstate parts whose real watermark is lower.
-    val stats = spark.read.parquet(chunksDir(dir))
+    val stats = readTable(spark, dir, ChunksTable)
       .where(col("docpart").isin(missing: _*))
       .groupBy("docpart").agg(count(lit(1)).as("rows"),
         max($"warc_ts").cast("string").as("wm"))
@@ -390,7 +433,7 @@ object IndexBuild {
     import spark.implicits._
     if (Manifest.completed(dir, "ids")("all")) return readDocStats(dir)
     val t0 = System.nanoTime()
-    val chunks = spark.read.parquet(chunksDir(dir))
+    val chunks = readTable(spark, dir, ChunksTable)
     val (withIds, cleanup) = assignIds(spark, chunks, 0L, cfg)
     // doc stats ride along with the write (Observation): no extra pass.
     // docpart partitioning makes the docs store the maintenance diff
@@ -692,18 +735,18 @@ object IndexBuild {
   private[graft] def stagePostings(spark: SparkSession, dir: String, cfg: Config,
                             stats: DocStats, grams: Boolean): Int = {
     import spark.implicits._
-    val stage = if (grams) "postings_grams" else "postings_terms"
-    val outDir = if (grams) gramPostingsDir(dir) else termPostingsDir(dir)
+    val table = if (grams) GramPostingsTable else TermPostingsTable
+    val stage = table.name
     val done = Manifest.completed(dir, stage)
     val missing = (0 until stats.nBuckets).filterNot(b => done(b.toString))
     if (missing.isEmpty) return stats.nBuckets
     val t0 = System.nanoTime()
-    val segRows = buildSegRows(spark, spark.read.parquet(docsDir(dir)), cfg,
+    val segRows = buildSegRows(spark, readTable(spark, dir, DocsTable), cfg,
       stats, grams, missing)
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    segRows.write.mode("overwrite").partitionBy("bucket").parquet(outDir)
+    segRows.write.mode("overwrite").partitionBy("bucket").parquet(table.path(dir))
     val wallMs = (System.nanoTime() - t0) / 1000000
-    val m = spark.read.parquet(outDir).where(col("bucket").isin(missing: _*))
+    val m = readTable(spark, dir, table).where(col("bucket").isin(missing: _*))
       .groupBy("bucket")
       .agg(count(lit(1)).as("rows"), sum($"n_bytes".cast("long")).as("bytes"))
       .collect().map(r => r.getInt(0) -> (r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2))).toMap
@@ -737,16 +780,16 @@ object IndexBuild {
       write: (DataFrame, String) => Unit): Long = {
     import spark.implicits._
     // (name, df, extra...) per key of one posting table, sorted by key
-    def derive(postings: String, key: Column, name: String, extra: Column*) =
-      spark.read.parquet(postings).groupBy(key.as(name))
+    def derive(postings: Table, key: Column, name: String, extra: Column*) =
+      readTable(spark, dir, postings).groupBy(key.as(name))
         .agg(sum($"n_docs").as("df"), extra: _*)
         .repartitionByRange(8, col(name)).sortWithinPartitions(name)
     val obs = org.apache.spark.sql.Observation()
     inParallel(
-      () => write(derive(termPostingsDir(dir), $"key", "term",
+      () => write(derive(TermPostingsTable, $"key", "term",
           sum($"sum_tf").as("cf"), max($"max_tf").as("max_tf"))
         .observe(obs, count(lit(1)).as("n")), dictDir(dir)),
-      () => write(derive(gramPostingsDir(dir), gramCode($"key"), "gram"),
+      () => write(derive(GramPostingsTable, gramCode($"key"), "gram"),
         gramDictDir(dir)))
     obs.get("n").asInstanceOf[Long]
   }

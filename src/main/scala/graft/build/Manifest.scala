@@ -16,9 +16,10 @@ import scala.jdk.CollectionConverters._
   * No Iceberg jar ships in /opt/spark/jars, so parquet dirs + this manifest
   * stand in for Iceberg tables. The swap is confined to four touch points,
   * none of which change an operator's logical plan:
-  *  1. every `spark.read.parquet(dir)` → `spark.table("graft.<name>")`
-  *     (catalog tables for docs / postings_terms / postings_grams /
-  *     dictionary / gram_dict / tombstones);
+  *  1. [[IndexBuild.readTable]], the one reader of every engine-owned
+  *     table, → `spark.table("graft.<name>")` (catalog tables for docs /
+  *     postings_terms / postings_grams / dictionary / gram_dict /
+  *     tombstones / empty_groups);
   *  2. every `write.mode("append"/"overwrite").partitionBy(...).parquet` →
   *     `writeTo(...).append()` / `overwritePartitions()` — the atomic-swap
   *     dance in [[graft.maint.Maintenance]] (tmp dir + move) collapses into
@@ -51,7 +52,7 @@ object Manifest {
   }
 
   /** Completed units for a stage (only lines with status complete count). */
-  def completed(indexDir: String, stage: String): Set[String] = {
+  def completed(indexDir: String, stage: String): Set[String] = this.synchronized {
     val p = path(indexDir)
     if (!Files.exists(p)) Set.empty
     else Files.readAllLines(p).asScala.iterator
@@ -63,13 +64,16 @@ object Manifest {
       }.toSet
   }
 
-  def entries(indexDir: String): Seq[String] = {
+  def entries(indexDir: String): Seq[String] = this.synchronized {
     val p = path(indexDir)
     if (!Files.exists(p)) Seq.empty else Files.readAllLines(p).asScala.toSeq
   }
 
-  /** Drop all entries of a stage (used by maintenance rebuild). */
-  def invalidateStage(indexDir: String, stage: String): Unit = {
+  /** Drop all entries of a stage (used by maintenance rebuild). Reads and
+    * rewrites take [[append]]'s lock, so a rewrite never races a stage
+    * committing from another driver thread ([[IndexBuild.inParallel]]).
+    */
+  def invalidateStage(indexDir: String, stage: String): Unit = this.synchronized {
     val p = path(indexDir)
     if (Files.exists(p)) {
       val keep = Files.readAllLines(p).asScala

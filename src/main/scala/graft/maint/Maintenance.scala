@@ -2,7 +2,9 @@ package graft.maint
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.build.{IndexBuild, Manifest}
+import graft.build.IndexBuild.{DocsTable, Table, readTable}
 import graft.core.Postings
 
 /** Index maintenance — the Spark-native rebuild of the reference's
@@ -39,8 +41,16 @@ import graft.core.Postings
   */
 object Maintenance {
 
-  private def tombstonesDir(dir: String) = s"$dir/tombstones"
-  private def emptyGroupsDir(dir: String) = s"$dir/empty_groups"
+  /** Tombstone rows (url, warc_ts, doc_id): one row per doc of every stale
+    * VERSION of a group. Doc ids are recorded at tombstone time so queries
+    * never re-scan the docs store to resolve them.
+    */
+  private[graft] val TombstonesTable = Table("tombstones",
+    StructType.fromDDL("url STRING, warc_ts TIMESTAMP, doc_id BIGINT"), optional = true)
+  /** [[compact]]'s stash of tombstones to re-apply after a resumed rebuild. */
+  private[graft] val StashTable = TombstonesTable.copy(name = "tombstones_reapply")
+  private[graft] val EmptyGroupsTable = Table("empty_groups",
+    StructType.fromDDL("url STRING"), optional = true)
 
   /** Stage names appended by update(); invalidated on compact. upd_docs is
     * LAST: the docs store is the diff source, so appending it commits the
@@ -58,19 +68,8 @@ object Maintenance {
     */
   final val UpdateChunksPerPartition = 12000L
 
-  /** Tombstone rows (url, warc_ts, doc_id): one row per doc of every stale
-    * VERSION of a group. Doc ids are recorded at tombstone time so queries
-    * never re-scan the docs store to resolve them.
-    */
-  def tombstones(spark: SparkSession, dir: String): DataFrame = {
-    val p = java.nio.file.Paths.get(tombstonesDir(dir))
-    if (java.nio.file.Files.exists(p)) spark.read.parquet(p.toString)
-    else {
-      import spark.implicits._
-      Seq.empty[(String, java.sql.Timestamp, Long)]
-        .toDF("url", "warc_ts", "doc_id")
-    }
-  }
+  def tombstones(spark: SparkSession, dir: String): DataFrame =
+    readTable(spark, dir, TombstonesTable)
 
   /** M1: tombstone groups by url (reference cmdDelete). */
   def delete(spark: SparkSession, dir: String, urls: Seq[String]): Unit = {
@@ -85,21 +84,21 @@ object Maintenance {
     * by docParts values.
     */
   private[graft] def docsOfUrls(spark: SparkSession, dir: String,
+                                urls: DataFrame): DataFrame =
+    docsOfUrls(readTable(spark, dir, DocsTable),
+      IndexBuild.readDocStats(dir).docParts, urls)
+
+  /** [[docsOfUrls]] over an already-resolved docs relation. */
+  private[graft] def docsOfUrls(docs: DataFrame, docParts: Int,
                                 urls: DataFrame): DataFrame = {
-    import spark.implicits._
-    val dp = IndexBuild.readDocStats(dir).docParts
     val u = urls.select("url").distinct()
     // docParts unknown (legacy docstats.json): pruning with a guessed
     // modulus would select partitions the urls are NOT in and silently
     // match nothing — fall back to the unpruned join
-    if (dp <= 0)
-      return spark.read.parquet(IndexBuild.docsDir(dir)).join(u, Seq("url"))
-    val up = u.withColumn("docpart",
-      pmod(xxhash64(col("url")), lit(dp)).cast("int"))
-    val parts = up.select($"docpart").distinct().as[Int].collect()
-    spark.read.parquet(IndexBuild.docsDir(dir))
-      .where(col("docpart").isin(parts.toSeq: _*))
-      .join(u, Seq("url"))
+    if (docParts <= 0) return docs.join(u, Seq("url"))
+    val parts = u.select(pmod(xxhash64(col("url")), lit(docParts)).cast("int"))
+      .distinct().collect().map(_.getInt(0))
+    docs.where(col("docpart").isin(parts.toSeq: _*)).join(u, Seq("url"))
   }
 
   /** Append tombstone rows for all not-yet-tombstoned doc rows of `urls`.
@@ -123,14 +122,14 @@ object Maintenance {
       .select(col("url"), col("warc_ts"), col("doc_id"))
       .cache()
     val n = rows.count()
-    if (n > 0) rows.write.mode("append").parquet(tombstonesDir(dir))
+    if (n > 0) rows.write.mode("append").parquet(TombstonesTable.path(dir))
     rows.unpersist()
     n
   }
 
   /** Query-side live view (validity check P5): docs minus tombstoned ids. */
   def liveDocs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(IndexBuild.docsDir(dir))
+    readTable(spark, dir, DocsTable)
       .join(tombstones(spark, dir).select("doc_id"), Seq("doc_id"), "left_anti")
 
   /** S8 `empty`: register chunk-less groups, skipping urls that already
@@ -139,27 +138,19 @@ object Maintenance {
     */
   def emptyGroups(spark: SparkSession, dir: String, urls: Seq[String]): Long = {
     import spark.implicits._
-    val p = java.nio.file.Paths.get(emptyGroupsDir(dir))
-    val existing =
-      if (java.nio.file.Files.exists(p)) spark.read.parquet(p.toString)
-      else Seq.empty[String].toDF("url")
-    val docsUrls = spark.read.parquet(IndexBuild.docsDir(dir)).select("url").distinct()
+    val docsUrls = readTable(spark, dir, DocsTable).select("url").distinct()
     val toAdd = urls.toDF("url").distinct()
-      .join(existing, Seq("url"), "left_anti")
+      .join(emptyGroupUrls(spark, dir), Seq("url"), "left_anti")
       .join(docsUrls, Seq("url"), "left_anti")
       .cache()
     val n = toAdd.count()
-    if (n > 0) toAdd.write.mode("append").parquet(emptyGroupsDir(dir))
+    if (n > 0) toAdd.write.mode("append").parquet(EmptyGroupsTable.path(dir))
     toAdd.unpersist()
     n
   }
 
-  def emptyGroupUrls(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val p = java.nio.file.Paths.get(emptyGroupsDir(dir))
-    if (java.nio.file.Files.exists(p)) spark.read.parquet(p.toString)
-    else Seq.empty[String].toDF("url")
-  }
+  def emptyGroupUrls(spark: SparkSession, dir: String): DataFrame =
+    readTable(spark, dir, EmptyGroupsTable)
 
   /** M2: reclaim space — rewrite the corpus without tombstoned
     * (url, warc_ts) versions (docs store minus doc_id, back into the
@@ -190,7 +181,7 @@ object Maintenance {
     if (!pending) {
       val t = tombstones(spark, dir)
       if (t.isEmpty) return
-      val docs = spark.read.parquet(IndexBuild.docsDir(dir))
+      val docs = readTable(spark, dir, DocsTable)
       // pure projection: the scratch carries no token arrays (posting stages
       // re-derive them from chunk text; explicit grams are data and ride in
       // their own column), so compaction is an anti-join + rewrite
@@ -217,7 +208,7 @@ object Maintenance {
     // the rebuild: pre-compact tombstones' versions no longer exist in the
     // compacted store (re-apply is a no-op for them), late deletes
     // re-resolve their doc ids against the fresh id space.
-    val stashP = fs.resolve("tombstones_reapply")
+    val stashP = java.nio.file.Paths.get(StashTable.path(dir))
     def stashOrDropTombstones(): Unit =
       if (pending && java.nio.file.Files.exists(fs.resolve("tombstones"))) {
         if (!java.nio.file.Files.exists(stashP))
@@ -256,11 +247,11 @@ object Maintenance {
     // rebuildDerived resume the remaining stages bucket-level.
     rebuildDerived(spark, dir, cfg)
     if (java.nio.file.Files.exists(stashP)) {
-      val stash = spark.read.parquet(stashP.toString)
+      val stash = readTable(spark, dir, StashTable)
       val rows = docsOfUrls(spark, dir, stash.select("url"))
         .join(stash.select("url", "warc_ts").distinct(), Seq("url", "warc_ts"))
         .select(col("url"), col("warc_ts"), col("doc_id"))
-      if (!rows.isEmpty) rows.write.mode("append").parquet(tombstonesDir(dir))
+      if (!rows.isEmpty) rows.write.mode("append").parquet(TombstonesTable.path(dir))
       org.apache.commons.io.FileUtils.deleteQuietly(stashP.toFile)
     }
     Manifest.invalidateStage(dir, "compacting")
@@ -296,7 +287,7 @@ object Maintenance {
     val tomb = tombstones(spark, dir).select($"url", $"warc_ts").distinct()
     val chunkVersions =
       if (!partialSnapshot)
-        spark.read.parquet(IndexBuild.docsDir(dir)).select($"url", $"warc_ts")
+        readTable(spark, dir, DocsTable).select($"url", $"warc_ts")
       else
         // changelog batch: only the batch urls' docparts can contain them —
         // one shared docpart-pruned scan (docsOfUrls, which also carries
@@ -600,9 +591,8 @@ object Maintenance {
       () => step("upd_postings_grams")(postings(grams = true)))
     dict
     step("upd_docs") {
-      // align column order with the existing docs-store schema
-      val cols = spark.read.parquet(IndexBuild.docsDir(dir)).schema.fieldNames
-      withIds.select(cols.map(col).toIndexedSeq: _*)
+      // align column order with the docs-store schema
+      withIds.select(DocsTable.schema.fieldNames.map(col).toIndexedSeq: _*)
         .write.mode("append").partitionBy("docpart")
         .parquet(IndexBuild.docsDir(dir))
       rows
@@ -620,14 +610,16 @@ object Maintenance {
   def mergeSegments(spark: SparkSession, dir: String,
                     gramsTable: Boolean): Long = {
     import spark.implicits._
-    val path = if (gramsTable) IndexBuild.gramPostingsDir(dir)
-               else IndexBuild.termPostingsDir(dir)
+    val table = if (gramsTable) IndexBuild.GramPostingsTable
+                else IndexBuild.TermPostingsTable
+    val path = table.path(dir)
+    val all = readTable(spark, dir, table)
     // metadata-only scan (postings column pruned) to find affected buckets
-    val multi = spark.read.parquet(path)
+    val multi = all
       .groupBy($"bucket", $"key", $"range_id").agg(count(lit(1)).as("n"))
       .where($"n" > 1).select($"bucket").distinct().as[Int].collect().sorted
     if (multi.isEmpty) return 0L
-    val seg = spark.read.parquet(path).where($"bucket".isin(multi.toSeq: _*))
+    val seg = all.where($"bucket".isin(multi.toSeq: _*))
       .select($"bucket", $"key", $"range_id", $"first_doc", $"last_doc",
         $"n_docs", $"sum_tf", $"max_tf", $"n_bytes", $"postings")
       .as[IndexBuild.SegRow]
@@ -659,15 +651,8 @@ object Maintenance {
                              cfg: IndexBuild.Config): Unit = {
     // re-run the build with chunks complete: only derived stages execute.
     // Feed an empty docs frame — the chunks stage is already satisfied.
-    // Schema source: the chunk scratch, or the docs store when resuming a
-    // mid-rebuild crash (cleanup already consumed the scratch; both carry
-    // the chunk columns).
-    val chunksP = java.nio.file.Paths.get(IndexBuild.chunksDir(dir))
-    val srcDir = if (java.nio.file.Files.exists(chunksP))
-      IndexBuild.chunksDir(dir) else IndexBuild.docsDir(dir)
-    val emptyDocs = spark.read.parquet(srcDir)
+    val emptyDocs = IndexBuild.emptyTable(spark, IndexBuild.ChunksTable)
       .select(col("url"), col("warc_ts"), col("lang"), col("chunk_text").as("text"))
-      .limit(0)
     IndexBuild.build(spark, emptyDocs, dir, cfg)
   }
 }

@@ -176,8 +176,9 @@ object Multimodal {
         val size = bb.getInt(off + 4)
         // untrusted-bytes guard: a negative or over-length chunk size would
         // otherwise make the walk increment zero/negative and loop forever
-        // (decode() is the adversarial-input seam — fail fast instead)
-        require(size >= 0 && off + 8 + size <= p.length,
+        // (decode() is the adversarial-input seam — fail fast instead);
+        // the bound is in Long so a size near Int.MaxValue cannot wrap past it
+        require(size >= 0 && off + 8L + size <= p.length,
           s"bad RIFF chunk '$id' at $off: size $size exceeds payload ${p.length}")
         if (id == "fmt ") {
           channels = bb.getShort(off + 10) & 0xFFFF

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.build.IndexBuild
+import graft.build.IndexBuild.readTable
 import graft.core.{Gram, Postings, Tokenizer}
 
 /** Query engine over a built index directory — the Spark-native rebuild of
@@ -22,6 +23,14 @@ import graft.core.{Gram, Postings, Tokenizer}
   *  - BM25 groups the query terms' segments by doc range (range_id) so the
   *    WAND kernel runs document-partitioned; only per-range top-k rows and
   *    the final global TakeOrdered cross the wire.
+  *
+  * Snapshot contract: a Search pins the index as it is at construction —
+  * `stats` and the file lists of the docs, postings, dictionary and
+  * tombstone tables are fixed then, and every query filters those
+  * relations (reference analog: one read transaction per search,
+  * fts-lmdb.go:1691-1721). Open a new Search after any write. A Search
+  * opened before a `compact`, `mergeSegments` or dictionary rewrite may
+  * hit files those operations deleted.
   */
 class Search(spark: SparkSession, dir: String,
              /** see [[MaxInlineCandidates]]; tests inject 0 to force the
@@ -35,14 +44,17 @@ class Search(spark: SparkSession, dir: String,
   import Search.Seg
 
   val stats: IndexBuild.DocStats = IndexBuild.readDocStats(dir)
+  @transient private val docs = readTable(spark, dir, IndexBuild.DocsTable)
+  @transient private val termPostings = readTable(spark, dir, IndexBuild.TermPostingsTable)
+  @transient private val gramPostings = readTable(spark, dir, IndexBuild.GramPostingsTable)
+  @transient private val dictionary = readTable(spark, dir, IndexBuild.DictTable)
+  @transient private val gramDictionary = readTable(spark, dir, IndexBuild.GramDictTable)
+  @transient private val tombstones = graft.maint.Maintenance.tombstones(spark, dir)
 
   /** Tombstone cardinality — a parquet-footer count over the small
     * tombstone table (never the docs store).
     */
-  lazy val nTombstones: Long = {
-    val t = graft.maint.Maintenance.tombstones(spark, dir)
-    if (t.isEmpty) 0L else t.count()
-  }
+  lazy val nTombstones: Long = if (tombstones.isEmpty) 0L else tombstones.count()
 
   /** Tombstoned doc ids (reference validity filter P5) as an exact driver
     * set — only materialized below [[Search.MaxInlineTombstones]]; a
@@ -52,8 +64,7 @@ class Search(spark: SparkSession, dir: String,
     */
   lazy val tombstonedIds: Set[Long] = {
     if (nTombstones == 0) Set.empty[Long]
-    else graft.maint.Maintenance.tombstones(spark, dir)
-      .select($"doc_id").as[Long].collect().toSet
+    else tombstones.select($"doc_id").as[Long].collect().toSet
   }
 
   private def liveFilter(df: DataFrame): DataFrame =
@@ -62,8 +73,7 @@ class Search(spark: SparkSession, dir: String,
       val ids = tombstonedIds
       df.where(!$"doc_id".isInCollection(ids))
     } else
-      df.join(graft.maint.Maintenance.tombstones(spark, dir).select("doc_id"),
-        Seq("doc_id"), "left_anti")
+      df.join(tombstones.select("doc_id"), Seq("doc_id"), "left_anti")
 
   /** Run a per-range posting kernel with the right tombstone plan: below
     * the gate, an exact dead set travels in the closure; above it, the
@@ -80,8 +90,7 @@ class Search(spark: SparkSession, dir: String,
       segs.groupByKey(_.range_id).flatMapGroups((_, it) => kernel(it, live))
     } else {
       val rs = stats.rangeSize
-      val deadByRange = graft.maint.Maintenance.tombstones(spark, dir)
-        .select($"doc_id").as[Long]
+      val deadByRange = tombstones.select($"doc_id").as[Long]
         .map(id => ((id / rs).toInt, id))
         .groupByKey(_._1)
       segs.groupByKey(_.range_id).cogroup(deadByRange) { (_, segIt, deadIt) =>
@@ -115,8 +124,7 @@ class Search(spark: SparkSession, dir: String,
     // limit is never reached) and exactly gate+1 rows — scanned
     // incrementally, bounded driver memory — when it is above, in which
     // case the probe is discarded and the per-query pruned scan stands.
-    val probe = spark.read.parquet(IndexBuild.dictDir(dir))
-      .select($"term", $"df".cast("long"))
+    val probe = dictionary.select($"term", $"df".cast("long"))
       .limit(Search.MaxInlineDictTerms.toInt + 1).collect()
     if (probe.length > Search.MaxInlineDictTerms) None
     else Some(probe.map(r => r.getString(0) -> r.getLong(1)).toMap)
@@ -130,8 +138,7 @@ class Search(spark: SparkSession, dir: String,
     inlineDict match {
       case Some(m) => terms.iterator.flatMap(t => m.get(t).map(t -> _)).toMap
       case None =>
-        spark.read.parquet(IndexBuild.dictDir(dir))
-          .where($"term".isin(terms: _*))
+        dictionary.where($"term".isin(terms: _*))
           .select($"term", $"df".cast("long"))
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     }
@@ -142,8 +149,7 @@ class Search(spark: SparkSession, dir: String,
     * job per Search instance replaces a dictionary-scan job per query.
     */
   private lazy val gramDict: Map[Int, Long] =
-    spark.read.parquet(IndexBuild.gramDictDir(dir))
-      .select($"gram", $"df".cast("long"))
+    gramDictionary.select($"gram", $"df".cast("long"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
 
   def gramDictLookup(grams: Seq[Int]): Map[Int, Long] =
@@ -152,12 +158,10 @@ class Search(spark: SparkSession, dir: String,
 
   /** Pruned scan of a postings table for the given keys. */
   private def segments(keys: Seq[String], gramsTable: Boolean): org.apache.spark.sql.Dataset[Seg] = {
-    val path = if (gramsTable) IndexBuild.gramPostingsDir(dir)
-               else IndexBuild.termPostingsDir(dir)
     val buckets =
       if (gramsTable) keys.map(k => IndexBuild.gramCode(k) % stats.nBuckets).distinct
       else keys.map(termBucket).distinct
-    spark.read.parquet(path)
+    (if (gramsTable) gramPostings else termPostings)
       .where($"bucket".isin(buckets: _*) && $"key".isin(keys: _*))
       .select($"key", $"range_id", $"first_doc", $"postings")
       .as[Seg]
@@ -224,8 +228,7 @@ class Search(spark: SparkSession, dir: String,
     // same live view as the WAND kernels (size-gated via liveFilter).
     // Term freqs are re-derived from the chunk text (the docs store keeps
     // no token arrays) — deterministic, identical to the indexed postings.
-    val rows = liveFilter(spark.read.parquet(IndexBuild.docsDir(dir))
-        .select($"doc_id", $"dl", $"chunk_text"))
+    val rows = liveFilter(docs.select($"doc_id", $"dl", $"chunk_text"))
       .as[(Long, Int, String)]
       .flatMap { case (docId, dl, text) =>
         {
@@ -377,7 +380,6 @@ class Search(spark: SparkSession, dir: String,
                     * chunkInfo start field) for display rendering; off by
                     * default so the relational output schema is stable */
                   includePosition: Boolean = false): DataFrame = {
-    val docs = spark.read.parquet(IndexBuild.docsDir(dir))
     val hydrated0 = docs.join(fuzzy(args, minRatio).hint("SHUFFLE_HASH"),
       Seq("doc_id"))
     // the reference's -limit caps results PER GROUP at chunk fetch, BEFORE
@@ -440,7 +442,6 @@ class Search(spark: SparkSession, dir: String,
   def search(args: Seq[String], partial: Boolean = false,
              limitPerGroup: Int = Int.MaxValue,
              filterRegex: Option[String] = None): DataFrame = {
-    val docs = spark.read.parquet(IndexBuild.docsDir(dir))
     // |candidates| <= min gram df, so the broadcast dictionary decides the
     // hydration plan BEFORE any kernel runs: small bound -> collect the ids
     // and push them into the docs scan; huge bound -> shuffle join, ids
@@ -503,9 +504,8 @@ class Search(spark: SparkSession, dir: String,
     * corpus is scanned once, never shuffled.
     */
   def badFiles(urls: DataFrame, currentDocs: DataFrame): DataFrame = {
-    val indexed = graft.maint.Maintenance.docsOfUrls(spark, dir, urls)
-      .join(graft.maint.Maintenance.tombstones(spark, dir).select("doc_id"),
-        Seq("doc_id"), "left_anti")
+    val indexed = graft.maint.Maintenance.docsOfUrls(docs, stats.docParts, urls)
+      .join(tombstones.select("doc_id"), Seq("doc_id"), "left_anti")
       .groupBy($"url").agg(max($"warc_ts").as("indexed_ts"))
     // one row per url even if the current table carries multiple versions
     // (changelog-style): the NEWEST version is "the file's mtime" — a url
@@ -562,11 +562,11 @@ class Search(spark: SparkSession, dir: String,
       // frame is still live. Note the write also means searchFresh's
       // above-gate shape requires a WRITABLE index dir — the documented
       // trade-off for not pinning cached blocks.
-      val scratch = s"$dir/badurls_scratch_${Search.scratchToken}_" +
-        s"${Search.scratchCounter.incrementAndGet()}"
-      bad.select("url").write.mode("overwrite").parquet(scratch)
+      val scratch = IndexBuild.Table(s"badurls_scratch_${Search.scratchToken}_" +
+        s"${Search.scratchCounter.incrementAndGet()}", Search.UrlSchema)
+      bad.select("url").write.mode("overwrite").parquet(scratch.path(dir))
       bad.unpersist()
-      hits.join(spark.read.parquet(scratch), Seq("url"), "left_anti")
+      hits.join(readTable(spark, dir, scratch), Seq("url"), "left_anti")
     }
   }
 
@@ -576,7 +576,6 @@ class Search(spark: SparkSession, dir: String,
     * across chunks), gram-prefiltered per arg.
     */
   def searchFiles(args: Seq[String], partial: Boolean = false): DataFrame = {
-    val docs = spark.read.parquet(IndexBuild.docsDir(dir))
     val perArg = args.zipWithIndex.map { case (a, i) =>
       val cands = candidates(Seq(a), partial)
       docs.join(cands.hint("SHUFFLE_HASH"), Seq("doc_id"))
@@ -594,15 +593,11 @@ class Search(spark: SparkSession, dir: String,
   // ------------------------------------------------------- maintenance views
 
   /** DB-wide stats (reference `info`, totalInfo fts-lmdb.go:257-317). */
-  def info(): DataFrame = {
-    val docs = spark.read.parquet(IndexBuild.docsDir(dir))
-    val dict = spark.read.parquet(IndexBuild.dictDir(dir))
-    val gdict = spark.read.parquet(IndexBuild.gramDictDir(dir))
+  def info(): DataFrame =
     docs.agg(countDistinct($"url").as("n_urls"), count(lit(1)).as("n_chunks"),
       sum($"dl".cast("long")).as("total_terms"))
-      .crossJoin(dict.agg(count(lit(1)).as("n_terms")))
-      .crossJoin(gdict.agg(count(lit(1)).as("n_grams")))
-  }
+      .crossJoin(dictionary.agg(count(lit(1)).as("n_terms")))
+      .crossJoin(gramDictionary.agg(count(lit(1)).as("n_grams")))
 
   /** Per-group info view (reference `info -groups` / `info DB GROUP`,
     * fts-lmdb.go:273-317, 383-446): one row per url with chunk/term/gram
@@ -610,8 +605,7 @@ class Search(spark: SparkSession, dir: String,
     * docs store — one shuffle on url, no posting scan.
     */
   def infoGroups(): DataFrame = {
-    val t = graft.maint.Maintenance.tombstones(spark, dir)
-    val live = graft.maint.Maintenance.liveDocs(spark, dir)
+    val live = docs.join(tombstones.select("doc_id"), Seq("doc_id"), "left_anti")
     val liveAgg = live.groupBy($"url").agg(count(lit(1)).as("n_chunks"),
       sum($"dl".cast("long")).as("sum_dl"),
       sum($"n_grams".cast("long")).as("sum_grams"),
@@ -619,7 +613,7 @@ class Search(spark: SparkSession, dir: String,
       .withColumn("deleted", lit(false))
     // fully-tombstoned groups surface with zero chunks (reference shows
     // deleted groups in info -groups); empty groups (S8) likewise
-    val deletedRows = t.select($"url").distinct()
+    val deletedRows = tombstones.select($"url").distinct()
       .join(liveAgg.select($"url"), Seq("url"), "left_anti")
       .select($"url", lit(0L).as("n_chunks"), lit(0L).as("sum_dl"),
         lit(0L).as("sum_grams"), lit(null).cast("timestamp").as("last_changed"),
@@ -627,7 +621,7 @@ class Search(spark: SparkSession, dir: String,
     val emptyRows = graft.maint.Maintenance.emptyGroupUrls(spark, dir)
       .select($"url").distinct()
       .join(liveAgg.select($"url"), Seq("url"), "left_anti")
-      .join(t.select($"url").distinct(), Seq("url"), "left_anti")
+      .join(tombstones.select($"url").distinct(), Seq("url"), "left_anti")
       .select($"url", lit(0L).as("n_chunks"), lit(0L).as("sum_dl"),
         lit(0L).as("sum_grams"), lit(null).cast("timestamp").as("last_changed"),
         lit(false).as("deleted"))
@@ -639,7 +633,7 @@ class Search(spark: SparkSession, dir: String,
     */
   def infoChunks(url: String): DataFrame = {
     val u = url
-    liveFilter(spark.read.parquet(IndexBuild.docsDir(dir)).where($"url" === u))
+    liveFilter(docs.where($"url" === u))
       .select($"url", $"doc_id", $"chunk_seq", $"line", $"rune_off",
         $"rune_len", $"byte_start", $"byte_len", $"dl", $"n_grams", $"chunk_text")
       .orderBy($"byte_start")
@@ -655,8 +649,7 @@ class Search(spark: SparkSession, dir: String,
   def gramCoverage(): DataFrame = {
     val nChunks = stats.nDocs
     val thDf = Search.CoverageThresholdsPpm.toDF("ppm")
-    val gd = spark.read.parquet(IndexBuild.gramDictDir(dir))
-      .select($"df".cast("long").as("df"))
+    val gd = gramDictionary.select($"df".cast("long").as("df"))
     val counts = gd.crossJoin(thDf)
       .where($"df" * lit(1000000L) <= $"ppm" * lit(nChunks))
       .groupBy($"ppm").agg(count(lit(1)).as("n_grams"))
@@ -670,12 +663,9 @@ class Search(spark: SparkSession, dir: String,
     * chunk byte lengths — metadata-only scans, postings column pruned.
     */
   def indexSizes(): DataFrame = {
-    val chunkBytes = spark.read.parquet(IndexBuild.docsDir(dir))
-      .agg(sum($"byte_len").as("chunk_bytes"))
-    val gramBytes = spark.read.parquet(IndexBuild.gramPostingsDir(dir))
-      .agg(sum($"n_bytes".cast("long")).as("gram_bytes"))
-    val termBytes = spark.read.parquet(IndexBuild.termPostingsDir(dir))
-      .agg(sum($"n_bytes".cast("long")).as("term_bytes"))
+    val chunkBytes = docs.agg(sum($"byte_len").as("chunk_bytes"))
+    val gramBytes = gramPostings.agg(sum($"n_bytes".cast("long")).as("gram_bytes"))
+    val termBytes = termPostings.agg(sum($"n_bytes".cast("long")).as("term_bytes"))
     chunkBytes.crossJoin(gramBytes).crossJoin(termBytes)
       .withColumn("total_bytes", $"chunk_bytes" + $"gram_bytes" + $"term_bytes")
   }
@@ -683,12 +673,10 @@ class Search(spark: SparkSession, dir: String,
   /** Gram selectivity histogram (reference `info -grams`, displayGrams
     * fts-lmdb.go:319-381) — the skew diagnostic that motivates salting.
     */
-  def gramHistogram(): DataFrame = {
-    spark.read.parquet(IndexBuild.gramDictDir(dir))
-      .agg(count(lit(1)).as("n_grams"), min($"df").as("min_df"),
-        max($"df").as("max_df"), sum($"df").as("total_postings"),
-        expr("percentile_approx(df, array(0.5, 0.9, 0.99), 10000)").as("df_pcts"))
-  }
+  def gramHistogram(): DataFrame =
+    gramDictionary.agg(count(lit(1)).as("n_grams"), min($"df").as("min_df"),
+      max($"df").as("max_df"), sum($"df").as("total_postings"),
+      expr("percentile_approx(df, array(0.5, 0.9, 0.99), 10000)").as("df_pcts"))
 }
 
 object Search {
@@ -708,6 +696,7 @@ object Search {
   private[query] val scratchToken: String =
     java.lang.Long.toHexString(new java.security.SecureRandom().nextLong())
   private[query] val scratchCounter = new java.util.concurrent.atomic.AtomicLong(0L)
+  private val UrlSchema = org.apache.spark.sql.types.StructType.fromDDL("url STRING")
 
   /** Term dictionaries up to this many rows are collected once per Search
     * instance and probed driver-side per query (~40 B/entry: ≤ ~20 MB at

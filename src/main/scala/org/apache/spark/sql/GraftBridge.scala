@@ -13,6 +13,9 @@ object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** `s` with every field and element nullable, as Spark reads a file. */
+  def asNullable(s: types.StructType): types.StructType = s.asNullable
+
   /** Register a native function on a LIVE session (the extensions hook only
     * runs at session construction; `sessionState` is `private[sql]`).
     */

@@ -165,6 +165,18 @@ class StreamingMultimodalSpec extends SparkSuite {
     assert(balanced.count() == 60)
   }
 
+  test("WAV decode rejects a chunk size that overflows Int with a clear error") {
+    import java.nio.{ByteBuffer, ByteOrder}
+    // a chunk header whose size would wrap `off + 8 + size` past Int.MaxValue
+    val p = ByteBuffer.allocate(28).order(ByteOrder.LITTLE_ENDIAN)
+      .put("RIFF".getBytes("US-ASCII")).putInt(20)
+      .put("WAVE".getBytes("US-ASCII"))
+      .put("LIST".getBytes("US-ASCII")).putInt(Int.MaxValue - 8)
+      .array()
+    val e = intercept[IllegalArgumentException](Multimodal.MediaCodec.decode(p))
+    assert(e.getMessage.contains("bad RIFF chunk"))
+  }
+
   test("streaming quality gate: modelScoreCol filters a stream, batch-identical") {
     implicit val sqlCtx = spark.sqlContext
     val docs = Seq((0L, "alpha beta gamma"), (1L, "delta epsilon"),
