@@ -80,14 +80,15 @@ object TextOps {
   /** [[boilerplateLines]] applied: documents with their boilerplate lines
     * removed (empty lines preserved as document structure).
     *
-    * Size-gated two-shape plan (the tombstone / searchFresh pattern):
-    * at/below `maxInlineLines` boilerplate lines, the set rides into a
-    * map-side in-row filter — the corpus is rewritten in one pass, no
-    * shuffle. Above the gate the set stays distributed: doc lines explode
-    * as narrow (doc_id, md5(line)) rows — 16-byte digests, raw text never
-    * a join key — meet the boilerplate digests, and matches collapse back
-    * to one bounded per-doc removal set; the corpus text shuffles exactly
-    * once, through the final SHUFFLE_HASH probe. Both shapes agree
+    * Size-gated two-shape plan (one bounded probe,
+    * [[graft.Bounded.collect]]): at/below `maxInlineLines` boilerplate
+    * lines, the set rides into a map-side in-row filter — the corpus is
+    * rewritten in one pass, no shuffle. Above the gate the set stays
+    * distributed: doc lines explode as narrow (doc_id, md5(line)) rows —
+    * 16-byte digests, raw text never a join key — meet the boilerplate
+    * digests, and matches collapse back to one bounded per-doc removal
+    * set; the corpus text shuffles exactly once, through the final
+    * SHUFFLE_HASH probe. Both shapes agree
     * line-for-line (digest equality stands in for line equality; an md5
     * collision between a kept and a boilerplate line is negligible).
     */
@@ -105,13 +106,13 @@ object TextOps {
   def stripWith(docs: DataFrame, boilerplate: DataFrame,
                 maxInlineLines: Int = MaxInlineBoilerplate): DataFrame = {
     val bp = boilerplate.select(col("line"))
-    val probe = bp.limit(maxInlineLines + 1).collect().map(_.getString(0))
-    val stripped =
-      if (probe.length <= maxInlineLines)
+    val stripped = graft.Bounded.collect(bp, maxInlineLines) match {
+      case Some(rows) =>
+        val lines = rows.map(_.getString(0)).toSeq
         docs.withColumn("text",
           array_join(filter(split(col("text"), "\n"),
-            l => !array_contains(typedlit(probe.toSeq), l)), "\n"))
-      else {
+            l => !array_contains(typedlit(lines), l)), "\n"))
+      case None =>
         val bpH = bp.select(md5(col("line")).as("h"))
         val rm = docs.select(col("doc_id"),
             explode(array_distinct(transform(
@@ -126,7 +127,7 @@ object TextOps {
                 coalesce(col("rm"), typedlit(Seq.empty[String])), md5(l))),
               "\n"))
           .drop("rm")
-      }
+    }
     stripped.orderBy("doc_id")
   }
 

@@ -1,11 +1,11 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.build.IndexBuild
 import graft.build.IndexBuild.readTable
-import graft.core.{Gram, Postings, Tokenizer}
+import graft.core.{Gram, Tokenizer}
 
 /** Query engine over a built index directory — the Spark-native rebuild of
   * the reference's `search` path (reference: cmdSearch fts-lmdb.go:1046-1081,
@@ -15,9 +15,10 @@ import graft.core.{Gram, Postings, Tokenizer}
   *
   * Plan shapes:
   *  - candidate retrieval prunes the gram-postings scan to the query grams'
-  *    bucket partitions (partition pruning) + key pushdown, then either
-  *    intersects as one hash aggregation (count == |Q|, partial+final agg,
-  *    one shuffle) or as a smallest-df-first semi-join chain;
+  *    bucket partitions (partition pruning) + key pushdown, groups the
+  *    segments by doc range and intersects them per range with the
+  *    leapfrog [[Wand.intersect]] kernel — only matching doc ids leave a
+  *    range;
   *  - candidates are verified against chunk text AFTER hydration, exactly
   *    like the reference's candidates-then-verify split;
   *  - BM25 groups the query terms' segments by doc range (range_id) so the
@@ -25,19 +26,19 @@ import graft.core.{Gram, Postings, Tokenizer}
   *    the final global TakeOrdered cross the wire.
   *
   * Snapshot contract: a Search pins the index as it is at construction —
-  * `stats` and the file lists of the docs, postings, dictionary and
-  * tombstone tables are fixed then, and every query filters those
-  * relations (reference analog: one read transaction per search,
-  * fts-lmdb.go:1691-1721). Open a new Search after any write. A Search
+  * `stats` and the file lists of the docs, postings, dictionary,
+  * tombstone and empty-groups tables are fixed then, and every query
+  * filters those relations (reference analog: one read transaction per
+  * search, fts-lmdb.go:1691-1721). Open a new Search after any write. A Search
   * opened before a `compact`, `mergeSegments` or dictionary rewrite may
   * hit files those operations deleted.
   */
 class Search(spark: SparkSession, dir: String,
-             /** see [[MaxInlineCandidates]]; tests inject 0 to force the
-               * join-hydration path */
+             /** see [[Search.DefaultMaxInlineCandidates]]; tests inject 0
+               * to force the join-hydration path */
              maxInlineCandidates: Int = Search.DefaultMaxInlineCandidates,
-             /** see [[MaxInlineTombstones]]; tests inject 0 to force the
-               * distributed dead-id path */
+             /** see [[Search.DefaultMaxInlineTombstones]]; tests inject 0
+               * to force the distributed dead-id path */
              maxInlineTombstones: Long = Search.DefaultMaxInlineTombstones)
     extends Serializable {
   import spark.implicits._
@@ -50,45 +51,42 @@ class Search(spark: SparkSession, dir: String,
   @transient private val dictionary = readTable(spark, dir, IndexBuild.DictTable)
   @transient private val gramDictionary = readTable(spark, dir, IndexBuild.GramDictTable)
   @transient private val tombstones = graft.maint.Maintenance.tombstones(spark, dir)
+  @transient private val emptyGroups = graft.maint.Maintenance.emptyGroupUrls(spark, dir)
 
-  /** Tombstone cardinality — a parquet-footer count over the small
-    * tombstone table (never the docs store).
+  /** The dead-doc view (reference validity filter P5,
+    * fts-lmdb.go:1151-1162): the exact tombstoned doc-id set when at most
+    * `maxInlineTombstones` ids are dead, else `None` — a bulk-delete
+    * backlog never collects to the driver and stays distributed. One
+    * bounded probe per Search decides ([[graft.Bounded.collect]]);
+    * [[graft.maint.Maintenance.compact]] empties the set.
     */
-  lazy val nTombstones: Long = if (tombstones.isEmpty) 0L else tombstones.count()
+  lazy val deadIds: Option[Set[Long]] =
+    graft.Bounded.collect(tombstones.select($"doc_id").as[Long], maxInlineTombstones)
+      .map(_.toSet)
 
-  /** Tombstoned doc ids (reference validity filter P5) as an exact driver
-    * set — only materialized below [[Search.MaxInlineTombstones]]; a
-    * bulk-delete backlog must never collect to the driver (use the
-    * distributed cogroup path instead). Bounded between compacts;
-    * [[graft.maint.Maintenance.compact]] resets it.
+  /** Drop dead docs from a relational input with a `doc_id` column: a
+    * pushed-down id filter over [[deadIds]], or a left-anti join against
+    * the tombstone table above the gate.
     */
-  lazy val tombstonedIds: Set[Long] = {
-    if (nTombstones == 0) Set.empty[Long]
-    else tombstones.select($"doc_id").as[Long].collect().toSet
+  private def liveFilter(df: DataFrame): DataFrame = deadIds match {
+    case Some(dead) if dead.isEmpty => df
+    case Some(dead) => df.where(!$"doc_id".isInCollection(dead))
+    case None => df.join(tombstones.select("doc_id"), Seq("doc_id"), "left_anti")
   }
 
-  private def liveFilter(df: DataFrame): DataFrame =
-    if (nTombstones == 0) df
-    else if (nTombstones <= maxInlineTombstones) {
-      val ids = tombstonedIds
-      df.where(!$"doc_id".isInCollection(ids))
-    } else
-      df.join(tombstones.select("doc_id"), Seq("doc_id"), "left_anti")
-
-  /** Run a per-range posting kernel with the right tombstone plan: below
-    * the gate, an exact dead set travels in the closure; above it, the
-    * tombstone ids stay distributed and are cogrouped into each range's
-    * kernel by range_id — no driver materialization, exact semantics.
+  /** Run a per-range posting kernel with the right tombstone plan: with
+    * [[deadIds]] inline, the exact dead set travels in the closure; above
+    * the gate, the tombstone ids stay distributed and are cogrouped into
+    * each range's kernel by range_id — no driver materialization, exact
+    * semantics.
     */
-  private def perRangeKernel[T: org.apache.spark.sql.Encoder](
-      segs: org.apache.spark.sql.Dataset[Seg])(
-      kernel: (Iterator[Seg], Long => Boolean) => Iterator[T]): org.apache.spark.sql.Dataset[T] = {
-    if (nTombstones <= maxInlineTombstones) {
-      val dead = tombstonedIds
+  private def perRangeKernel[T: Encoder](segs: Dataset[Seg])(
+      kernel: (Iterator[Seg], Long => Boolean) => Iterator[T]): Dataset[T] = deadIds match {
+    case Some(dead) =>
       val live: Long => Boolean =
         if (dead.isEmpty) _ => true else d => !dead.contains(d)
       segs.groupByKey(_.range_id).flatMapGroups((_, it) => kernel(it, live))
-    } else {
+    case None =>
       val rs = stats.rangeSize
       val deadByRange = tombstones.select($"doc_id").as[Long]
         .map(id => ((id / rs).toInt, id))
@@ -98,7 +96,6 @@ class Search(spark: SparkSession, dir: String,
         deadIt.foreach(ds += _._2)
         kernel(segIt, d => !ds.contains(d))
       }
-    }
   }
 
   /** Delegates to the build-side definition so the hash/seed/floorMod
@@ -109,26 +106,17 @@ class Search(spark: SparkSession, dir: String,
     IndexBuild.termBucket(t, stats.nBuckets)
 
   /** Size-gated driver cache of the whole term dictionary: at or below
-    * [[Search.MaxInlineDictTerms]] rows (one bounded `limit(gate + 1)`
-    * collect decides, see below) the (term, df) map is collected once per
+    * [[Search.MaxInlineDictTerms]] rows (one bounded probe,
+    * [[graft.Bounded.collect]]) the (term, df) map is collected once per
     * Search instance and every query's dictionary slice is a driver map
-    * probe instead of a Spark job — the same bounded-collect discipline as
-    * [[gramDict]] / [[tombstonedIds]]. Above the gate (web-scale
-    * vocabularies) the cache stays empty and [[dictLookup]] falls back to
-    * the pruned per-query scan. Bound to the index state at construction,
-    * like `stats`.
+    * probe instead of a Spark job. Above the gate (web-scale vocabularies)
+    * the cache stays empty and [[dictLookup]] falls back to the pruned
+    * per-query scan. Bound to the index state at construction, like
+    * `stats`.
     */
-  private lazy val inlineDict: Option[Map[String, Long]] = {
-    // ONE bounded job, not count-then-collect: a LIMIT gate+1 collect
-    // returns every row when the dictionary is at/below the gate (the
-    // limit is never reached) and exactly gate+1 rows — scanned
-    // incrementally, bounded driver memory — when it is above, in which
-    // case the probe is discarded and the per-query pruned scan stands.
-    val probe = dictionary.select($"term", $"df".cast("long"))
-      .limit(Search.MaxInlineDictTerms.toInt + 1).collect()
-    if (probe.length > Search.MaxInlineDictTerms) None
-    else Some(probe.map(r => r.getString(0) -> r.getLong(1)).toMap)
-  }
+  private lazy val inlineDict: Option[Map[String, Long]] =
+    graft.Bounded.collect(dictionary.select($"term", $"df".cast("long")), Search.MaxInlineDictTerms)
+      .map(_.map(r => r.getString(0) -> r.getLong(1)).toMap)
 
   /** Dictionary lookup for query terms (term -> df). Tiny collect: the
     * north rule's "broadcast dictionary" slice for this query.
@@ -157,7 +145,7 @@ class Search(spark: SparkSession, dir: String,
 
 
   /** Pruned scan of a postings table for the given keys. */
-  private def segments(keys: Seq[String], gramsTable: Boolean): org.apache.spark.sql.Dataset[Seg] = {
+  private def segments(keys: Seq[String], gramsTable: Boolean): Dataset[Seg] = {
     val buckets =
       if (gramsTable) keys.map(k => IndexBuild.gramCode(k) % stats.nBuckets).distinct
       else keys.map(termBucket).distinct
@@ -166,12 +154,6 @@ class Search(spark: SparkSession, dir: String,
       .select($"key", $"range_id", $"first_doc", $"postings")
       .as[Seg]
   }
-
-  /** Exploded (key, doc_id) postings for the given keys. */
-  private def exploded(keys: Seq[String], gramsTable: Boolean): DataFrame =
-    segments(keys, gramsTable)
-      .flatMap(s => Postings.decodeAll(s.postings)._1.map(d => (s.key, d)))
-      .toDF("key", "doc_id")
 
   // ---------------------------------------------------------------- BM25
 
@@ -188,23 +170,15 @@ class Search(spark: SparkSession, dir: String,
     if (effective.isEmpty)
       return spark.emptyDataset[Wand.ScoredDoc].toDF("doc_id", "score")
     val n = stats.nDocs
-    val termMeta: Map[String, (Int, Double)] = effective.zipWithIndex.map {
-      case (t, i) => t -> (i, Wand.idf(n, dict(t)))
-    }.toMap
+    val idfs: Map[String, Double] = effective.map(t => t -> Wand.idf(n, dict(t))).toMap
     val (k1, b, avgdl) = (stats.k1, stats.b, stats.avgdl)
     val nTerms = effective.size
     val conj = conjunctive
     val perRange = perRangeKernel(segments(effective, gramsTable = false)) {
       (rows, live) =>
-        val byTerm = rows.toArray.groupBy(_.key)
-        val cursors = termMeta.toArray.sortBy(_._2._1).flatMap { case (t, (idx, idfV)) =>
-          byTerm.get(t).map { segs =>
-            new Wand.TermCursor(idx, idfV,
-              segs.sortBy(_.first_doc).map(_.postings), k1, b)
-          }
-        }
+        val cursors = Search.cursors(rows, idfs, k1, b)
         if (conj && cursors.length != nTerms) Iterator.empty
-        else Wand.topK(cursors, k, conj, k1, b, avgdl, d => !live(d)).iterator
+        else Wand.topK(cursors, k, conj, k1, b, avgdl, live).iterator
     }
     perRange.toDF("doc_id", "score")
       .orderBy($"score".desc, $"doc_id".asc)
@@ -278,56 +252,15 @@ class Search(spark: SparkSession, dir: String,
     * looked up exactly once per query.
     */
   private def candidatesFromGrams(grams: Array[Int], df: Map[Int, Long]): DataFrame = {
-    if (grams.isEmpty || grams.exists(g => !df.contains(g)))
+    if (Search.unmatchable(grams, df))
       return spark.range(0).select($"id".as("doc_id"))
     val keys = grams.map(IndexBuild.gramKey).toSeq
     val nKeys = keys.size
     perRangeKernel(segments(keys, gramsTable = true)) { (rows, live) =>
-      val byKey = rows.toArray.groupBy(_.key)
-      if (byKey.size != nKeys) Iterator.empty
-      else {
-        val cursors = byKey.toArray.sortBy(_._1).zipWithIndex.map {
-          case ((_, segs), i) =>
-            new Wand.TermCursor(i, 0.0, segs.sortBy(_.first_doc).map(_.postings), 1.2, 0.75)
-        }
-        Wand.intersect(cursors, live)
-      }
+      val cursors = Search.cursors(rows, _ => 0.0, 1.2, 0.75)
+      if (cursors.length != nKeys) Iterator.empty
+      else Wand.intersect(cursors, live)
     }.toDF("doc_id")
-  }
-
-  /** [[candidates]] as one hash aggregation (count == |Q|) — kept for plan
-    * comparison and as the shape that generalizes to scoring.
-    */
-  def candidatesAgg(args: Seq[String], partial: Boolean = false): DataFrame = {
-    val grams = Gram.gramsSorted(partial, args)
-    val df = gramDictLookup(grams.toSeq)
-    if (grams.isEmpty || grams.exists(g => !df.contains(g)))
-      return spark.range(0).select($"id".as("doc_id"))
-    val keys = grams.map(IndexBuild.gramKey).toSeq
-    liveFilter(exploded(keys, gramsTable = true))
-      .groupBy($"doc_id").agg(count(lit(1)).as("hits"))
-      .where($"hits" === grams.length)
-      .select($"doc_id")
-  }
-
-  /** Same semantics as [[candidates]] but as a smallest-df-first left-semi
-    * join chain (the reference's seed-smallest strategy,
-    * fts-lmdb.go:1505-1514). Kept for plan comparison/benchmarks.
-    */
-  def candidatesSemiJoin(args: Seq[String], partial: Boolean = false): DataFrame = {
-    val grams = Gram.gramsSorted(partial, args)
-    if (grams.isEmpty) return spark.range(0).select($"id".as("doc_id"))
-    val dfs = gramDictLookup(grams.toSeq)
-    if (grams.exists(g => !dfs.contains(g)))
-      return spark.range(0).select($"id".as("doc_id"))
-    val ordered = grams.sortBy(g => dfs(g)) // ascending df: seed smallest
-    var acc = liveFilter(exploded(Seq(IndexBuild.gramKey(ordered.head)), gramsTable = true))
-      .select("doc_id")
-    ordered.tail.foreach { g =>
-      acc = acc.join(exploded(Seq(IndexBuild.gramKey(g)), gramsTable = true).select("doc_id"),
-        Seq("doc_id"), "left_semi")
-    }
-    acc
   }
 
   /** Fuzzy gram-overlap scoring (reference fuzzyMatch fts-lmdb.go:1530-1550;
@@ -337,19 +270,14 @@ class Search(spark: SparkSession, dir: String,
     */
   def fuzzy(args: Seq[String], minRatio: Double): DataFrame = {
     val grams = Gram.gramsSorted(partial = true, args)
-    val df = gramDictLookup(grams.toSeq)
-    if (grams.isEmpty || grams.exists(g => !df.contains(g)))
+    if (Search.unmatchable(grams, gramDictLookup(grams.toSeq)))
       return spark.range(0).select($"id".as("doc_id"), lit(0L).as("hits"),
         lit(0.0).as("ratio"))
     val q = grams.length.toDouble
     val minR = minRatio
     perRangeKernel(segments(grams.map(IndexBuild.gramKey).toSeq, gramsTable = true)) {
       (rows, live) =>
-        val cursors = rows.toArray.groupBy(_.key).toArray.sortBy(_._1)
-          .zipWithIndex.map { case ((_, segs), i) =>
-            new Wand.TermCursor(i, 0.0, segs.sortBy(_.first_doc).map(_.postings), 1.2, 0.75)
-          }
-        Wand.overlapCounts(cursors, live)
+        Wand.overlapCounts(Search.cursors(rows, _ => 0.0, 1.2, 0.75), live)
           .filter { case (_, hits) => hits / q >= minR }
           .map { case (d, hits) => (d, hits.toLong, hits / q) }
     }.toDF("doc_id", "hits", "ratio")
@@ -448,9 +376,7 @@ class Search(spark: SparkSession, dir: String,
     // never touch the driver.
     val grams = Gram.gramsSorted(partial, args)
     val dfs = gramDictLookup(grams.toSeq)
-    val minDf =
-      if (grams.isEmpty || grams.exists(g => !dfs.contains(g))) 0L
-      else grams.map(g => dfs(g)).min
+    val minDf = if (Search.unmatchable(grams, dfs)) 0L else grams.map(dfs).min
     val cands = candidatesFromGrams(grams, dfs) // dictionary looked up once
     val hydrated0 =
       if (minDf <= maxInlineCandidates) {
@@ -504,8 +430,7 @@ class Search(spark: SparkSession, dir: String,
     * corpus is scanned once, never shuffled.
     */
   def badFiles(urls: DataFrame, currentDocs: DataFrame): DataFrame = {
-    val indexed = graft.maint.Maintenance.docsOfUrls(docs, stats.docParts, urls)
-      .join(tombstones.select("doc_id"), Seq("doc_id"), "left_anti")
+    val indexed = liveFilter(graft.maint.Maintenance.docsOfUrls(docs, stats.docParts, urls))
       .groupBy($"url").agg(max($"warc_ts").as("indexed_ts"))
     // one row per url even if the current table carries multiple versions
     // (changelog-style): the NEWEST version is "the file's mtime" — a url
@@ -521,8 +446,8 @@ class Search(spark: SparkSession, dir: String,
 
   /** [[search]] with stale/missing groups dropped (reference `search -f`:
     * skip bad files instead of erroring, fts-lmdb.go:1117-1120).
-    * Below [[Search.DefaultMaxInlineCandidates]] bad urls, the set is
-    * collected once (bounded probe via take(gate+1)) and applied as a
+    * At or below `maxInlineCandidates` bad urls, the set is collected once
+    * (one bounded probe, [[graft.Bounded.collect]]) and applied as a
     * pushed-down filter; above the gate — a changed-everything corpus
     * under a hot query — the bad set stays distributed and is removed
     * with a left-anti join, the same pattern as the tombstone path. In
@@ -539,34 +464,34 @@ class Search(spark: SparkSession, dir: String,
     // side would re-run the whole search pipeline a third time
     val bad = badFiles(hits.select("url").distinct(), currentDocs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val probe = bad.select("url").as[String].take(maxInlineCandidates + 1)
-    if (probe.length <= maxInlineCandidates) {
-      bad.unpersist()
-      if (probe.isEmpty) hits
-      else hits.where(!$"url".isInCollection(probe.toSeq))
-    } else {
-      // above the gate, materialize the (bounded: one row per bad url) set
-      // as a scratch parquet and unpersist — a long-lived session running
-      // many above-gate calls must not pin cached blocks until LRU
-      // pressure evicts them; the lazy consumer re-reads a tiny file
-      // instead. The scratch lives INSIDE the index dir: that is shared
-      // storage by construction (every executor reads/writes it), whereas
-      // a driver-local temp path would shred across executor-local disks
-      // on a real cluster. The path is UNIQUE PER CALL (a process-wide
-      // counter + a random session token), so an earlier call's
-      // still-unevaluated result can never silently read a later call's
-      // bad-url set or hit a missing file — the fixed-path overwrite bug.
-      // Scratch files are one tiny url list each; they are removed with the
-      // index dir (delete/compact/rebuild), and a caller that keeps an
-      // index for years can clear `badurls_scratch_*` whenever no returned
-      // frame is still live. Note the write also means searchFresh's
-      // above-gate shape requires a WRITABLE index dir — the documented
-      // trade-off for not pinning cached blocks.
-      val scratch = IndexBuild.Table(s"badurls_scratch_${Search.scratchToken}_" +
-        s"${Search.scratchCounter.incrementAndGet()}", Search.UrlSchema)
-      bad.select("url").write.mode("overwrite").parquet(scratch.path(dir))
-      bad.unpersist()
-      hits.join(readTable(spark, dir, scratch), Seq("url"), "left_anti")
+    graft.Bounded.collect(bad.select("url").as[String], maxInlineCandidates) match {
+      case Some(badUrls) =>
+        bad.unpersist()
+        if (badUrls.isEmpty) hits
+        else hits.where(!$"url".isInCollection(badUrls.toSeq))
+      case None =>
+        // above the gate, materialize the (bounded: one row per bad url) set
+        // as a scratch parquet and unpersist — a long-lived session running
+        // many above-gate calls must not pin cached blocks until LRU
+        // pressure evicts them; the lazy consumer re-reads a tiny file
+        // instead. The scratch lives INSIDE the index dir: that is shared
+        // storage by construction (every executor reads/writes it), whereas
+        // a driver-local temp path would shred across executor-local disks
+        // on a real cluster. The path is UNIQUE PER CALL (a process-wide
+        // counter + a random session token), so an earlier call's
+        // still-unevaluated result can never silently read a later call's
+        // bad-url set or hit a missing file — the fixed-path overwrite bug.
+        // Scratch files are one tiny url list each; they are removed with the
+        // index dir (delete/compact/rebuild), and a caller that keeps an
+        // index for years can clear `badurls_scratch_*` whenever no returned
+        // frame is still live. Note the write also means searchFresh's
+        // above-gate shape requires a WRITABLE index dir — the documented
+        // trade-off for not pinning cached blocks.
+        val scratch = IndexBuild.Table(s"badurls_scratch_${Search.scratchToken}_" +
+          s"${Search.scratchCounter.incrementAndGet()}", Search.UrlSchema)
+        bad.select("url").write.mode("overwrite").parquet(scratch.path(dir))
+        bad.unpersist()
+        hits.join(readTable(spark, dir, scratch), Seq("url"), "left_anti")
     }
   }
 
@@ -602,11 +527,10 @@ class Search(spark: SparkSession, dir: String,
   /** Per-group info view (reference `info -groups` / `info DB GROUP`,
     * fts-lmdb.go:273-317, 383-446): one row per url with chunk/term/gram
     * totals, latest warc_ts, and validity (tombstone flag). Aggregates the
-    * docs store — one shuffle on url, no posting scan.
+    * live docs store — one shuffle on url, no posting scan.
     */
   def infoGroups(): DataFrame = {
-    val live = docs.join(tombstones.select("doc_id"), Seq("doc_id"), "left_anti")
-    val liveAgg = live.groupBy($"url").agg(count(lit(1)).as("n_chunks"),
+    val liveAgg = liveFilter(docs).groupBy($"url").agg(count(lit(1)).as("n_chunks"),
       sum($"dl".cast("long")).as("sum_dl"),
       sum($"n_grams".cast("long")).as("sum_grams"),
       max($"warc_ts").as("last_changed"))
@@ -618,8 +542,7 @@ class Search(spark: SparkSession, dir: String,
       .select($"url", lit(0L).as("n_chunks"), lit(0L).as("sum_dl"),
         lit(0L).as("sum_grams"), lit(null).cast("timestamp").as("last_changed"),
         lit(true).as("deleted"))
-    val emptyRows = graft.maint.Maintenance.emptyGroupUrls(spark, dir)
-      .select($"url").distinct()
+    val emptyRows = emptyGroups.select($"url").distinct()
       .join(liveAgg.select($"url"), Seq("url"), "left_anti")
       .join(tombstones.select($"url").distinct(), Seq("url"), "left_anti")
       .select($"url", lit(0L).as("n_chunks"), lit(0L).as("sum_dl"),
@@ -725,4 +648,22 @@ object Search {
     */
   final case class Seg(key: String, range_id: Int, first_doc: Long,
                        postings: Array[Byte])
+
+  /** The cursors of one doc range for the per-range kernels: one per key
+    * present, in ascending key order (the scoring order of
+    * [[Wand.topK]]), each over its segments by first_doc.
+    */
+  private def cursors(rows: Iterator[Seg], idf: String => Double,
+                      k1: Double, b: Double): Array[Wand.TermCursor] =
+    rows.toArray.groupBy(_.key).toArray.sortBy(_._1).zipWithIndex.map {
+      case ((key, segs), i) =>
+        new Wand.TermCursor(i, idf(key), segs.sortBy(_.first_doc).map(_.postings), k1, b)
+    }
+
+  /** A gram query matches nothing when it has no grams or one of them is
+    * absent from the gram dictionary (reference exits 1,
+    * fts-lmdb.go:1506-1508).
+    */
+  private def unmatchable(grams: Array[Int], df: Map[Int, Long]): Boolean =
+    grams.isEmpty || grams.exists(g => !df.contains(g))
 }

@@ -132,16 +132,17 @@ object Wand {
   }
 
   /** Top-k over the given term cursors. `cursors` is indexed by termIdx
-    * (ascending lexicographic term order). `deleted` is the tombstone
-    * live-docs check (reference validity filter P5, fts-lmdb.go:1151-1162)
-    * applied at scoring time so the heap always holds live docs.
+    * (ascending lexicographic term order). `live` is the tombstone
+    * live-docs check (reference validity filter P5, fts-lmdb.go:1151-1162),
+    * the same predicate [[intersect]] and [[overlapCounts]] take, applied
+    * at scoring time so the heap always holds live docs.
     */
   def topK(cursors: Array[TermCursor], k: Int, conjunctive: Boolean,
            k1: Double, b: Double, avgdl: Double,
-           deleted: Long => Boolean = _ => false): Array[ScoredDoc] = {
+           live: Long => Boolean = _ => true): Array[ScoredDoc] = {
     val heap = new TopK(k) {
       override def offer(score: Double, doc: Long): Unit =
-        if (!deleted(doc)) super.offer(score, doc)
+        if (live(doc)) super.offer(score, doc)
     }
     if (conjunctive) topKConjunctive(cursors, heap, k1, b, avgdl)
     else topKDisjunctive(cursors, heap, k1, b, avgdl)

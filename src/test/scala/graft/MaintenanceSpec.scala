@@ -30,7 +30,7 @@ class MaintenanceSpec extends SparkSuite {
     val s1 = new Search(spark, dir)
     val after = s1.bm25TopK(Seq("the"), 10, conjunctive = false)
       .collect().map(_.getLong(0))
-    val victimDocIds = s1.tombstonedIds
+    val victimDocIds = s1.deadIds.getOrElse(Set.empty)
     assert(victimDocIds.nonEmpty)
     assert(after.intersect(victimDocIds.toSeq).isEmpty)
     assert(after.length == 10) // heap refilled with live docs, not truncated
@@ -41,7 +41,7 @@ class MaintenanceSpec extends SparkSuite {
     Maintenance.compact(spark, dir, cfg)
     assert(!Files.exists(Paths.get(dir, "tombstones")))
     val s2 = new Search(spark, dir)
-    assert(s2.tombstonedIds.isEmpty)
+    assert(s2.deadIds.contains(Set.empty))
     // NOTE: doc ids are re-ranked after compact; compare by url
     val urlsAfterCompact = s2.search(Seq("the")).select("url").distinct()
       .as[String].collect().toSet
@@ -138,7 +138,7 @@ class MaintenanceSpec extends SparkSuite {
     // compact after updates: re-densifies and refreshes stats
     Maintenance.compact(spark, dir, cfg)
     val s4 = new Search(spark, dir)
-    assert(s4.tombstonedIds.isEmpty)
+    assert(s4.deadIds.contains(Set.empty))
     assert(s4.search(Seq("quagga")).count() == 2)
     assert(s4.search(Seq("wallaby")).count() == 1)
     val statsC = IndexBuild.readDocStats(dir)
@@ -186,16 +186,19 @@ class MaintenanceSpec extends SparkSuite {
     Maintenance.delete(spark, dir, victims)
     val inline = new Search(spark, dir) // default gate: driver set
     val dist = new Search(spark, dir, maxInlineTombstones = 0) // forced cogroup
-    assert(dist.nTombstones > 0)
+    assert(Maintenance.tombstones(spark, dir).count() > 0)
+    assert(dist.deadIds.isEmpty && inline.deadIds.exists(_.nonEmpty))
     def rows(s: Search) = Seq(
       s.bm25TopK(Seq("the"), 10, conjunctive = false).collect().map(_.toSeq).toSeq,
       s.candidates(Seq("the")).orderBy("doc_id").collect().map(_.toSeq).toSeq,
       s.fuzzy(Seq("the"), 0.5).orderBy("doc_id").collect().map(_.toSeq).toSeq,
-      s.candidatesAgg(Seq("the")).orderBy("doc_id").collect().map(_.toSeq).toSeq,
-      s.bm25BruteForce(Seq("the"), 10, conjunctive = false).collect().map(_.toSeq).toSeq)
+      s.bm25BruteForce(Seq("the"), 10, conjunctive = false).collect().map(_.toSeq).toSeq,
+      // hydrated search, and infoGroups over the live docs store
+      s.search(Seq("the")).collect().map(_.toSeq).toSeq,
+      s.infoGroups().collect().map(_.toSeq).toSeq)
     assert(rows(inline) == rows(dist))
     // and the distributed path actually excludes the victims
-    val victimIds = inline.tombstonedIds
+    val victimIds = inline.deadIds.get
     assert(dist.candidates(Seq("the")).as[Long].collect()
       .toSet.intersect(victimIds).isEmpty)
   }
@@ -210,7 +213,7 @@ class MaintenanceSpec extends SparkSuite {
       .collect().map(r => (r.getString(0), r.getString(1)))
     assert(plan.toSeq == Seq((dropUrl, "deleted")))
     // dry run executed nothing: url still searchable, no tombstones
-    assert(new Search(spark, dir).tombstonedIds.isEmpty)
+    assert(new Search(spark, dir).deadIds.contains(Set.empty))
     assert(Maintenance.tombstones(spark, dir).count() == 0)
 
     // empty groups: add two, one colliding with an indexed url -> skipped
@@ -219,6 +222,20 @@ class MaintenanceSpec extends SparkSuite {
     val s = new Search(spark, dir)
     val g = s.infoGroups().where($"n_chunks" === 0).select("url").as[String].collect()
     assert(g.sorted.toSeq == Seq("e://1", "e://2"))
+  }
+
+  test("infoGroups reads the empty groups a Search pinned at construction") {
+    val dir = tmpDir("maint-empty-snap")
+    IndexBuild.build(spark, WebCorpus.generate(spark, 20, seed = 56L, partitions = 2), dir, cfg)
+    def emptyUrls(s: Search) =
+      s.infoGroups().where($"n_chunks" === 0).select("url").as[String].collect().sorted.toSeq
+    val before = new Search(spark, dir) // no empty_groups table yet
+    assert(Maintenance.emptyGroups(spark, dir, Seq("e://a")) == 1L)
+    val opened = new Search(spark, dir) // pins a one-file empty_groups table
+    assert(Maintenance.emptyGroups(spark, dir, Seq("e://b")) == 1L)
+    assert(emptyUrls(before).isEmpty)
+    assert(emptyUrls(opened) == Seq("e://a"))
+    assert(emptyUrls(new Search(spark, dir)) == Seq("e://a", "e://b"))
   }
 
   test("delete scans only the batch urls' docparts (partition-pruned tombstoning)") {

@@ -36,11 +36,35 @@ class ParitySpec extends SparkSuite {
     assert(res.forall(_.getAs[String]("chunk_text").contains("one")))
   }
 
-  test("kernel, aggregation and semi-join candidate plans agree") {
-    val a = search.candidates(Seq("one", "two")).collect().map(_.getLong(0)).sorted
-    val b = search.candidatesSemiJoin(Seq("one", "two")).collect().map(_.getLong(0)).sorted
-    val c = search.candidatesAgg(Seq("one", "two")).collect().map(_.getLong(0)).sorted
-    assert(a.toSeq == b.toSeq && b.toSeq == c.toSeq)
+  test("candidates equal a brute-force gram-containment scan of the docs store") {
+    import graft.core.Gram
+    val d = tmpDir("parity-web")
+    IndexBuild.build(spark, WebCorpus.generate(spark, 80, seed = 13L, partitions = 2), d,
+      IndexBuild.Config(nBuckets = 4, nRanges = 4, docParts = 2, shufflePartitions = 4))
+    assert(spark.read.parquet(IndexBuild.gramPostingsDir(d))
+      .select("range_id").distinct().count() > 1, "expected a multi-range index")
+    // every chunk's whole-word grams, straight from the docs store
+    val docGrams = spark.read.parquet(IndexBuild.docsDir(d)).select("doc_id", "chunk_text")
+      .collect().map(r => r.getLong(0) -> Gram.gramsSorted(partial = false, Seq(r.getString(1))))
+    def covering(args: Seq[String], partial: Boolean): Seq[Long] = {
+      val qg = Gram.gramsSorted(partial, args)
+      if (qg.isEmpty) Seq.empty
+      else docGrams.iterator.filter { case (_, g) =>
+        qg.forall(x => java.util.Arrays.binarySearch(g, x) >= 0)
+      }.map(_._1).toSeq.sorted
+    }
+    val s = new Search(spark, d)
+    val queries = Seq(Seq("the") -> false, Seq("the", "of") -> false,
+      Seq("and", "you", "that") -> false, Seq(WebCorpus.Vocab(60)) -> false,
+      Seq("zzqx") -> false, Seq("the", "zzqx") -> false,
+      Seq("ther") -> true, Seq("wit", "he") -> true)
+    queries.foreach { case (args, partial) =>
+      val got = s.candidates(args, partial).collect().map(_.getLong(0)).sorted.toSeq
+      assert(got == covering(args, partial), s"query $args partial=$partial")
+    }
+    // the queries exercise both outcomes: hits and an empty answer
+    assert(covering(Seq("the"), partial = false).nonEmpty)
+    assert(covering(Seq("zzqx"), partial = false).isEmpty)
   }
 
   test("search single term 'one' hits lines 1, 5, 6") {

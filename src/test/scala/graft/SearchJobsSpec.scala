@@ -6,19 +6,21 @@ import graft.sources.WebCorpus
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
-/** Exact Spark job counts of opening a Search and of its queries on a
-  * tombstone-free index: table reads use declared schemas, so no query runs
-  * a schema-inference job, and the relations are resolved once per Search.
+/** Exact Spark job counts of opening a Search and of its queries: table
+  * reads use declared schemas, so no query runs a schema-inference job, the
+  * relations are resolved once per Search, and a tombstoned index adds one
+  * bounded dead-id probe per Search, not per query.
   */
 class SearchJobsSpec extends SparkSuite {
   private val cfg = IndexBuild.Config(nBuckets = 4, nRanges = 2, docParts = 4,
     shufflePartitions = 4)
 
-  private lazy val dir = {
-    val d = tmpDir("jobs-idx")
+  private def built(name: String): String = {
+    val d = tmpDir(name)
     IndexBuild.build(spark, WebCorpus.generate(spark, 60, seed = 9L, partitions = 2), d, cfg)
     d
   }
+  private lazy val dir = built("jobs-idx")
 
   /** Spark jobs started by `f` on this thread (counted by job group). */
   private def jobs(f: => Unit): Int = {
@@ -60,5 +62,25 @@ class SearchJobsSpec extends SparkSuite {
       assert(first == 2, s"$name: $first jobs on the first run")
       assert(second == first, s"$name: $second jobs on the second run, $first on the first")
     }
+  }
+
+  test("a tombstoned index: opening, lookups and the first bm25TopK run at most 7 jobs") {
+    val d = built("jobs-tomb")
+    val urls = spark.read.parquet(IndexBuild.docsDir(d)).select("url").distinct()
+      .orderBy("url").collect().map(_.getString(0)).take(5).toSeq
+    graft.maint.Maintenance.delete(spark, d, urls)
+    var s: Search = null
+    val q = () => s.bm25TopK(Seq("the", "of"), 5, conjunctive = false).collect()
+    val first = jobs {
+      s = new Search(spark, d)
+      assert(s.dictLookup(Seq("the")).nonEmpty)
+      assert(s.gramDictLookup(graft.core.Gram.gramsSorted(partial = false, Seq("the")).toSeq).nonEmpty)
+      q()
+    }
+    // 3 jobs to open, 2 for the query, and the one bounded dead-id probe
+    assert(first <= 7, s"$first jobs")
+    assert(s.deadIds.exists(_.nonEmpty))
+    val again = jobs(q())
+    assert(again == 2, s"$again jobs on a repeat query")
   }
 }
