@@ -21,7 +21,7 @@ import graft.query.Search
 object SparkEntry {
 
   // bump when the on-disk index format changes (invalidates temp indexes)
-  private final val IndexFormatVersion = 8
+  private final val IndexFormatVersion = 9
   private val indexCache = scala.collection.concurrent.TrieMap.empty[String, String]
 
   private def docsTable(spark: SparkSession, dir: String): DataFrame =
@@ -118,7 +118,7 @@ object SparkEntry {
     indexCache.getOrElseUpdate(sfDir, {
       val dir = s"/tmp/graft_index_v${IndexFormatVersion}_" +
         sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "docstats.json"))) {
+      if (!graft.build.Manifest.exists(dir)) {
         val docs = docsTable(spark, sfDir).select(
           format_string("doc://%012d", col("doc_id")).as("url"),
           lit("2020-01-01 00:00:00").cast("timestamp").as("warc_ts"),
@@ -159,7 +159,7 @@ object SparkEntry {
     indexCache.getOrElseUpdate(sfDir + "#org", {
       val dir = s"/tmp/graft_index_v${IndexFormatVersion}_org_" +
         sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "docstats.json"))) {
+      if (!graft.build.Manifest.exists(dir)) {
         IndexBuild.build(spark, orgDocs(spark, sfDir), dir, IndexBuild.Config(
           nBuckets = 8, nRanges = 8, docParts = 8, shufflePartitions = 16,
           chunkMode = IndexBuild.ChunkMode.Org))

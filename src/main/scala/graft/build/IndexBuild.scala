@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, GraftBridge, 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.core.{Chunker, Gram, Postings, Tokenizer}
+import graft.build.Manifest.{Entry, Record}
 import java.sql.Timestamp
 
 /** Distributed inverted-index build: web docs table -> chunked + tokenized
@@ -30,8 +31,9 @@ import java.sql.Timestamp
   *   postings_terms/ bucket=N/ (term, range_id, first/last doc, stats, bytes)
   *   postings_grams/ bucket=N/ (gram, ...) — trigram candidate index
   *   dictionary/    (term, df, cf, max_tf);  gram_dict/ (gram, df)
-  *   docstats.json  n_docs, sum_dl, avgdl, range_size, build params
-  *   manifest.jsonl per-unit lineage + metrics
+  *   _graft_log/    commit log ([[Manifest]]): per-unit lineage + metrics,
+  *                  DocStats (n_docs, sum_dl, avgdl, range_size, params)
+  * A stage overwrites its units in place, then commits one record per unit.
   */
 object IndexBuild {
 
@@ -102,8 +104,8 @@ object IndexBuild {
     chunk_text: String, terms: Array[TermFreq], grams: Array[Int],
     explicit_grams: Array[Int] = null)
 
-  /** Engine stats + build params, persisted as `docstats.json`. Every
-    * writer after the build (update, addChunk) takes the index's own
+  /** Engine stats + build params, set by commit records ([[Manifest]]).
+    * Every writer after the build (update, addChunk) takes the index's own
     * parameters from here, never from the caller's [[Config]]:
     *  - `nextDocId` is the monotone id high-water mark (reference nextOID,
     *    fts-lmdb.go:855-867): incremental updates allocate fresh ids from
@@ -115,20 +117,12 @@ object IndexBuild {
     *  - `chunkMode` makes maintenance re-chunk changed documents with the
     *    SAME chunker the index was built with (the reference remembers
     *    each group's org flag, fts-lmdb.go:997-1006).
-    *  - `docParts == 0` means UNKNOWN (a docstats.json written before the
-    *    field existed) — scans must fall back to unpruned, never guess:
-    *    pruning with a wrong modulus silently matches nothing.
+    *  - `docParts` is the docs store's docpart modulus.
     */
   final case class DocStats(nDocs: Long, sumDl: Long, avgdl: Double,
                             rangeSize: Long, nBuckets: Int, nRanges: Int,
                             k1: Double, b: Double, watermark: String,
-                            nextDocId: Long, docParts: Int = 0,
-                            chunkMode: String = ChunkMode.Lines) {
-    /** The docpart modulus for NEW rows: the persisted one, or `legacy`
-      * when a pre-field docstats.json left it unknown.
-      */
-    def docPartsOr(legacy: Int): Int = if (docParts > 0) docParts else legacy
-  }
+                            nextDocId: Long, docParts: Int, chunkMode: String)
 
   final case class BuildStats(nDocs: Long, nChunkParts: Int, nTermBuckets: Int,
                               nGramBuckets: Int, resumedChunks: Int,
@@ -240,8 +234,8 @@ object IndexBuild {
     * second job's tasks back-fill executors freed by the first job's tail).
     * Exceptions from any branch propagate; all branches are joined before
     * returning either way, so crash/resume semantics per branch are
-    * unchanged (each stage still commits its own manifest entry after its
-    * own job completes).
+    * unchanged (each stage still commits its own records after its own job
+    * completes).
     */
   private[graft] def inParallel(fs: (() => Unit)*): Unit = {
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
@@ -257,24 +251,25 @@ object IndexBuild {
   def build(spark: SparkSession, docs: DataFrame, dir: String,
             cfg: Config = Config()): BuildStats = {
     spark.conf.set("spark.sql.files.maxPartitionBytes", cfg.maxPartitionBytes.toString)
-    val resumedChunks = stageChunks(spark, docs, dir, cfg)
-    val stats = stageIds(spark, dir, cfg)
+    val log = Manifest.open(dir)
+    val resumedChunks = stageChunks(spark, docs, dir, cfg, log)
+    val stats = stageIds(spark, dir, cfg, log)
     // the scratch is consumed the moment the id-stamped docs store commits
     // — dropping it HERE (not at the end) halves the build's peak storage;
     // the posting stages read the docs store (doc ids already stamped, no
     // url-base join) and re-derive token arrays from chunk text
-    stageCleanup(spark, dir)
+    stageCleanup(dir, log)
     // term + gram posting builds are independent (separate scans, separate
-    // shuffles, separate output dirs, separate manifest stages) — OVERLAP
+    // shuffles, separate output dirs, separate log stages) — OVERLAP
     // them so each one's kernel-stage stragglers back-fill with the other's
     // tasks instead of idling the cluster (guide §2.6). Trade-off at scale:
     // both families' shuffles are in flight at once (2x transient shuffle
     // disk); kernel memory bounds are per-task and unchanged.
     var resumedTerm = 0
     inParallel(
-      () => resumedTerm = stagePostings(spark, dir, cfg, stats, grams = false),
-      () => stagePostings(spark, dir, cfg, stats, grams = true))
-    stageDictionary(spark, dir)
+      () => resumedTerm = stagePostings(spark, dir, cfg, stats, grams = false, log),
+      () => stagePostings(spark, dir, cfg, stats, grams = true, log))
+    stageDictionary(spark, dir, log)
     BuildStats(stats.nDocs, cfg.docParts, cfg.nBuckets, cfg.nBuckets,
       resumedChunks, resumedTerm)
   }
@@ -287,24 +282,18 @@ object IndexBuild {
     * without duplicate copies of the corpus. Resume is unaffected: every
     * stage after `ids` reads the docs store.
     */
-  private def stageCleanup(spark: SparkSession, dir: String): Unit = {
-    if (Manifest.completed(dir, "cleanup")("all")) return
-    val t0 = System.nanoTime()
-    // quiet: a crash between the delete and the manifest append leaves the
-    // dir already gone on the resumed run
-    org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(chunksDir(dir)))
-    Manifest.append(dir, Manifest.Entry("cleanup", "all", 0L, 0L, "",
-      (System.nanoTime() - t0) / 1000000))
-  }
+  private def stageCleanup(dir: String, log: Manifest.State): Unit =
+    if (!log.completed("cleanup")("all"))
+      Manifest.commitStaged(dir)(_ =>
+        Record(Some(Entry("cleanup", "all", 0L, 0L, "", 0L)), removes = Seq(ChunksTable.name)))
 
   /** Stage 1 — chunk + tokenize, partitioned by docpart = hash(url).
     * Resume unit: docpart. Completed parts are never re-read/re-tokenized.
     */
   private[graft] def stageChunks(spark: SparkSession, docs: DataFrame, dir: String,
-                          cfg: Config): Int = {
+                          cfg: Config, log: Manifest.State): Int = {
     import spark.implicits._
-    val done = Manifest.completed(dir, "chunks")
+    val done = log.completed("chunks")
     val missing = (0 until cfg.docParts).filterNot(p => done(p.toString))
     if (missing.isEmpty) return cfg.docParts
     val t0 = System.nanoTime()
@@ -326,9 +315,9 @@ object IndexBuild {
     val wallMs = (System.nanoTime() - t0) / 1000000
     // per-unit row counts + per-PART watermarks in one small scan of the
     // fresh chunk store (count is footer metadata; max(warc_ts) reads one
-    // tiny column). Each docpart's manifest entry records its own true max
-    // — the manifest is the durable audit record, and a batch-global max
-    // would overstate parts whose real watermark is lower.
+    // tiny column). Each docpart's record holds its own true max — the
+    // log is the durable audit record, and a batch-global max would
+    // overstate parts whose real watermark is lower.
     val stats = readTable(spark, dir, ChunksTable)
       .where(col("docpart").isin(missing: _*))
       .groupBy("docpart").agg(count(lit(1)).as("rows"),
@@ -339,8 +328,7 @@ object IndexBuild {
     missing.foreach { p =>
       val (rows, wm) = byPart.getOrElse(p, (0L, ""))
       val bytes = dirBytes(s"${chunksDir(dir)}/docpart=$p")
-      Manifest.append(dir, Manifest.Entry("chunks", p.toString, rows, bytes,
-        wm, wallMs / missing.size))
+      Manifest.commit(dir, Record(Some(Entry("chunks", p.toString, rows, bytes, wm, wallMs / missing.size))))
     }
     done.size
   }
@@ -429,9 +417,10 @@ object IndexBuild {
     * storage-partitioned join on the shared hash(url) bucketing with no
     * big-side shuffle either.
     */
-  private[graft] def stageIds(spark: SparkSession, dir: String, cfg: Config): DocStats = {
+  private[graft] def stageIds(spark: SparkSession, dir: String, cfg: Config,
+                              log: Manifest.State): DocStats = {
     import spark.implicits._
-    if (Manifest.completed(dir, "ids")("all")) return readDocStats(dir)
+    if (log.completed("ids")("all")) return log.docStats(dir)
     val t0 = System.nanoTime()
     val chunks = readTable(spark, dir, ChunksTable)
     val (withIds, cleanup) = assignIds(spark, chunks, 0L, cfg)
@@ -459,9 +448,8 @@ object IndexBuild {
     val stats = DocStats(nDocs, sumDl, if (n == 0) 1.0 else sumDl.toDouble / n,
       rangeSize, cfg.nBuckets, nRangesEff, cfg.k1, cfg.b, wm, nextDocId = nDocs,
       docParts = cfg.docParts, chunkMode = cfg.chunkMode)
-    writeDocStats(dir, stats)
-    Manifest.append(dir, Manifest.Entry("ids", "all", n, 0L, wm,
-      (System.nanoTime() - t0) / 1000000))
+    Manifest.commit(dir, Record(Some(Entry("ids", "all", n, 0L, wm,
+      (System.nanoTime() - t0) / 1000000)), stats = Some(stats)))
     stats
   }
 
@@ -733,11 +721,11 @@ object IndexBuild {
 
   /** Stage 3/4 — posting segments. Resume unit: bucket. */
   private[graft] def stagePostings(spark: SparkSession, dir: String, cfg: Config,
-                            stats: DocStats, grams: Boolean): Int = {
+                            stats: DocStats, grams: Boolean, log: Manifest.State): Int = {
     import spark.implicits._
     val table = if (grams) GramPostingsTable else TermPostingsTable
     val stage = table.name
-    val done = Manifest.completed(dir, stage)
+    val done = log.completed(stage)
     val missing = (0 until stats.nBuckets).filterNot(b => done(b.toString))
     if (missing.isEmpty) return stats.nBuckets
     val t0 = System.nanoTime()
@@ -752,32 +740,32 @@ object IndexBuild {
       .collect().map(r => r.getInt(0) -> (r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2))).toMap
     missing.foreach { bkt =>
       val (rows, bytes) = m.getOrElse(bkt, (0L, 0L))
-      Manifest.append(dir, Manifest.Entry(stage, bkt.toString, rows, bytes,
-        stats.watermark, wallMs / missing.size))
+      Manifest.commit(dir, Record(Some(Entry(stage, bkt.toString, rows, bytes,
+        stats.watermark, wallMs / missing.size))))
     }
     done.size
   }
 
   /** Stage 5 — the dictionaries ([[writeDictionaries]]). */
-  private[graft] def stageDictionary(spark: SparkSession, dir: String): Unit = {
-    if (Manifest.completed(dir, "dictionary")("all")) return
+  private[graft] def stageDictionary(spark: SparkSession, dir: String,
+                                     log: Manifest.State): Unit = {
+    if (log.completed("dictionary")("all")) return
     val t0 = System.nanoTime()
-    val n = writeDictionaries(spark, dir)(_.write.mode("overwrite").parquet(_))
-    Manifest.append(dir, Manifest.Entry("dictionary", "all", n, 0L, "",
-      (System.nanoTime() - t0) / 1000000))
+    val n = writeDictionaries(spark, dir, dir)
+    Manifest.commit(dir, Record(Some(Entry("dictionary", "all", n, 0L, "",
+      (System.nanoTime() - t0) / 1000000))))
   }
 
   /** The dictionary derivation of the build and of every maintenance
     * writer: (term, df, cf, max_tf) and (gram, df) aggregated from segment
     * *metadata* only (the postings binary column is pruned from the scan),
     * so it is exact over any mix of built, appended and spliced segments.
-    * Each frame goes to `write(frame, targetDir)`; the term and gram
-    * dictionaries aggregate DIFFERENT posting tables into DIFFERENT dirs,
-    * so their two write jobs run concurrently (§2.6). Returns the number
-    * of terms.
+    * Both dictionaries are overwritten under `root` (the index dir for the
+    * build, a staging dir for maintenance); they aggregate DIFFERENT
+    * posting tables into DIFFERENT dirs, so their two write jobs run
+    * concurrently (§2.6). Returns the number of terms.
     */
-  private[graft] def writeDictionaries(spark: SparkSession, dir: String)(
-      write: (DataFrame, String) => Unit): Long = {
+  private[graft] def writeDictionaries(spark: SparkSession, dir: String, root: String): Long = {
     import spark.implicits._
     // (name, df, extra...) per key of one posting table, sorted by key
     def derive(postings: Table, key: Column, name: String, extra: Column*) =
@@ -786,41 +774,14 @@ object IndexBuild {
         .repartitionByRange(8, col(name)).sortWithinPartitions(name)
     val obs = org.apache.spark.sql.Observation()
     inParallel(
-      () => write(derive(TermPostingsTable, $"key", "term",
+      () => derive(TermPostingsTable, $"key", "term",
           sum($"sum_tf").as("cf"), max($"max_tf").as("max_tf"))
-        .observe(obs, count(lit(1)).as("n")), dictDir(dir)),
-      () => write(derive(GramPostingsTable, gramCode($"key"), "gram"),
-        gramDictDir(dir)))
+        .observe(obs, count(lit(1)).as("n"))
+        .write.mode("overwrite").parquet(DictTable.path(root)),
+      () => derive(GramPostingsTable, gramCode($"key"), "gram")
+        .write.mode("overwrite").parquet(GramDictTable.path(root)))
     obs.get("n").asInstanceOf[Long]
   }
 
-  def writeDocStats(dir: String, s: DocStats): Unit = {
-    val json =
-      s"""{"n_docs":${s.nDocs},"sum_dl":${s.sumDl},"avgdl":${s.avgdl},""" +
-        s""""range_size":${s.rangeSize},"n_buckets":${s.nBuckets},""" +
-        s""""n_ranges":${s.nRanges},"k1":${s.k1},"b":${s.b},""" +
-        s""""next_doc_id":${s.nextDocId},"doc_parts":${s.docParts},""" +
-        s""""chunk_mode":"${s.chunkMode}","watermark":"${s.watermark}"}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "docstats.json"),
-      json.getBytes("UTF-8"))
-  }
-
-  def readDocStats(dir: String): DocStats = {
-    val s = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, "docstats.json")), "UTF-8")
-    def num(k: String): String =
-      (s""""$k":([-0-9.eE]+)""").r.findFirstMatchIn(s).get.group(1)
-    def numOpt(k: String): Option[String] =
-      (s""""$k":([-0-9.eE]+)""").r.findFirstMatchIn(s).map(_.group(1))
-    def str(k: String): String =
-      (s""""$k":"([^"]*)"""").r.findFirstMatchIn(s).map(_.group(1)).getOrElse("")
-    DocStats(num("n_docs").toLong, num("sum_dl").toLong, num("avgdl").toDouble,
-      num("range_size").toLong, num("n_buckets").toInt, num("n_ranges").toInt,
-      num("k1").toDouble, num("b").toDouble, str("watermark"),
-      nextDocId = numOpt("next_doc_id").map(_.toLong)
-        .getOrElse(num("n_docs").toLong),
-      docParts = numOpt("doc_parts").map(_.toInt).getOrElse(0),
-      chunkMode = Some(str("chunk_mode")).filter(_.nonEmpty)
-        .getOrElse(ChunkMode.Lines))
-  }
+  def readDocStats(dir: String): DocStats = Manifest.state(dir).docStats(dir)
 }

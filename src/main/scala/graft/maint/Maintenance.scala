@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.build.{IndexBuild, Manifest}
+import graft.build.Manifest.{Entry, Record}
 import graft.build.IndexBuild.{DocsTable, Table, readTable}
 import graft.core.Postings
 
@@ -23,19 +24,23 @@ import graft.core.Postings
   *    old group tombstoned, re-added with fresh OIDs, openInputFile
   *    fts-lmdb.go:533-544), delta posting segments appended per
   *    (key, range_id), dictionary merged. Work is O(delta); untouched
-  *    chunk/posting files are never rewritten. Every append stage is
-  *    guarded by a manifest entry keyed by the delta hash, so a killed
-  *    update resumes without duplicating ids or postings.
+  *    chunk/posting files are never rewritten. Every append stage commits
+  *    one record keyed by the delta hash, so a killed update resumes
+  *    without duplicating ids or postings.
   *  - compact(): drop every tombstoned (url, warc_ts) version from the
   *    chunk store and rebuild the derived stages — the reference's 3-scan
   *    space reclamation; ids re-densify, avgdl/df refresh.
+  *
+  * Every write is one staged commit of the log ([[Manifest]]). Each
+  * operation starts with [[Manifest.open]], which finishes any publish a
+  * crash cut short, and reads its state from that one fold.
   *
   * Stats freshness matches the reference: after update, nDocs/df still
   * count tombstoned postings (idf base), and avgdl / rangeSize / k1 / b are
   * FROZEN (posting block-max bounds were built with them) until compact.
   *
   * Appends take the index's parameters (bucket count, k1/b, chunk mode,
-  * docParts) from its docstats.json, not from the caller's `cfg`: docpart =
+  * docParts) from its committed DocStats, not from the caller's `cfg`: docpart =
   * hash(url) % docParts addresses the docs store, and the buckets and
   * block maxima must match what queries prune to and score with.
   */
@@ -47,16 +52,15 @@ object Maintenance {
     */
   private[graft] val TombstonesTable = Table("tombstones",
     StructType.fromDDL("url STRING, warc_ts TIMESTAMP, doc_id BIGINT"), optional = true)
-  /** [[compact]]'s stash of tombstones to re-apply after a resumed rebuild. */
-  private[graft] val StashTable = TombstonesTable.copy(name = "tombstones_reapply")
   private[graft] val EmptyGroupsTable = Table("empty_groups",
     StructType.fromDDL("url STRING"), optional = true)
 
-  /** Stage names appended by update(); invalidated on compact. upd_docs is
-    * LAST: the docs store is the diff source, so appending it commits the
-    * whole update (a re-run after that is a no-op).
+  /** The stages compact resets: the build stages its rebuild re-runs, the
+    * append counters, and update's stages (upd_docs is LAST: the docs store
+    * is the diff source, so appending it commits the whole update).
     */
-  private val UpdateStages = Seq("upd_stats", "upd_postings_terms",
+  private val DerivedStages = Seq("ids", "postings_terms", "postings_grams", "dictionary",
+    "cleanup", "seg_merge", "chunk_add", "upd_stats", "upd_postings_terms",
     "upd_postings_grams", "upd_dict", "upd_docs")
 
   /** Target delta chunks per shuffle partition for [[update]]'s adaptive
@@ -74,7 +78,8 @@ object Maintenance {
   /** M1: tombstone groups by url (reference cmdDelete). */
   def delete(spark: SparkSession, dir: String, urls: Seq[String]): Unit = {
     import spark.implicits._
-    tombstoneDocsOf(spark, dir, urls.toDF("url"))
+    tombstoneRows(spark, dir, batchDocs(spark, dir, Manifest.open(dir).docStats(dir),
+      urls.toDF("url")))
   }
 
   /** Docs-store rows of `urls`, with the scan pruned to the urls' docparts
@@ -83,35 +88,25 @@ object Maintenance {
     * of the store, never all of it. The distinct-docpart collect is bounded
     * by docParts values.
     */
-  private[graft] def docsOfUrls(spark: SparkSession, dir: String,
-                                urls: DataFrame): DataFrame =
-    docsOfUrls(readTable(spark, dir, DocsTable),
-      IndexBuild.readDocStats(dir).docParts, urls)
-
-  /** [[docsOfUrls]] over an already-resolved docs relation. */
   private[graft] def docsOfUrls(docs: DataFrame, docParts: Int,
                                 urls: DataFrame): DataFrame = {
     val u = urls.select("url").distinct()
-    // docParts unknown (legacy docstats.json): pruning with a guessed
-    // modulus would select partitions the urls are NOT in and silently
-    // match nothing — fall back to the unpruned join
-    if (docParts <= 0) return docs.join(u, Seq("url"))
     val parts = u.select(pmod(xxhash64(col("url")), lit(docParts)).cast("int"))
       .distinct().collect().map(_.getInt(0))
     docs.where(col("docpart").isin(parts.toSeq: _*)).join(u, Seq("url"))
   }
 
-  /** Append tombstone rows for all not-yet-tombstoned doc rows of `urls`.
-    * Idempotent: re-running tombstones nothing new (anti-join on doc_id).
+  /** The (url, warc_ts, doc_id) docs-store rows of `urls`, docpart-pruned
+    * ([[docsOfUrls]]).
     */
-  private def tombstoneDocsOf(spark: SparkSession, dir: String,
-                              urls: DataFrame): Long =
-    tombstoneRows(spark, dir, docsOfUrls(spark, dir, urls)
-      .select(col("url"), col("warc_ts"), col("doc_id")))
+  private def batchDocs(spark: SparkSession, dir: String, stats: IndexBuild.DocStats,
+                        urls: DataFrame): DataFrame =
+    docsOfUrls(readTable(spark, dir, DocsTable), stats.docParts, urls)
+      .select(col("url"), col("warc_ts"), col("doc_id"))
 
-  /** [[tombstoneDocsOf]] over an already-resolved (url, warc_ts, doc_id)
-    * frame — lets [[update]] reuse its diff pass's docpart-pruned batch
-    * scan instead of scanning the docs store a second time.
+  /** Append tombstone rows for the not-yet-tombstoned ones of (url,
+    * warc_ts, doc_id) `docRows`. Idempotent: re-running tombstones nothing
+    * new (anti-join on doc_id).
     */
   private def tombstoneRows(spark: SparkSession, dir: String,
                             docRows: DataFrame): Long = {
@@ -122,7 +117,10 @@ object Maintenance {
       .select(col("url"), col("warc_ts"), col("doc_id"))
       .cache()
     val n = rows.count()
-    if (n > 0) rows.write.mode("append").parquet(TombstonesTable.path(dir))
+    if (n > 0) Manifest.commitStaged(dir) { stg =>
+      rows.write.mode("append").parquet(TombstonesTable.path(stg))
+      Record(None)
+    }
     rows.unpersist()
     n
   }
@@ -138,13 +136,17 @@ object Maintenance {
     */
   def emptyGroups(spark: SparkSession, dir: String, urls: Seq[String]): Long = {
     import spark.implicits._
+    Manifest.open(dir)
     val docsUrls = readTable(spark, dir, DocsTable).select("url").distinct()
     val toAdd = urls.toDF("url").distinct()
       .join(emptyGroupUrls(spark, dir), Seq("url"), "left_anti")
       .join(docsUrls, Seq("url"), "left_anti")
       .cache()
     val n = toAdd.count()
-    if (n > 0) toAdd.write.mode("append").parquet(EmptyGroupsTable.path(dir))
+    if (n > 0) Manifest.commitStaged(dir) { stg =>
+      toAdd.write.mode("append").parquet(EmptyGroupsTable.path(stg))
+      Record(None)
+    }
     toAdd.unpersist()
     n
   }
@@ -157,28 +159,21 @@ object Maintenance {
     * build's chunk-scratch layout), then rebuild ids/postings/dictionary
     * via the normal build stages (ids re-densify, stats refresh, scratch
     * dropped again at the end).
-    */
-  /** Compact is crash-safe via a `compacting` manifest marker: the marker
-    * is appended only after the kept-rows rewrite has fully committed, and
-    * removed only after the derived rebuild completes. Re-running compact
-    * with the marker pending skips straight to the (idempotent) swap +
-    * rebuild — a crash anywhere between "tombstones deleted" and "derived
-    * state rebuilt" is recoverable by calling compact() again, which the
-    * pre-marker version of this path could not do (tombstones-empty made
-    * the re-run a no-op while docs/postings were already gone).
     *
-    * Read correctness DURING a crashed compact: the tombstones dir is
-    * removed strictly after the stale docs store, so there is no state in
-    * which the old docs store is readable without its tombstones — searches
-    * between a crash and the compact re-run either see the correct
-    * tombstone-filtered view or fail fast on the missing docs dir.
+    * The swap record stages the kept rows as the chunk scratch, resets
+    * every derived stage and removes the docs store, the tombstones and
+    * the derived tables; its `compact` entry marks the compact unfinished
+    * ([[Manifest.State.compactPending]]) until the final record resets it. A crash before
+    * the swap leaves the old index intact (a re-run starts over); after it,
+    * a re-run resumes the rebuild. Publish removes the tombstones once, so
+    * a delete issued during a crashed rebuild survives the re-run. Publish
+    * removes the docs store before the tombstones, so a search during a
+    * crashed compact sees the tombstone-filtered view or fails fast on the
+    * missing docs dir, never resurrected documents.
     */
   def compact(spark: SparkSession, dir: String, cfg: IndexBuild.Config): Unit = {
     import spark.implicits._
-    val fs = java.nio.file.Paths.get(dir)
-    val tmp = s"$dir/chunks_compacting"
-    val pending = Manifest.completed(dir, "compacting")("swap")
-    if (!pending) {
+    if (!Manifest.open(dir).compactPending) {
       val t = tombstones(spark, dir)
       if (t.isEmpty) return
       val docs = readTable(spark, dir, DocsTable)
@@ -187,74 +182,20 @@ object Maintenance {
       // their own column), so compaction is an anti-join + rewrite
       val kept = docs.join(t.select("url", "warc_ts").distinct(),
           Seq("url", "warc_ts"), "left_anti")
-        .select($"url", $"warc_ts", $"lang", $"docpart", $"chunk_seq", $"line",
-          $"rune_off", $"rune_len", $"byte_start", $"byte_len", $"dl",
-          $"n_grams", $"chunk_text", $"explicit_grams")
-      kept.write.mode("overwrite").partitionBy("docpart").parquet(tmp)
-      // the marker is the commit point: before it, a crash leaves the old
-      // index fully intact (re-run starts over); after it, a re-run resumes
-      // below without needing the (soon-deleted) tombstones
-      Manifest.append(dir, Manifest.Entry("compacting", "swap", 0L, 0L, "", 0L))
+        .select(IndexBuild.ChunksTable.schema.fieldNames.map(col).toIndexedSeq: _*)
+      Manifest.commitStaged(dir) { stg =>
+        kept.write.mode("overwrite").partitionBy("docpart").parquet(IndexBuild.chunksDir(stg))
+        Record(Some(Entry("compact", "swap", 0L, 0L, "", 0L)),
+          resets = DerivedStages,
+          removes = Seq(DocsTable, TombstonesTable, IndexBuild.ChunksTable,
+            IndexBuild.TermPostingsTable, IndexBuild.GramPostingsTable,
+            IndexBuild.DictTable, IndexBuild.GramDictTable).map(_.name))
+      }
     }
-    // swap (idempotent: guarded by the tmp dir's existence — on a resumed
-    // run after the move, chunks/ already holds the compacted rows)
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(tmp))) {
-      org.apache.commons.io.FileUtils.deleteQuietly(fs.resolve("chunks").toFile)
-      java.nio.file.Files.move(fs.resolve("chunks_compacting"), fs.resolve("chunks"))
-    }
-    // Tombstones present on a RESUMED run may include deletes issued AFTER
-    // the marker (between the crash and this re-run) — never applied to the
-    // compacted snapshot. Stash them and re-apply by (url, warc_ts) after
-    // the rebuild: pre-compact tombstones' versions no longer exist in the
-    // compacted store (re-apply is a no-op for them), late deletes
-    // re-resolve their doc ids against the fresh id space.
-    val stashP = java.nio.file.Paths.get(StashTable.path(dir))
-    def stashOrDropTombstones(): Unit =
-      if (pending && java.nio.file.Files.exists(fs.resolve("tombstones"))) {
-        if (!java.nio.file.Files.exists(stashP))
-          java.nio.file.Files.move(fs.resolve("tombstones"), stashP)
-        else
-          // a previous resume already stashed; the stash stays the source of
-          // truth — drop the partially re-applied rows and redo from it
-          org.apache.commons.io.FileUtils.deleteQuietly(fs.resolve("tombstones").toFile)
-      } else
-        org.apache.commons.io.FileUtils.deleteQuietly(fs.resolve("tombstones").toFile)
-    if (java.nio.file.Files.exists(
-        java.nio.file.Paths.get(IndexBuild.chunksDir(dir)))) {
-      // chunk scratch present: it is the corpus source — drop the derived
-      // state and rebuild from it. ORDER MATTERS for crash safety: the
-      // tombstones are removed only AFTER the stale docs store is gone, so
-      // a crash anywhere before this point leaves reads tombstone-filtered
-      // (old docs + tombstones = correct live view); after it, a read fails
-      // loudly on the missing docs dir instead of silently resurrecting
-      // deleted documents.
-      org.apache.commons.io.FileUtils.deleteQuietly(fs.resolve("docs").toFile)
-      stashOrDropTombstones()
-      // counters/pending markers reset with the derived state
-      (Seq("ids", "postings_terms", "postings_grams", "dictionary", "cleanup",
-        "seg_merge", "chunk_add", "dict_pending") ++ UpdateStages)
-        .foreach(Manifest.invalidateStage(dir, _))
-    } else
-      // mid-rebuild resume (scratch already consumed): the docs store is
-      // the compacted corpus; any tombstones here are late deletes against
-      // the new id space — stash them for the post-rebuild re-apply
-      stashOrDropTombstones()
-    // else: the crash happened MID-REBUILD, after the ids stage committed
-    // the docs store and cleanup deleted the scratch (cleanup only runs
-    // once ids is durable, IndexBuild.build ordering) — the docs store is
-    // the one surviving corpus copy. Deleting it here would destroy the
-    // index; instead keep every completed stage's manifest state and let
-    // rebuildDerived resume the remaining stages bucket-level.
-    rebuildDerived(spark, dir, cfg)
-    if (java.nio.file.Files.exists(stashP)) {
-      val stash = readTable(spark, dir, StashTable)
-      val rows = docsOfUrls(spark, dir, stash.select("url"))
-        .join(stash.select("url", "warc_ts").distinct(), Seq("url", "warc_ts"))
-        .select(col("url"), col("warc_ts"), col("doc_id"))
-      if (!rows.isEmpty) rows.write.mode("append").parquet(TombstonesTable.path(dir))
-      org.apache.commons.io.FileUtils.deleteQuietly(stashP.toFile)
-    }
-    Manifest.invalidateStage(dir, "compacting")
+    // re-run the build with chunks complete: only derived stages execute
+    IndexBuild.build(spark, IndexBuild.emptyTable(spark, IndexBuild.ChunksTable)
+      .select(col("url"), col("warc_ts"), col("lang"), col("chunk_text").as("text")), dir, cfg)
+    Manifest.commit(dir, Record(None, resets = Seq("compact")))
   }
 
   /** M3 `-t` dry run (reference cmdUpdate print-plan, fts-lmdb.go:987-1026):
@@ -264,37 +205,29 @@ object Maintenance {
   def updatePlan(spark: SparkSession, dir: String, newDocs: DataFrame,
                  cfg: IndexBuild.Config,
                  partialSnapshot: Boolean = false): DataFrame =
-    diffVersions(spark, dir, newDocs, cfg, partialSnapshot)
+    diffVersions(spark, dir, newDocs,
+      if (partialSnapshot) Some(batchDocs(spark, dir, IndexBuild.readDocStats(dir), newDocs))
+      else None)
       .select(col("url"), col("action"))
 
   /** Diff the incoming snapshot against the live indexed view. Output:
     * (url, n_ts, action) where action in added|changed|deleted (n_ts null
-    * for deleted). `partialSnapshot=true` treats `newDocs` as a changelog
-    * batch: urls absent from it are NOT deleted, and the chunk-store scan
-    * is pruned to the batch's docparts.
+    * for deleted). `batchRows` (the changelog batch urls' doc rows,
+    * [[batchDocs]]) treats `newDocs` as a changelog batch: urls absent from
+    * it are NOT deleted, and the chunk-store scan is pruned to the batch's
+    * docparts — [[update]] caches ONE such scan and shares it with the
+    * tombstone pass. `None` diffs a full snapshot.
     */
   private def diffVersions(spark: SparkSession, dir: String, newDocs: DataFrame,
-                           cfg: IndexBuild.Config,
-                           partialSnapshot: Boolean,
-                           /** partial mode: a prepared (url, warc_ts,
-                             * doc_id) frame of the batch urls' doc rows —
-                             * [[update]] caches ONE docpart-pruned scan and
-                             * shares it with the tombstone pass. */
-                           batchRows: Option[DataFrame] = None): DataFrame = {
+                           batchRows: Option[DataFrame]): DataFrame = {
     import spark.implicits._
+    val partialSnapshot = batchRows.isDefined
     val incoming = newDocs
       .select($"url".as("n_url"), $"warc_ts".as("n_ts"))
     val tomb = tombstones(spark, dir).select($"url", $"warc_ts").distinct()
-    val chunkVersions =
-      if (!partialSnapshot)
-        readTable(spark, dir, DocsTable).select($"url", $"warc_ts")
-      else
-        // changelog batch: only the batch urls' docparts can contain them —
-        // one shared docpart-pruned scan (docsOfUrls, which also carries
-        // the legacy-docstats unpruned fallback)
-        batchRows.getOrElse(
-            docsOfUrls(spark, dir, incoming.select($"n_url".as("url"))))
-          .select($"url", $"warc_ts")
+    val chunkVersions = batchRows
+      .getOrElse(readTable(spark, dir, DocsTable))
+      .select($"url", $"warc_ts")
     // one row per url: the group's current version is its newest live
     // timestamp (addChunk can add rows under a newer ts without making a
     // new "version"; reference lastChanged is likewise the most recent)
@@ -319,18 +252,17 @@ object Maintenance {
              cfg: IndexBuild.Config,
              partialSnapshot: Boolean = false): (Long, Long, Long) = {
     import spark.implicits._
+    val log = Manifest.open(dir)
+    val stats0 = log.docStats(dir)
     // partial mode: ONE cached docpart-pruned scan of the batch urls' doc
     // rows feeds BOTH the version diff and the stale-row tombstone pass
     // (round 5 scanned the docs store twice). Bounded by the batch size —
     // never cached in full-snapshot mode, where it would be the whole
     // store.
     val batchRows =
-      if (partialSnapshot)
-        Some(docsOfUrls(spark, dir, newDocs.select("url"))
-          .select(col("url"), col("warc_ts"), col("doc_id")).cache())
+      if (partialSnapshot) Some(batchDocs(spark, dir, stats0, newDocs).cache())
       else None
-    val diff = diffVersions(spark, dir, newDocs, cfg, partialSnapshot,
-      batchRows).cache()
+    val diff = diffVersions(spark, dir, newDocs, batchRows).cache()
     // ONE job for the three action counts AND the delta batch key (round 5
     // ran a groupBy-count job plus a separate bit_xor job; at changelog
     // scale each driver job is pure latency). bit_xor skips the NULLs the
@@ -342,21 +274,21 @@ object Maintenance {
       count(when($"action" === "changed", 1)).as("nc"),
       expr("bit_xor(CASE WHEN action IN ('added','changed') THEN " +
         "xxhash64(url, CAST(n_ts AS string)) END)").as("h")).head()
-    val nDeleted = cRow.getLong(0)
-    val nNew = cRow.getLong(1)
-    val nChanged = cRow.getLong(2)
+    val (nDeleted, nNew, nChanged) = (cRow.getLong(0), cRow.getLong(1), cRow.getLong(2))
     if (nDeleted + nNew + nChanged == 0) {
-      diff.unpersist(); batchRows.foreach(_.unpersist()); return (0, 0, 0)
+      diff.unpersist(); batchRows.foreach(_.unpersist())
+      // a re-run after a crash past upd_docs: finish its segment merge
+      autoMergeIfNeeded(spark, dir, cfg.autoMergeSegments, log, appended = 0)
+      return (0, 0, 0)
     }
 
     // 1. tombstone every stale version (changed urls' old docs + deleted
     //    urls) — naturally idempotent, no guard needed
     val staleUrls = diff.where($"action".isin("changed", "deleted")).select($"url")
-    batchRows match {
-      case Some(rows) =>
-        tombstoneRows(spark, dir, rows.join(staleUrls.distinct(), Seq("url")))
-      case None => tombstoneDocsOf(spark, dir, staleUrls)
-    }
+    tombstoneRows(spark, dir, batchRows match {
+      case Some(rows) => rows.join(staleUrls.distinct(), Seq("url"))
+      case None => batchDocs(spark, dir, stats0, staleUrls)
+    })
 
     val delta = diff.where($"action".isin("added", "changed"))
       .select($"url", $"n_ts")
@@ -375,15 +307,12 @@ object Maintenance {
 
     // 2. chunk + tokenize the delta only, with the index's own chunker
     //    and docpart modulus (docsOfUrls prunes with the persisted one)
-    val stats0 = IndexBuild.readDocStats(dir)
-    val chunkMode = stats0.chunkMode
-    val docParts = stats0.docPartsOr(cfg.docParts)
     val deltaChunks = newDocs.join(delta.select($"url"), Seq("url"))
-      .withColumn("docpart", pmod(xxhash64($"url"), lit(docParts)).cast("int"))
+      .withColumn("docpart", pmod(xxhash64($"url"), lit(stats0.docParts)).cast("int"))
       .select($"url", $"warc_ts", $"lang", $"text", $"docpart")
       .as[(String, java.sql.Timestamp, String, String, Int)]
       .flatMap { case (url, ts, lang, text, part) =>
-        IndexBuild.chunkDocMeta(url, ts, lang, part, text, chunkMode)
+        IndexBuild.chunkDocMeta(url, ts, lang, part, text, stats0.chunkMode)
       }.toDF().cache()
     val aggRow = deltaChunks.agg(count(lit(1)), sum($"dl".cast("long")),
       max($"warc_ts").cast("string")).head()
@@ -396,34 +325,34 @@ object Maintenance {
     val deltaSumDl = if (aggRow.isNullAt(1)) 0L else aggRow.getLong(1)
     val deltaWm = if (aggRow.isNullAt(2)) "" else aggRow.getString(2)
 
-    val statsDone = Manifest.completed(dir, "upd_stats")(deltaKey)
+    val done = (stage: String) => log.completed(stage)(deltaKey)
     // ids are reserved by the upd_stats stage; on resume, recover the base
     // from the (deterministic) delta size
-    val base = if (statsDone) stats0.nextDocId - nDeltaChunks else stats0.nextDocId
-    def guarded(stage: String)(f: => Long): Unit =
-      if (!Manifest.completed(dir, stage)(deltaKey)) {
+    val base = if (done("upd_stats")) stats0.nextDocId - nDeltaChunks else stats0.nextDocId
+    def guarded(stage: String)(write: String => Unit): Unit =
+      if (!done(stage)) Manifest.commitStaged(dir) { stg =>
         val t0 = System.nanoTime()
-        val rows = f
-        Manifest.append(dir, Manifest.Entry(stage, deltaKey, rows, 0L, deltaWm,
-          (System.nanoTime() - t0) / 1000000))
+        write(stg)
+        Record(Some(Entry(stage, deltaKey, nDeltaChunks, 0L, deltaWm,
+          (System.nanoTime() - t0) / 1000000)))
       }
 
     // 3. reserve ids + advance stats BEFORE any id-consuming append, so a
     //    crashed batch can never collide with the next one
-    guarded("upd_stats") {
+    if (!done("upd_stats")) {
       val wm = if (deltaWm > stats0.watermark) deltaWm else stats0.watermark
-      IndexBuild.writeDocStats(dir, stats0.copy(
-        nDocs = stats0.nDocs + nDeltaChunks,
-        sumDl = stats0.sumDl + deltaSumDl,
-        nextDocId = base + nDeltaChunks,
-        watermark = wm))
-      nDeltaChunks
+      Manifest.commit(dir, Record(Some(Entry("upd_stats", deltaKey, nDeltaChunks, 0L, deltaWm, 0L)),
+        stats = Some(stats0.copy(
+          nDocs = stats0.nDocs + nDeltaChunks,
+          sumDl = stats0.sumDl + deltaSumDl,
+          nextDocId = base + nDeltaChunks,
+          watermark = wm))))
     }
 
     // 4-6. append the delta's posting segments (both families), recompute
     //    the dictionaries, and LAST append its docs store rows — the diff
     //    source, so completing it makes the whole update a no-op on re-run
-    //    ([[appendDelta]]; every write guarded by its own manifest stage).
+    //    ([[appendDelta]]; every write commits its own record).
     // SCALE-ADAPTIVE shuffle partitioning (not the full-build constant): a
     // changelog delta is usually a tiny fraction of the corpus, and pushing
     // its few thousand rows through the full build's partition count pays
@@ -441,14 +370,15 @@ object Maintenance {
     val withIds = withIds0.cache()
     // the dictionary step is an idempotent full recompute from segment
     // metadata — this batch's appended segments AND any pending
-    // deferred-add contributions are all on disk by then
-    appendDelta(spark, dir, withIds, nDeltaChunks, deltaCfg, stats0)(guarded) {
-      guarded("upd_dict") { rebuildDictionaries(spark, dir); 0L }
+    // deferred-add contributions are all published by then
+    appendDelta(spark, withIds, deltaCfg, stats0)(guarded) {
+      if (!done("upd_dict")) rebuildDictionaries(spark, dir, deltaKey, deltaWm)
     }
     cleanup()
     withIds.unpersist()
     deltaChunks.unpersist()
-    autoMergeIfNeeded(spark, dir, cfg.autoMergeSegments)
+    autoMergeIfNeeded(spark, dir, cfg.autoMergeSegments, log,
+      appended = if (done("upd_docs")) 0 else 1)
     (nNew, nChanged, nDeleted)
   }
 
@@ -462,57 +392,57 @@ object Maintenance {
     * allocation — this is the reference's single-chunk CLI op, not a bulk
     * path (use [[update]] for bulk). Returns the new doc id.
     *
-    * `mergeDict=false` defers the dictionary rewrite: the chunk is
-    * recorded as a `dict_pending` manifest entry and N deferred adds pay
-    * ONE dictionary recompute at the next [[flushDict]] / merging add /
-    * update (the recompute aggregates segment metadata, so batching is
-    * free and idempotent). Between the add and the flush the chunk is
-    * INVISIBLE to dictionary-gated retrieval (a gram/term absent from the
-    * dictionary short-circuits to empty) — deferral trades read-your-write
-    * for O(1) dictionary work per add.
+    * The chunk's postings, docs row and reserved id are ONE commit (the
+    * `chunk_add` record): a crash before it leaves no trace, so a caller
+    * re-runs an add whose record is absent.
+    *
+    * `mergeDict=false` defers the dictionary rewrite: the log counts the
+    * add as pending and N deferred adds pay ONE dictionary recompute at
+    * the next [[flushDict]] / merging add / update (the recompute
+    * aggregates segment metadata, so batching is free and idempotent).
+    * Between the add and the flush the chunk is INVISIBLE to
+    * dictionary-gated retrieval (a gram/term absent from the dictionary
+    * short-circuits to empty) — deferral trades read-your-write for O(1)
+    * dictionary work per add.
     */
   def addChunk(spark: SparkSession, dir: String, url: String, data: String,
                grams: Seq[Int], warcTs: java.sql.Timestamp,
                cfg: IndexBuild.Config, mergeDict: Boolean = true): Long = {
     import spark.implicits._
-    val stats0 = IndexBuild.readDocStats(dir)
+    val log = Manifest.open(dir)
+    val stats0 = log.docStats(dir)
     val docId = stats0.nextDocId
     val seqRow = liveDocs(spark, dir).where($"url" === url)
       .agg(max($"chunk_seq")).head()
     val nextSeq = if (seqRow.isNullAt(0)) 0 else seqRow.getInt(0) + 1
     val gs = grams.distinct.sorted.toArray
     val dl = graft.core.Tokenizer.docLength(data)
-    val part = IndexBuild.termBucket(url, stats0.docPartsOr(cfg.docParts))
+    val part = IndexBuild.termBucket(url, stats0.docParts)
     val byteLen = data.getBytes("UTF-8").length.toLong
     val row = IndexBuild.ChunkMeta(url, warcTs, "", part, nextSeq, nextSeq + 1,
       0L, data.codePointCount(0, data.length).toLong, 0L, byteLen, dl,
       gs.length, data, explicit_grams = gs)
     val withId = Seq(row).toDS().toDF().withColumn("doc_id", lit(docId))
-    // reserve the id first (same crash discipline as update)
-    IndexBuild.writeDocStats(dir, stats0.copy(nDocs = stats0.nDocs + 1,
-      sumDl = stats0.sumDl + dl, nextDocId = docId + 1))
-    appendDelta(spark, dir, withId, 1L, cfg, stats0)(_ => body => { body; () }) {
-      if (mergeDict) rebuildDictionaries(spark, dir)
-      else Manifest.append(dir, Manifest.Entry("dict_pending", docId.toString,
-        1L, 0L, "", 0L))
+    Manifest.commitStaged(dir) { stg =>
+      appendDelta(spark, withId, cfg, stats0)(_ => write => write(stg))(())
+      Record(Some(Entry("chunk_add", docId.toString, 1L, 0L, "", 0L)),
+        stats = Some(stats0.copy(nDocs = stats0.nDocs + 1, sumDl = stats0.sumDl + dl,
+          nextDocId = docId + 1)))
     }
-    Manifest.append(dir, Manifest.Entry("chunk_add", docId.toString, 1L, 0L,
-      "", 0L))
-    autoMergeIfNeeded(spark, dir, cfg.autoMergeSegments)
+    if (mergeDict) rebuildDictionaries(spark, dir, s"chunk_$docId", "")
+    autoMergeIfNeeded(spark, dir, cfg.autoMergeSegments, log, appended = 1)
     docId
   }
 
   /** Fold every pending deferred-add dictionary contribution in ONE
-    * idempotent rewrite (see [[addChunk]] `mergeDict=false`). A crash
-    * between the rewrite and the pending-marker clear just repeats the
-    * identical recompute on the next flush. Returns the number of pending
-    * chunks folded in.
+    * idempotent rewrite (see [[addChunk]] `mergeDict=false`); its record
+    * clears the log's pending count. Returns the number of pending chunks
+    * folded in.
     */
   def flushDict(spark: SparkSession, dir: String): Long = {
-    val pend = Manifest.completed(dir, "dict_pending").map(_.toLong)
-    if (pend.isEmpty) return 0L
-    rebuildDictionaries(spark, dir)
-    pend.size.toLong
+    val pending = Manifest.open(dir).pendingDict
+    if (pending > 0) rebuildDictionaries(spark, dir, "flush", "")
+    pending.toLong
   }
 
   /** Automatic segment-merge policy (the reference's self-contained space
@@ -520,36 +450,23 @@ object Maintenance {
     * at most one segment per (key, range_id) group, so the number of
     * appends since the last merge upper-bounds every group's segment
     * count. When it reaches `threshold`, splice both posting families.
-    * O(manifest) to check — no metadata scan on the happy path.
+    * O(log) to check — `log` is the operation's fold, plus the `appended`
+    * appends it committed since — no metadata scan on the happy path.
     */
-  private def autoMergeIfNeeded(spark: SparkSession, dir: String,
-                                threshold: Int): Long = {
-    if (threshold <= 0) return 0L
-    val appends = Manifest.completed(dir, "upd_docs").size +
-      Manifest.completed(dir, "chunk_add").size
-    val mergedAt = Manifest.completed(dir, "seg_merge")
-      .map(_.toInt).foldLeft(0)(math.max)
-    if (appends - mergedAt < threshold) 0L
-    else {
+  private def autoMergeIfNeeded(spark: SparkSession, dir: String, threshold: Int,
+                                log: Manifest.State, appended: Int): Unit = {
+    val appends = log.completed("upd_docs").size + log.completed("chunk_add").size + appended
+    val mergedAt = log.completed("seg_merge").map(_.toInt).foldLeft(0)(math.max)
+    if (threshold > 0 && appends - mergedAt >= threshold) {
       val n = mergeSegments(spark, dir, gramsTable = false) +
         mergeSegments(spark, dir, gramsTable = true)
-      Manifest.append(dir, Manifest.Entry("seg_merge", appends.toString, n,
-        0L, "", 0L))
-      n
+      Manifest.commit(dir, Record(Some(Entry("seg_merge", appends.toString, n, 0L, "", 0L))))
     }
   }
 
-  private def swapWrite(df: DataFrame, target: String): Unit = {
-    val tmp = target + "_new"
-    df.write.mode("overwrite").parquet(tmp)
-    val p = java.nio.file.Paths.get(target)
-    org.apache.commons.io.FileUtils.deleteDirectory(p.toFile)
-    java.nio.file.Files.move(java.nio.file.Paths.get(tmp), p)
-  }
-
   /** Recompute BOTH dictionaries from segment metadata (postings column
-    * pruned), atomically swap them in and clear the pending deferred-add
-    * markers they now include. IDEMPOTENT — an additive
+    * pruned) into one staged commit that replaces them; its `upd_dict`
+    * record clears the log's pending deferred adds. IDEMPOTENT — an additive
     * delta merge (old + first_doc>=base) double-counts if a crash lands
     * between the rewrite and its bookkeeping and the merge re-runs; the
     * full recompute just repeats the identical rewrite. Exact across
@@ -559,43 +476,44 @@ object Maintenance {
     * scan side grows — and it is postings-column-pruned. df/cf keep
     * counting tombstoned postings until compact, like the reference.
     */
-  private def rebuildDictionaries(spark: SparkSession, dir: String): Unit = {
-    IndexBuild.writeDictionaries(spark, dir)(swapWrite)
-    Manifest.invalidateStage(dir, "dict_pending")
-  }
+  private def rebuildDictionaries(spark: SparkSession, dir: String,
+                                  unit: String, watermark: String): Unit =
+    Manifest.commitStaged(dir) { stg =>
+      val t0 = System.nanoTime()
+      IndexBuild.writeDictionaries(spark, dir, stg)
+      Record(Some(Entry("upd_dict", unit, 0L, 0L, watermark, (System.nanoTime() - t0) / 1000000)),
+        removes = Seq(IndexBuild.DictTable.name, IndexBuild.GramDictTable.name))
+    }
 
   /** The append path shared by [[update]] and [[addChunk]], for an
-    * id-stamped delta of `rows` docs-store rows, in commit order:
+    * id-stamped delta of docs-store rows, in commit order:
     *  1. its segments of both posting families — independent jobs over
     *     the same delta with separate outputs, overlapped (§2.6);
     *  2. `dict`, the caller's dictionary step;
     *  3. LAST its docs-store rows: the docs store is the diff source and
     *     the live view, so this append commits the delta.
-    * `step(stage)(write)` runs each write: [[update]] guards it with a
-    * manifest entry keyed by its delta (a killed update resumes without
-    * duplicating postings), [[addChunk]] runs it bare.
+    * `step(stage)(write)` runs each write with the root dir it writes
+    * under: [[update]] commits each as its own record keyed by its delta
+    * (a killed update resumes without duplicating postings), [[addChunk]]
+    * writes all of them into its one staging dir.
     */
-  private def appendDelta(spark: SparkSession, dir: String, withIds: DataFrame,
-                          rows: Long, cfg: IndexBuild.Config,
-                          stats: IndexBuild.DocStats)(
-      step: String => (=> Long) => Unit)(dict: => Unit): Unit = {
-    def postings(grams: Boolean): Long = {
+  private def appendDelta(spark: SparkSession, withIds: DataFrame,
+                          cfg: IndexBuild.Config, stats: IndexBuild.DocStats)(
+      step: String => (String => Unit) => Unit)(dict: => Unit): Unit = {
+    def postings(grams: Boolean)(root: String): Unit =
       IndexBuild.buildSegRows(spark, withIds, cfg, stats, grams, 0 until stats.nBuckets)
         .write.mode("append").partitionBy("bucket")
-        .parquet(if (grams) IndexBuild.gramPostingsDir(dir)
-                 else IndexBuild.termPostingsDir(dir))
-      rows
-    }
+        .parquet(if (grams) IndexBuild.gramPostingsDir(root)
+                 else IndexBuild.termPostingsDir(root))
     IndexBuild.inParallel(
       () => step("upd_postings_terms")(postings(grams = false)),
       () => step("upd_postings_grams")(postings(grams = true)))
     dict
-    step("upd_docs") {
+    step("upd_docs") { root =>
       // align column order with the docs-store schema
       withIds.select(DocsTable.schema.fieldNames.map(col).toIndexedSeq: _*)
         .write.mode("append").partitionBy("docpart")
-        .parquet(IndexBuild.docsDir(dir))
-      rows
+        .parquet(IndexBuild.docsDir(root))
     }
   }
 
@@ -603,16 +521,17 @@ object Maintenance {
     * appends into single segments with [[Postings.spliceShards]] — a
     * byte-level directory/payload splice, no posting re-encoding. Only
     * buckets that contain multi-segment groups are rewritten. Returns the
-    * number of rewritten buckets. Safe in any order relative to pending
-    * dictionary flushes: splices preserve per-segment n_docs/sum_tf/max_tf
-    * sums and the dictionary recompute is a full metadata aggregation.
+    * number of rewritten buckets, in one staged commit that replaces them.
+    * Safe in any order relative to pending dictionary flushes: splices
+    * preserve per-segment n_docs/sum_tf/max_tf sums and the dictionary
+    * recompute is a full metadata aggregation.
     */
   def mergeSegments(spark: SparkSession, dir: String,
                     gramsTable: Boolean): Long = {
     import spark.implicits._
+    Manifest.open(dir)
     val table = if (gramsTable) IndexBuild.GramPostingsTable
                 else IndexBuild.TermPostingsTable
-    val path = table.path(dir)
     val all = readTable(spark, dir, table)
     // metadata-only scan (postings column pruned) to find affected buckets
     val multi = all
@@ -635,24 +554,10 @@ object Maintenance {
             rs.map(_.max_tf).max, bytes.length, bytes)
         }
       }
-    val tmp = path + "_merging"
-    spliced.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-    val p = java.nio.file.Paths.get(path)
-    val t = java.nio.file.Paths.get(tmp)
-    multi.foreach { b =>
-      org.apache.commons.io.FileUtils.deleteDirectory(p.resolve(s"bucket=$b").toFile)
-      java.nio.file.Files.move(t.resolve(s"bucket=$b"), p.resolve(s"bucket=$b"))
+    Manifest.commitStaged(dir) { stg =>
+      spliced.write.mode("overwrite").partitionBy("bucket").parquet(table.path(stg))
+      Record(None, removes = multi.toSeq.map(b => s"${table.name}/bucket=$b"))
     }
-    org.apache.commons.io.FileUtils.deleteQuietly(t.toFile)
     multi.length.toLong
-  }
-
-  private def rebuildDerived(spark: SparkSession, dir: String,
-                             cfg: IndexBuild.Config): Unit = {
-    // re-run the build with chunks complete: only derived stages execute.
-    // Feed an empty docs frame — the chunks stage is already satisfied.
-    val emptyDocs = IndexBuild.emptyTable(spark, IndexBuild.ChunksTable)
-      .select(col("url"), col("warc_ts"), col("lang"), col("chunk_text").as("text"))
-    IndexBuild.build(spark, emptyDocs, dir, cfg)
   }
 }

@@ -121,7 +121,7 @@ object StreamingIndex {
       .where($"rn" === 1).drop("rn")
       .cache()
     if (b.isEmpty) { b.unpersist(); return }
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(indexDir, "docstats.json")))
+    if (graft.build.Manifest.exists(indexDir))
       Maintenance.update(spark, indexDir, b, cfg, partialSnapshot = true)
     else
       IndexBuild.build(spark, b, indexDir, cfg)

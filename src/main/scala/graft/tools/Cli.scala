@@ -222,13 +222,11 @@ object Cli {
     */
   private def cfgFor(dir: String): IndexBuild.Config = {
     val s = IndexBuild.readDocStats(dir)
-    // docParts 0 = legacy docstats without the field; 8 was the only
-    // default that version's CLI ever wrote. k1/b ride along too: delta
-    // posting block-max bounds must be encoded with the index's frozen
-    // scoring parameters, and compact must not reset them to defaults.
+    // k1/b ride along too: delta posting block-max bounds must be encoded
+    // with the index's frozen scoring parameters, and compact must not
+    // reset them to defaults.
     IndexBuild.Config(nBuckets = s.nBuckets, nRanges = s.nRanges,
-      docParts = if (s.docParts > 0) s.docParts else 8,
-      chunkMode = s.chunkMode, k1 = s.k1, b = s.b)
+      docParts = s.docParts, chunkMode = s.chunkMode, k1 = s.k1, b = s.b)
   }
 
   private def dispatch(args: Array[String]): Unit = args.toList match {

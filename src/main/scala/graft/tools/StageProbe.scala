@@ -125,7 +125,7 @@ object StageProbe {
     if (all || which == "chunks")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     else {
-      // re-run just the requested stage: drop its manifest entries + output
+      // re-run just the requested stage: one reset record drops its entries
       // (prerequisites stay complete and are skipped by resume)
       val stagesToDrop = which match {
         case "ids" => Seq("ids", "postings_terms", "postings_grams", "dictionary", "cleanup")
@@ -133,21 +133,22 @@ object StageProbe {
         case "grams" => Seq("postings_grams", "dictionary", "cleanup")
         case _ => Seq.empty[String]
       }
-      stagesToDrop.foreach(graft.build.Manifest.invalidateStage(dir, _))
+      graft.build.Manifest.commit(dir, graft.build.Manifest.Record(None, resets = stagesToDrop))
     }
+    val log = graft.build.Manifest.open(dir)
     timed(s"chunks@$cpus", all || which == "chunks") {
-      IndexBuild.stageChunks(spark, corpus, dir, cfg)
+      IndexBuild.stageChunks(spark, corpus, dir, cfg, log)
     }
-    if (!(all || which == "chunks")) IndexBuild.stageChunks(spark, corpus, dir, cfg)
+    if (!(all || which == "chunks")) IndexBuild.stageChunks(spark, corpus, dir, cfg, log)
     var stats: IndexBuild.DocStats = null
     timed(s"ids@$cpus", all || which == "ids" || which == "terms" || which == "grams") {
-      stats = IndexBuild.stageIds(spark, dir, cfg)
+      stats = IndexBuild.stageIds(spark, dir, cfg, log)
     }
     timed(s"terms@$cpus", all || which == "terms") {
-      IndexBuild.stagePostings(spark, dir, cfg, stats, grams = false)
+      IndexBuild.stagePostings(spark, dir, cfg, stats, grams = false, log)
     }
     timed(s"grams@$cpus", all || which == "grams") {
-      IndexBuild.stagePostings(spark, dir, cfg, stats, grams = true)
+      IndexBuild.stagePostings(spark, dir, cfg, stats, grams = true, log)
     }
     if (which == "query") {
       IndexBuild.build(spark, corpus, dir, cfg) // complete any missing stage

@@ -1,0 +1,46 @@
+package graft
+
+import graft.build.{IndexBuild, Manifest}
+import graft.query.Search
+import graft.sources.WebCorpus
+import java.nio.file.{Files, Paths}
+
+/** The commit log fails fast, naming the path, on an index it cannot
+  * read: one written before the log existed, or one with a corrupt record.
+  */
+class CommitLogSpec extends SparkSuite {
+
+  private val cfg = IndexBuild.Config(nBuckets = 2, nRanges = 2, docParts = 2,
+    shufflePartitions = 2)
+
+  test("an index in the older format (docstats.json, no _graft_log) fails naming the path") {
+    for (legacy <- Seq("docstats.json", "manifest.jsonl")) {
+      val dir = tmpDir("log-old")
+      val p = Paths.get(dir, legacy)
+      Files.write(p, "{}".getBytes("UTF-8"))
+      val e = intercept[IllegalStateException](Manifest.exists(dir))
+      assert(e.getMessage.contains(p.toString), e.getMessage)
+      val e2 = intercept[IllegalStateException](
+        IndexBuild.build(spark, WebCorpus.readmeCorpus(spark), dir, cfg))
+      assert(e2.getMessage.contains(p.toString), e2.getMessage)
+    }
+  }
+
+  test("a commit record that does not parse fails naming the record") {
+    val dir = tmpDir("log-corrupt")
+    IndexBuild.build(spark, WebCorpus.readmeCorpus(spark), dir, cfg)
+    assert(Manifest.exists(dir))
+    val log = Paths.get(dir, "_graft_log")
+    val last = {
+      val s = Files.list(log)
+      try s.toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.getFileName.toString.endsWith(".json")).maxBy(_.getFileName.toString)
+      finally s.close()
+    }
+    Files.write(last, """{"stage":"dictionary","unit":""".getBytes("UTF-8"))
+    val e = intercept[IllegalStateException](new Search(spark, dir))
+    assert(e.getMessage.contains(last.toString), e.getMessage)
+    val e2 = intercept[IllegalStateException](Manifest.exists(dir))
+    assert(e2.getMessage.contains(last.toString), e2.getMessage)
+  }
+}

@@ -4,15 +4,14 @@ import graft.build.IndexBuild
 import graft.core.Gram
 import graft.maint.Maintenance
 import graft.sources.WebCorpus
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Byte-identity pin for everything the posting writers emit. A fixed
   * corpus is built, then one changelog `update` and one `addChunk` run on
   * it; after each step the digests of both posting tables (every
   * (bucket, key, range_id) segment: its metadata and an md5 of its bytes)
-  * and of both dictionaries must equal constants recorded from an earlier,
-  * independently written version of the writers. [[TransposedBuildSpec]]
+  * and of both dictionaries ([[IndexDigests]]) must equal constants
+  * recorded from an earlier, independently written version of the writers. [[TransposedBuildSpec]]
   * compares two builds of the SAME code, so a rewrite that changed the
   * bytes of both alike would pass it; this spec would not.
   */
@@ -21,29 +20,6 @@ class GoldenSegmentsSpec extends SparkSuite {
 
   private val cfg = IndexBuild.Config(nBuckets = 4, nRanges = 4, docParts = 2,
     shufflePartitions = 13)
-
-  /** md5 over the sorted string form of every row: row order on disk and
-    * file layout do not matter, every value does.
-    */
-  private def digest(df: DataFrame): String = {
-    val rows = df.collect().map(_.toSeq.mkString("|")).sorted
-    val md = java.security.MessageDigest.getInstance("MD5")
-    rows.foreach(r => md.update((r + "\n").getBytes("UTF-8")))
-    s"${rows.length}:" + md.digest().map("%02x".format(_)).mkString
-  }
-
-  private def segments(path: String): DataFrame =
-    spark.read.parquet(path).select($"bucket", $"key", $"range_id",
-      $"first_doc", $"last_doc", $"n_docs", $"sum_tf", $"max_tf", $"n_bytes",
-      md5($"postings"))
-
-  private def digests(dir: String): Seq[String] = Seq(
-    digest(segments(IndexBuild.termPostingsDir(dir))),
-    digest(segments(IndexBuild.gramPostingsDir(dir))),
-    digest(spark.read.parquet(IndexBuild.dictDir(dir))
-      .select($"term", $"df", $"cf", $"max_tf")),
-    digest(spark.read.parquet(IndexBuild.gramDictDir(dir))
-      .select($"gram", $"df")))
 
   // (term segments, gram segments, term dictionary, gram dictionary)
   private val Golden: Map[String, Seq[String]] = Map(
@@ -61,7 +37,7 @@ class GoldenSegmentsSpec extends SparkSuite {
       "1577:8c5ef2a0def63a06bdf6e7645fc6c5a1"))
 
   private def check(step: String, dir: String): Unit = {
-    val got = digests(dir)
+    val got = IndexDigests(spark, dir)
     assert(got == Golden(step), s"$step digests changed: ${got.mkString(", ")}")
   }
 

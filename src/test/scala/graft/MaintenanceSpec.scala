@@ -1,6 +1,6 @@
 package graft
 
-import graft.build.IndexBuild
+import graft.build.{IndexBuild, Manifest}
 import graft.maint.Maintenance
 import graft.query.Search
 import graft.sources.WebCorpus
@@ -243,7 +243,8 @@ class MaintenanceSpec extends SparkSuite {
     val docs = WebCorpus.generate(spark, 80, seed = 11L, partitions = 2)
     IndexBuild.build(spark, docs, dir, cfg)
     val url = docs.select("url").orderBy("url").head().getString(0)
-    val pruned = Maintenance.docsOfUrls(spark, dir, Seq(url).toDF("url"))
+    val pruned = Maintenance.docsOfUrls(IndexBuild.readTable(spark, dir, IndexBuild.DocsTable),
+      IndexBuild.readDocStats(dir).docParts, Seq(url).toDF("url"))
     val p = pruned.queryExecution.executedPlan.toString
     // the docs scan must carry a docpart partition filter (IN on the batch's
     // parts), not read the whole store
@@ -262,34 +263,45 @@ class MaintenanceSpec extends SparkSuite {
     assert(t.select("url").distinct().as[String].collect().toSeq == Seq(url))
   }
 
+  /** A copy of the index at `dir`, compacted without interruption. */
+  private def compactedCopy(dir: String, name: String): String = {
+    val ref = tmpDir(name)
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(dir), new java.io.File(ref))
+    Maintenance.compact(spark, ref, cfg)
+    ref
+  }
+
+  /** Run `compact` until the first durable step whose label starts with
+    * `label` crashes it.
+    */
+  private def crashCompactAt(dir: String, label: String): Unit = {
+    Manifest.arm((_, l) => l.startsWith(label))
+    try intercept[Manifest.InjectedCrash](Maintenance.compact(spark, dir, cfg))
+    finally Manifest.disarm()
+  }
+
   test("compact resumes after a crash between destroy and rebuild (compacting marker)") {
     val dir = tmpDir("maint-crash")
     val docs = WebCorpus.generate(spark, 40, seed = 23L, partitions = 2)
     IndexBuild.build(spark, docs, dir, cfg)
     val victim = docs.select("url").orderBy("url").head().getString(0)
     Maintenance.delete(spark, dir, Seq(victim))
-    Maintenance.compact(spark, dir, cfg)
-    val wantUrls = new Search(spark, dir).search(Seq("the"))
+    val wantUrls = new Search(spark, compactedCopy(dir, "maint-crash-ref")).search(Seq("the"))
       .select("url").distinct().as[String].collect().toSet
 
-    // reconstruct the mid-compact crash state: compacted chunks swapped in,
-    // tombstones+docs already destroyed, derived stages invalidated, marker
-    // pending — the window the pre-marker compact could not recover from
-    // (tombstones empty -> re-run no-oped with no docs store left)
-    val chunkCols = Seq("url", "warc_ts", "lang", "docpart", "chunk_seq",
-      "line", "rune_off", "rune_len", "byte_start", "byte_len", "dl",
-      "n_grams", "chunk_text", "explicit_grams")
-    spark.read.parquet(IndexBuild.docsDir(dir))
-      .select(chunkCols.map(col).toIndexedSeq: _*)
-      .write.partitionBy("docpart").parquet(IndexBuild.chunksDir(dir))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$dir/docs"))
-    Seq("ids", "postings_terms", "postings_grams", "dictionary", "cleanup")
-      .foreach(graft.build.Manifest.invalidateStage(dir, _))
-    graft.build.Manifest.append(dir,
-      graft.build.Manifest.Entry("compacting", "swap", 0L, 0L, "", 0L))
+    // the mid-compact crash state: compacted chunks swapped in,
+    // tombstones+docs already destroyed, derived stages reset, compact
+    // pending — the swap's publish dies at its last step, before the
+    // rebuild starts. The window the pre-marker compact could not recover
+    // from (tombstones empty -> re-run no-oped with no docs store left)
+    crashCompactAt(dir, "finish ")
+    assert(Manifest.state(dir).compactPending)
+    assert(!Files.exists(Paths.get(IndexBuild.docsDir(dir))))
+    assert(!Files.exists(Paths.get(dir, "tombstones")))
+    assert(Files.exists(Paths.get(IndexBuild.chunksDir(dir))))
 
-    Maintenance.compact(spark, dir, cfg) // resume: no tombstones, marker set
-    assert(graft.build.Manifest.completed(dir, "compacting").isEmpty)
+    Maintenance.compact(spark, dir, cfg) // resume: no tombstones, compact pending
+    assert(!Manifest.state(dir).compactPending)
     val s = new Search(spark, dir)
     val gotUrls = s.search(Seq("the")).select("url").distinct()
       .as[String].collect().toSet
@@ -309,20 +321,11 @@ class MaintenanceSpec extends SparkSuite {
     val victim = docs.select("url").orderBy("url").head().getString(0)
     Maintenance.delete(spark, dir, Seq(victim))
 
-    // reconstruct the crash state right AFTER the chunks swap: compacted
-    // scratch in place, marker pending, docs store still stale,
-    // tombstones still present
-    val chunkCols = Seq("url", "warc_ts", "lang", "docpart", "chunk_seq",
-      "line", "rune_off", "rune_len", "byte_start", "byte_len", "dl",
-      "n_grams", "chunk_text", "explicit_grams")
-    val tomb = spark.read.parquet(s"$dir/tombstones")
-    spark.read.parquet(IndexBuild.docsDir(dir))
-      .join(tomb.select("url", "warc_ts").distinct(),
-        Seq("url", "warc_ts"), "left_anti")
-      .select(chunkCols.map(col).toIndexedSeq: _*)
-      .write.partitionBy("docpart").parquet(IndexBuild.chunksDir(dir))
-    graft.build.Manifest.append(dir,
-      graft.build.Manifest.Entry("compacting", "swap", 0L, 0L, "", 0L))
+    // the crash state right AFTER the swap commit: compacted scratch
+    // staged, compact pending, docs store still stale, tombstones still
+    // present
+    crashCompactAt(dir, "remove docs")
+    assert(Manifest.state(dir).compactPending)
 
     // mid-crash reads: the victim stays invisible (old docs + tombstones)
     val crashed = new Search(spark, dir).search(Seq("the"))
@@ -331,7 +334,7 @@ class MaintenanceSpec extends SparkSuite {
 
     // resume completes and the victim stays gone; tombstones are consumed
     Maintenance.compact(spark, dir, cfg)
-    assert(graft.build.Manifest.completed(dir, "compacting").isEmpty)
+    assert(!Manifest.state(dir).compactPending)
     val after = new Search(spark, dir).search(Seq("the"))
       .select("url").distinct().as[String].collect().toSet
     assert(after == crashed)
@@ -345,24 +348,16 @@ class MaintenanceSpec extends SparkSuite {
     IndexBuild.build(spark, docs, dir, cfg)
     val victim = docs.select("url").orderBy("url").head().getString(0)
     Maintenance.delete(spark, dir, Seq(victim))
-    Maintenance.compact(spark, dir, cfg)
-    val want = new Search(spark, dir).search(Seq("the"))
+    val want = new Search(spark, compactedCopy(dir, "maint-crash2-ref")).search(Seq("the"))
       .select("url").distinct().as[String].collect().toSet
 
-    // crash window: rebuildDerived got past ids+cleanup (chunk scratch
-    // consumed, docs store committed) but died before the marker clear —
-    // chunks/ is GONE and docs/ is the ONLY corpus copy. A resume that
-    // blindly deletes docs/ destroys the index.
-    graft.build.Manifest.append(dir,
-      graft.build.Manifest.Entry("compacting", "swap", 0L, 0L, "", 0L))
+    // crash window: the rebuild got past ids+cleanup (chunk scratch
+    // consumed, docs store committed) but died committing the first term
+    // postings bucket — chunks/ is GONE and docs/ is the ONLY corpus copy.
+    // A resume that blindly deletes docs/ destroys the index.
+    crashCompactAt(dir, "record postings_terms 0")
+    assert(Manifest.state(dir).compactPending)
     assert(!Files.exists(Paths.get(dir, "chunks"))) // cleanup already ran
-    // also knock out the postings of one bucket to make the resume do work
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      Paths.get(IndexBuild.termPostingsDir(dir), "bucket=0").toFile)
-    val kept = graft.build.Manifest.entries(dir).filterNot(l =>
-      l.contains("\"stage\":\"postings_terms\"") && l.contains("\"unit\":\"0\""))
-    Files.write(Paths.get(dir, "manifest.jsonl"),
-      kept.mkString("", "\n", "\n").getBytes("UTF-8"))
     // a delete issued INSIDE the crash window (between crash and resume)
     // must survive the resumed compact, not be silently dropped with the
     // pre-compact tombstones
@@ -371,7 +366,7 @@ class MaintenanceSpec extends SparkSuite {
 
     Maintenance.compact(spark, dir, cfg)
     assert(Files.exists(Paths.get(dir, "docs")), "docs store destroyed")
-    assert(graft.build.Manifest.completed(dir, "compacting").isEmpty)
+    assert(!Manifest.state(dir).compactPending)
     val got = new Search(spark, dir).search(Seq("the"))
       .select("url").distinct().as[String].collect().toSet
     assert(got == want - lateVictim, "late delete lost or resume diverged")
@@ -413,7 +408,7 @@ class MaintenanceSpec extends SparkSuite {
       Maintenance.update(spark, dir, nd, amCfg)
     }
     // the third append crossed the threshold: groups spliced automatically
-    assert(graft.build.Manifest.completed(dir, "seg_merge").nonEmpty)
+    assert(Manifest.state(dir).completed("seg_merge").nonEmpty)
     val multi = spark.read.parquet(IndexBuild.termPostingsDir(dir))
       .groupBy("key", "range_id").count().where($"count" > 1).count()
     assert(multi == 0, "multi-segment groups left after auto-merge")

@@ -35,34 +35,34 @@ class ResumeSpec extends SparkSuite {
 
   test("invalidating one postings bucket rebuilds only that bucket; results identical") {
     val dir = tmpDir("resume-idx2")
-    IndexBuild.build(spark, docs, dir, cfg)
+    val ref = tmpDir("resume-ref2")
+    IndexBuild.build(spark, docs, ref, cfg)
     val q = Seq("the", "of")
-    val baseline = new Search(spark, dir).bm25TopK(q, 20, conjunctive = false)
+    val baseline = new Search(spark, ref).bm25TopK(q, 20, conjunctive = false)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    // the chunk scratch is dropped after a complete build; the docs store
-    // carries the tokenized corpus — untouched docs == no re-tokenization
+
+    // a killed job: the build dies as it commits bucket 3 of
+    // postings_terms (the last one), so that bucket and the dictionary,
+    // which runs after postings, never complete
+    Manifest.arm((_, label) => label == "record postings_terms 3")
+    try intercept[Manifest.InjectedCrash](IndexBuild.build(spark, docs, dir, cfg))
+    finally Manifest.disarm()
+    // the chunk scratch is dropped once the docs store commits; the docs
+    // store carries the tokenized corpus — untouched docs == no
+    // re-tokenization
     assert(fileMTimes(IndexBuild.chunksDir(dir)).isEmpty)
     val docsBefore = fileMTimes(IndexBuild.docsDir(dir))
     assert(docsBefore.nonEmpty)
 
-    // simulate a killed job: bucket 2 of postings_terms never completed
-    val manifest = Paths.get(dir, "manifest.jsonl")
-    val keep = Files.readAllLines(manifest).asScala.filterNot { l =>
-      l.contains(""""stage":"postings_terms"""") && l.contains(""""unit":"2"""")
-    }
-    Files.write(manifest, keep.mkString("", "\n", "\n").getBytes("UTF-8"))
-    // drop stages that run after postings (dictionary depends on them)
-    Manifest.invalidateStage(dir, "dictionary")
-
     val otherBuckets = fileMTimes(IndexBuild.termPostingsDir(dir))
-      .filter(!_._1.contains("bucket=2"))
+      .filter(!_._1.contains("bucket=3"))
     IndexBuild.build(spark, docs, dir, cfg)
 
     // docs store untouched -> no re-tokenization
     assert(fileMTimes(IndexBuild.docsDir(dir)) == docsBefore)
     // other postings buckets untouched
     val after = fileMTimes(IndexBuild.termPostingsDir(dir))
-      .filter(!_._1.contains("bucket=2"))
+      .filter(!_._1.contains("bucket=3"))
     assert(after == otherBuckets)
     // and the rebuilt index answers identically
     val resumed = new Search(spark, dir).bm25TopK(q, 20, conjunctive = false)

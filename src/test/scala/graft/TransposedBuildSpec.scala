@@ -42,26 +42,24 @@ class TransposedBuildSpec extends SparkSuite {
   test("resume with a subset of buckets emits only those buckets' segments") {
     val docs = WebCorpus.generate(spark, 120, seed = 12L, partitions = 2)
     val dir = tmpDir("transposed-resume")
-    IndexBuild.build(spark, docs, dir, IndexBuild.Config(
-      nBuckets = 4, nRanges = 2, docParts = 2, shufflePartitions = 4))
-    // simulate a half-done postings stage: drop two bucket dirs + their
-    // manifest rows, rebuild, and require byte-stable untouched buckets
-    val full = segDigestWithBucket(dir)
-    import java.nio.file.{Files, Paths}
+    val ref = tmpDir("transposed-resume-ref")
+    val cfgR = IndexBuild.Config(nBuckets = 4, nRanges = 2, docParts = 2,
+      shufflePartitions = 4)
+    IndexBuild.build(spark, docs, ref, cfgR)
+    val full = segDigestWithBucket(ref)
+    // simulate a half-done postings stage: the build dies as it commits
+    // bucket 1 of postings_terms (buckets 1..3 stay uncommitted), two of
+    // the bucket dirs are gone too; the resumed build must reproduce the
+    // uninterrupted build's segments byte for byte
+    import java.nio.file.Paths
+    graft.build.Manifest.arm((_, label) => label == "record postings_terms 1")
+    try intercept[graft.build.Manifest.InjectedCrash](IndexBuild.build(spark, docs, dir, cfgR))
+    finally graft.build.Manifest.disarm()
     for (b <- Seq(1, 3)) {
       org.apache.commons.io.FileUtils.deleteDirectory(
         Paths.get(IndexBuild.termPostingsDir(dir), s"bucket=$b").toFile)
     }
-    val kept = Files.readAllLines(Paths.get(dir, "manifest.jsonl"))
-    val filtered = new java.util.ArrayList[String]()
-    kept.forEach { l =>
-      val drop = l.contains("\"stage\":\"postings_terms\"") &&
-        (l.contains("\"unit\":\"1\"") || l.contains("\"unit\":\"3\""))
-      if (!drop) filtered.add(l)
-    }
-    Files.write(Paths.get(dir, "manifest.jsonl"), filtered)
-    IndexBuild.build(spark, docs, dir, IndexBuild.Config(
-      nBuckets = 4, nRanges = 2, docParts = 2, shufflePartitions = 4))
+    IndexBuild.build(spark, docs, dir, cfgR)
     assert(segDigestWithBucket(dir) == full, "resumed build diverged")
     // and the engine still answers
     assert(new Search(spark, dir).bm25TopK(Seq("the"), 5, conjunctive = false).count() > 0)
@@ -101,28 +99,27 @@ class TransposedBuildSpec extends SparkSuite {
   }
 
   test("wide-resume gram stage prunes the shuffle map-side (shuffle-bytes probe)") {
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Paths
     val docs = WebCorpus.generate(spark, 300, seed = 14L, partitions = 2)
     val cfgT = IndexBuild.Config(nBuckets = 4, nRanges = 2, docParts = 2,
       shufflePartitions = 4)
 
-    // build, wipe `missing` gram buckets, resume; return the resumed run's
-    // total shuffle-write bytes and assert byte-identical reconstruction
+    val ref = tmpDir("transposed-gprune-ref")
+    IndexBuild.build(spark, docs, ref, cfgT)
+    val full = gramDigest(ref)
+
+    // build until it dies committing gram bucket `missing.min` (buckets
+    // missing.min.. stay uncommitted; `missing` must be that tail), wipe
+    // the `missing` gram buckets, resume; return the resumed run's total
+    // shuffle-write bytes and assert byte-identical reconstruction
     def resumeBytes(missing: Seq[Int]): Long = {
       val dir = tmpDir("transposed-gprune")
-      IndexBuild.build(spark, docs, dir, cfgT)
-      val full = gramDigest(dir)
+      graft.build.Manifest.arm((_, label) => label == s"record postings_grams ${missing.min}")
+      try intercept[graft.build.Manifest.InjectedCrash](IndexBuild.build(spark, docs, dir, cfgT))
+      finally graft.build.Manifest.disarm()
       for (b <- missing)
         org.apache.commons.io.FileUtils.deleteDirectory(
           Paths.get(IndexBuild.gramPostingsDir(dir), s"bucket=$b").toFile)
-      val kept = Files.readAllLines(Paths.get(dir, "manifest.jsonl"))
-      val filtered = new java.util.ArrayList[String]()
-      kept.forEach { l =>
-        val drop = l.contains("\"stage\":\"postings_grams\"") &&
-          missing.exists(b => l.contains(s""""unit":"$b""""))
-        if (!drop) filtered.add(l)
-      }
-      Files.write(Paths.get(dir, "manifest.jsonl"), filtered)
       val acc = new java.util.concurrent.atomic.AtomicLong
       val listener = new org.apache.spark.scheduler.SparkListener {
         override def onStageCompleted(
@@ -139,7 +136,7 @@ class TransposedBuildSpec extends SparkSuite {
     }
 
     val bytesAll = resumeBytes(Seq(0, 1, 2, 3))
-    val bytesOne = resumeBytes(Seq(1))
+    val bytesOne = resumeBytes(Seq(3))
     // 1 of 4 buckets missing must shuffle well under the full stage's bytes
     assert(bytesOne * 10 < bytesAll * 8,
       s"map-side prune ineffective: resumed=$bytesOne full=$bytesAll")
