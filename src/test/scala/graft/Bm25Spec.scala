@@ -1,11 +1,13 @@
 package graft
 
+import scala.util.chaining._
 import graft.build.IndexBuild
 import graft.query.Search
 
 /** BM25 rank-identity: the block-max WAND path must return exactly the same
   * top-k (doc ids AND scores, bitwise doubles) as the brute-force oracle,
-  * conjunctive and disjunctive, across k values — SURVEY §5.2(4).
+  * conjunctive and disjunctive, across k values — SURVEY §5.2(4) — with the
+  * per-range kernels on the driver and distributed (posting gate 0).
   */
 class Bm25Spec extends SparkSuite {
 
@@ -32,20 +34,47 @@ class Bm25Spec extends SparkSuite {
   private def collectTopK(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
     df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
-  test("WAND == brute force, disjunctive, k in {1,10,100}") {
-    for (q <- queries; k <- Seq(1, 10, 100)) {
-      val wand = collectTopK(search.bm25TopK(q, k, conjunctive = false))
-      val brute = collectTopK(search.bm25BruteForce(q, k, conjunctive = false))
-      assert(wand == brute, s"disjunctive q=$q k=$k")
+  /** Every named Search answers every query like the first one's
+    * brute-force oracle.
+    */
+  private def assertWandIsBrute(searches: Seq[(String, Search)], qs: Seq[Seq[String]],
+                                conjunctive: Boolean): Unit =
+    for (q <- qs; k <- Seq(1, 10, 100)) {
+      val brute = collectTopK(searches.head._2.bm25BruteForce(q, k, conjunctive))
+      searches.foreach { case (name, s) =>
+        val wand = collectTopK(s.bm25TopK(q, k, conjunctive))
+        assert(wand == brute, s"$name conjunctive=$conjunctive q=$q k=$k")
+      }
     }
+
+  private lazy val placements = Seq("driver" -> search,
+    "distributed" -> new Search(spark, dir).tap(_.maxInlinePostings = 0))
+
+  test("WAND == brute force, disjunctive, k in {1,10,100}") {
+    assertWandIsBrute(placements, queries, conjunctive = false)
   }
 
   test("WAND == brute force, conjunctive, k in {1,10,100}") {
-    for (q <- queries; k <- Seq(1, 10, 100)) {
-      val wand = collectTopK(search.bm25TopK(q, k, conjunctive = true))
-      val brute = collectTopK(search.bm25BruteForce(q, k, conjunctive = true))
-      assert(wand == brute, s"conjunctive q=$q k=$k")
-    }
+    assertWandIsBrute(placements, queries, conjunctive = true)
+  }
+
+  test("after an update and a delete: WAND == brute force in every placement") {
+    val d = ChurnedIndex(spark, tmpDir("bm25-churned"),
+      graft.sources.WebCorpus.generate(spark, 200, seed = 42L, partitions = 2),
+      IndexBuild.Config(nBuckets = 4, nRanges = 4, docParts = 4,
+        shufflePartitions = 8, blockSize = 16))
+    val searches = Seq(
+      "driver, inline dead set" -> new Search(spark, d),
+      "distributed, inline dead set" -> new Search(spark, d).tap(_.maxInlinePostings = 0),
+      "distributed, cogrouped dead set" -> new Search(spark, d, maxInlineTombstones = 0))
+    assert(searches(0)._2.deadIds.exists(_.nonEmpty) && searches(2)._2.deadIds.isEmpty)
+    val dead = ChurnedIndex.deadIds(spark, d)
+    val qs = queries :+ Seq("quagga", "the") :+ Seq("wallaby")
+    for (conjunctive <- Seq(false, true)) assertWandIsBrute(searches, qs, conjunctive)
+    // there are tombstoned docs, and none of them is ranked
+    assert(dead.size >= 8)
+    assert(collectTopK(searches(0)._2.bm25TopK(Seq("the"), 10000, conjunctive = false))
+      .forall(r => !dead.contains(r._1)))
   }
 
   test("conjunctive results are a subset of disjunctive with equal scores") {

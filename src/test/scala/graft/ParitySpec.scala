@@ -1,5 +1,6 @@
 package graft
 
+import scala.util.chaining._
 import graft.build.IndexBuild
 import graft.query.Search
 import graft.sources.WebCorpus
@@ -18,6 +19,13 @@ class ParitySpec extends SparkSuite {
     d
   }
   private lazy val search = new Search(spark, dir)
+  /** The same index with the per-range kernels forced onto the cluster. */
+  private lazy val distributed = new Search(spark, dir).tap(_.maxInlinePostings = 0)
+
+  private val candidateQueries = Seq(Seq("the") -> false, Seq("the", "of") -> false,
+    Seq("and", "you", "that") -> false, Seq(WebCorpus.Vocab(60)) -> false,
+    Seq("zzqx") -> false, Seq("the", "zzqx") -> false,
+    Seq("ther") -> true, Seq("wit", "he") -> true)
 
   test("doc ids are dense 0..n-1 in (url, chunk_seq) order") {
     val ids = spark.read.parquet(IndexBuild.docsDir(dir))
@@ -53,18 +61,58 @@ class ParitySpec extends SparkSuite {
         qg.forall(x => java.util.Arrays.binarySearch(g, x) >= 0)
       }.map(_._1).toSeq.sorted
     }
-    val s = new Search(spark, d)
-    val queries = Seq(Seq("the") -> false, Seq("the", "of") -> false,
-      Seq("and", "you", "that") -> false, Seq(WebCorpus.Vocab(60)) -> false,
-      Seq("zzqx") -> false, Seq("the", "zzqx") -> false,
-      Seq("ther") -> true, Seq("wit", "he") -> true)
-    queries.foreach { case (args, partial) =>
+    for (s <- Seq(new Search(spark, d), new Search(spark, d).tap(_.maxInlinePostings = 0));
+         (args, partial) <- candidateQueries) {
       val got = s.candidates(args, partial).collect().map(_.getLong(0)).sorted.toSeq
       assert(got == covering(args, partial), s"query $args partial=$partial")
     }
     // the queries exercise both outcomes: hits and an empty answer
     assert(covering(Seq("the"), partial = false).nonEmpty)
     assert(covering(Seq("zzqx"), partial = false).isEmpty)
+  }
+
+  test("after an update and a delete: candidates and fuzzy equal a brute-force scan in every placement") {
+    import graft.core.Gram
+    val d = ChurnedIndex(spark, tmpDir("parity-churned"),
+      WebCorpus.generate(spark, 80, seed = 13L, partitions = 2),
+      IndexBuild.Config(nBuckets = 4, nRanges = 4, docParts = 2, shufflePartitions = 4))
+    val dead = ChurnedIndex.deadIds(spark, d)
+    assert(dead.nonEmpty)
+    val all = spark.read.parquet(IndexBuild.docsDir(d)).select("doc_id", "chunk_text")
+      .collect().map(r => r.getLong(0) -> Gram.gramsSorted(partial = false, Seq(r.getString(1))))
+    val indexed = all.iterator.flatMap(_._2).toSet // the gram dictionary's keys
+    val live = all.filter { case (id, _) => !dead.contains(id) }
+    def hits(qg: Array[Int], g: Array[Int]) = qg.count(x => java.util.Arrays.binarySearch(g, x) >= 0)
+    def covering(args: Seq[String], partial: Boolean): Seq[Long] = {
+      val qg = Gram.gramsSorted(partial, args)
+      if (qg.isEmpty) Seq.empty
+      else live.collect { case (id, g) if hits(qg, g) == qg.length => id }.toSeq.sorted
+    }
+    def overlapping(args: Seq[String], minRatio: Double): Seq[(Long, Long, Double)] = {
+      val qg = Gram.gramsSorted(partial = true, args)
+      if (qg.isEmpty || !qg.forall(indexed.contains)) Seq.empty
+      else live.toSeq.map { case (id, g) => (id, hits(qg, g).toLong, hits(qg, g) / qg.length.toDouble) }
+        .filter { case (_, h, r) => h > 0 && r >= minRatio }.sortBy(_._1)
+    }
+    val searches = Seq(new Search(spark, d), new Search(spark, d).tap(_.maxInlinePostings = 0),
+      new Search(spark, d, maxInlineTombstones = 0))
+    val fuzzyQueries = Seq(Seq("the") -> 1.0, Seq("quagga", "wallaby") -> 0.5,
+      Seq("there", "with") -> 0.6, Seq("zzqx", "the") -> 0.1)
+    for ((s, i) <- searches.zipWithIndex) {
+      for ((args, partial) <- candidateQueries :+ (Seq("quagga") -> false)) {
+        val got = s.candidates(args, partial).collect().map(_.getLong(0)).sorted.toSeq
+        assert(got == covering(args, partial), s"search $i: candidates $args partial=$partial")
+      }
+      for ((args, minRatio) <- fuzzyQueries) {
+        val got = s.fuzzy(args, minRatio).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1).toSeq
+        assert(got == overlapping(args, minRatio), s"search $i: fuzzy $args $minRatio")
+      }
+    }
+    // the queries see both live hits and tombstoned ones
+    assert(covering(Seq("quagga"), partial = false).nonEmpty)
+    assert(all.exists { case (id, g) =>
+      dead.contains(id) && hits(Gram.gramsSorted(partial = false, Seq("the")), g) > 0 })
   }
 
   test("search single term 'one' hits lines 1, 5, 6") {
@@ -89,9 +137,11 @@ class ParitySpec extends SparkSuite {
 
   test("fuzzy overlap scoring (fts-lmdb.go:1530-1550): partial grams, ratio filter") {
     // query 'three' partial grams: THR HRE REE — line 2,5,6 contain 'three'
-    val rows = search.fuzzy(Seq("three"), 1.0).collect()
-    assert(rows.map(_.getAs[Long]("doc_id")).sorted.toSeq == Seq(1L, 4L, 5L))
-    assert(rows.forall(_.getAs[Double]("ratio") == 1.0))
+    for (s <- Seq(search, distributed)) {
+      val rows = s.fuzzy(Seq("three"), 1.0).collect()
+      assert(rows.map(_.getAs[Long]("doc_id")).sorted.toSeq == Seq(1L, 4L, 5L))
+      assert(rows.forall(_.getAs[Double]("ratio") == 1.0))
+    }
   }
 
   test("fuzzy result framing: per-group best-match-first; -sort global (ratio asc, url asc)") {
@@ -132,8 +182,11 @@ class ParitySpec extends SparkSuite {
   }
 
   test("inline-id and shuffle-join hydration paths return identical results") {
-    val joinPath = new Search(spark, dir, maxInlineCandidates = 0)
-    for (q <- Seq(Seq("one"), Seq("one", "two"))) {
+    // inline gate 0: shuffle-joined ids, from the driver kernels' local
+    // relation or, with posting gate 0 too, from the distributed kernels
+    val joinPaths = Seq(new Search(spark, dir, maxInlineCandidates = 0),
+      new Search(spark, dir, maxInlineCandidates = 0).tap(_.maxInlinePostings = 0))
+    for (q <- Seq(Seq("one"), Seq("one", "two")); joinPath <- joinPaths) {
       val a = search.search(q).collect().map(_.toSeq).toSeq
       val b = joinPath.search(q).collect().map(_.toSeq).toSeq
       assert(a == b, s"query $q")

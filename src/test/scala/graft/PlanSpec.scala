@@ -1,5 +1,6 @@
 package graft
 
+import scala.util.chaining._
 import graft.build.IndexBuild
 import graft.query.Search
 import graft.sources.WebCorpus
@@ -21,7 +22,9 @@ class PlanSpec extends SparkSuite {
     df.queryExecution.executedPlan.toString
 
   test("postings scan prunes bucket partitions and pushes the key filter") {
-    val p = plan(search.bm25TopK(Seq("the"), 5, conjunctive = false))
+    // posting gate 0: the distributed per-range plan is the returned frame
+    val distributed = new Search(spark, dir).tap(_.maxInlinePostings = 0)
+    val p = plan(distributed.bm25TopK(Seq("the"), 5, conjunctive = false))
     assert(p.contains("PartitionFilters"), p.take(500))
     assert(p.contains("bucket"), "bucket pruning missing")
     assert(p.contains("PushedFilters") && p.contains("key"), "key pushdown missing")
@@ -29,6 +32,32 @@ class PlanSpec extends SparkSuite {
     val d = plan(spark.read.parquet(IndexBuild.dictDir(dir))
       .where(org.apache.spark.sql.functions.col("term") === "the"))
     assert(d.contains("PushedFilters"), d.take(300))
+  }
+
+  test("the driver placement's one collect prunes bucket partitions and pushes the key filter") {
+    val s = new Search(spark, dir)
+    s.dictLookup(Seq("the")) // the dictionary and dead-id probes are not planned queries
+    assert(s.deadIds.contains(Set.empty))
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit = plans.add(f -> qe.executedPlan.toString)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val top = try {
+      val df = s.bm25TopK(Seq("the"), 5, conjunctive = false)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      df
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.size == 1, plans.toString)
+    val (f, p) = plans.peek()
+    assert(f == "collect", f)
+    assert("PartitionFilters: \\[[^\\]]*bucket".r.findFirstIn(p).nonEmpty, s"bucket pruning missing:\n$p")
+    assert("PushedFilters: \\[[^\\]]*key".r.findFirstIn(p).nonEmpty, s"key pushdown missing:\n$p")
+    // the answer is a local relation: no scan, no sort left to run
+    assert(plan(top).contains("LocalTableScan") && !plan(top).contains("Sort"), plan(top))
   }
 
   test("docs hydration scan prunes columns (no terms/grams for search output)") {
@@ -107,10 +136,12 @@ class PlanSpec extends SparkSuite {
 
   test("join-path hydration never sort-merge-joins the chunk store") {
     // force the join path (inline gate 0): heavy chunk-text rows must be
-    // hash-probed, not sorted by doc_id for the join
-    val joinPath = new Search(spark, dir, maxInlineCandidates = 0)
-    for (df <- Seq(joinPath.search(Seq("the")),
-                   joinPath.fuzzySearch(Seq("the"), 0.3))) {
+    // hash-probed, not sorted by doc_id for the join, whether the
+    // candidate ids come from the driver kernels or (posting gate 0) the
+    // distributed ones
+    for (joinPath <- Seq(new Search(spark, dir, maxInlineCandidates = 0),
+                         new Search(spark, dir, maxInlineCandidates = 0).tap(_.maxInlinePostings = 0));
+         df <- Seq(joinPath.search(Seq("the")), joinPath.fuzzySearch(Seq("the"), 0.3))) {
       df.collect()
       val p = df.queryExecution.executedPlan.toString
       assert(!p.contains("SortMergeJoin"),

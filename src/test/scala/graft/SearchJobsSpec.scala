@@ -1,10 +1,9 @@
 package graft
 
+import scala.util.chaining._
 import graft.build.IndexBuild
 import graft.query.Search
 import graft.sources.WebCorpus
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Exact Spark job counts of opening a Search and of its queries: table
   * reads use declared schemas, so no query runs a schema-inference job, the
@@ -22,36 +21,25 @@ class SearchJobsSpec extends SparkSuite {
   }
   private lazy val dir = built("jobs-idx")
 
-  /** Spark jobs started by `f` on this thread (counted by job group). */
-  private def jobs(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"jobs-${java.util.UUID.randomUUID()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group) n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "job count")
-    try { f; ListenerBusDrain(sc); n.get }
-    finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
-  }
-
-  test("opening a Search and both dictionary lookups run at most 3 jobs") {
+  test("opening a Search and both dictionary lookups run at most 2 jobs") {
     val d = dir // the build's jobs are not counted
     val opened = jobs {
       val s = new Search(spark, d)
       assert(s.dictLookup(Seq("the")).nonEmpty)
       assert(s.gramDictLookup(graft.core.Gram.gramsSorted(partial = false, Seq("the")).toSeq).nonEmpty)
     }
-    assert(opened <= 3, s"$opened jobs")
+    // one bounded term-dictionary probe and one gram-dictionary collect
+    assert(opened <= 2, s"$opened jobs")
   }
 
-  test("bm25TopK, candidates and fuzzy run exactly 2 jobs each, every time") {
-    val s = new Search(spark, dir)
+  /** Asserts each of bm25TopK, candidates and fuzzy runs exactly `want`
+    * jobs, on a first and on a repeat run, on a Search with posting gate `gate`.
+    */
+  private def queryJobs(gate: Long, want: Int): Unit = {
+    val s = new Search(spark, dir).tap(_.maxInlinePostings = gate)
     s.dictLookup(Seq("the"))
     s.gramDictLookup(Seq(0))
+    assert(s.deadIds.contains(Set.empty)) // a clean index: the probe runs no job
     val queries = Seq[(String, () => Unit)](
       "bm25TopK" -> (() => s.bm25TopK(Seq("the", "of"), 5, conjunctive = false).collect()),
       "candidates" -> (() => s.candidates(Seq("the")).collect()),
@@ -59,12 +47,21 @@ class SearchJobsSpec extends SparkSuite {
     queries.foreach { case (name, q) =>
       val first = jobs(q())
       val second = jobs(q())
-      assert(first == 2, s"$name: $first jobs on the first run")
-      assert(second == first, s"$name: $second jobs on the second run, $first on the first")
+      assert(first == want, s"$name, gate $gate: $first jobs on the first run")
+      assert(second == first, s"$name, gate $gate: $second jobs on the second run, $first on the first")
     }
   }
 
-  test("a tombstoned index: opening, lookups and the first bm25TopK run at most 7 jobs") {
+  // above the posting gate: the distributed per-range plans
+  test("bm25TopK, candidates and fuzzy run exactly 2 jobs each, every time") {
+    queryJobs(gate = 0L, want = 2)
+  }
+
+  test("bm25TopK, candidates and fuzzy run exactly 1 job each on the driver, every time") {
+    queryJobs(gate = Search.DefaultMaxInlinePostings, want = 1)
+  }
+
+  test("a tombstoned index: opening, lookups and the first bm25TopK run at most 4 jobs") {
     val d = built("jobs-tomb")
     val urls = spark.read.parquet(IndexBuild.docsDir(d)).select("url").distinct()
       .orderBy("url").collect().map(_.getString(0)).take(5).toSeq
@@ -77,10 +74,10 @@ class SearchJobsSpec extends SparkSuite {
       assert(s.gramDictLookup(graft.core.Gram.gramsSorted(partial = false, Seq("the")).toSeq).nonEmpty)
       q()
     }
-    // 3 jobs to open, 2 for the query, and the one bounded dead-id probe
-    assert(first <= 7, s"$first jobs")
+    // 2 jobs to open, 1 for the query, and the one bounded dead-id probe
+    assert(first <= 4, s"$first jobs")
     assert(s.deadIds.exists(_.nonEmpty))
     val again = jobs(q())
-    assert(again == 2, s"$again jobs on a repeat query")
+    assert(again == 1, s"$again jobs on a repeat query")
   }
 }
