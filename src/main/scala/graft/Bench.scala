@@ -96,11 +96,10 @@ object Bench {
     // ONE config for build AND maintenance: the maintenance path addresses
     // docparts/buckets with this modulus, so a drifted copy would measure
     // a corrupted path. Fixed 32-range layout at every corpus size/CPU
-    // level (identical to rounds 1-2 for comparability);
-    // Config.targetRangeDocs is the cluster-scale alternative (constant
-    // per-range size) — measured at 10.24M pages it trades ~7 pp of build
-    // throughput for ~12% on the hot disjunctive query, so the bench
-    // keeps the fixed layout.
+    // level (identical to rounds 1-2 for comparability). A range count
+    // derived from the corpus size (constant per-range size) was measured
+    // at 10.24M pages in round 6: it traded ~7 pp of build throughput for
+    // ~12% on the hot disjunctive query, so it was not kept as an option.
     val benchCfg = IndexBuild.Config(nBuckets = 16, nRanges = 32,
       docParts = 32, shufflePartitions = FixedShufflePartitions)
     val (bstats, buildSec) = time {

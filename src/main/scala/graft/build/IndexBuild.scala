@@ -64,45 +64,25 @@ object IndexBuild {
       * already share, with no big-side shuffle).
       */
     broadcastUrlLimit: Long = 2000000L,
-    /** Parquet scan split size for the build's map-only stages (id stamp,
-      * posting explode). These stages' parallelism equals their scan split
-      * count, so Spark's 128 MB default caps them below the core count on
-      * mid-size inputs — 32 MB keeps every level saturated (the ids stage
-      * measured 2.2x from 4->16 cores under the default, 128 MB / 14 splits).
-      */
-    maxPartitionBytes: Long = 32L * 1024 * 1024,
     /** Auto segment-merge threshold for incremental maintenance: when this
       * many posting appends (updates + chunk adds) have accumulated since
       * the last merge, [[graft.maint.Maintenance.mergeSegments]] splices
       * multi-segment (key, range_id) groups so query cursor fan-in stays
       * bounded. 0 disables (manual `merge-segments` only).
       */
-    autoMergeSegments: Int = 8,
-    /** When > 0, the doc-range count is derived as ceil(nDocs / this)
-      * instead of taken from `nRanges` — per-range kernel work and
-      * query-time range size stay CONSTANT as the corpus grows (more
-      * ranges = more parallelism), which is the 100 TB default: a fixed
-      * range count means every range, and every per-range posting walk,
-      * grows linearly with the corpus. `nRanges` is the floor/fallback.
-      */
-    targetRangeDocs: Long = 0L) {
+    autoMergeSegments: Int = 8) {
     require(ChunkMode.All(chunkMode), s"unknown chunkMode: $chunkMode")
   }
 
   final case class TermFreq(t: String, f: Int)
 
-  /** `explicit_grams` is null for tokenizer-derived chunks (their grams are
-    * deterministic functions of the text, never stored past the build) and
-    * set for caller-supplied-gram chunks (the reference `chunk` command,
-    * [[graft.maint.Maintenance.addChunk]]) — those grams are data, so they
-    * persist in the docs store and survive compaction.
+  /** Parquet scan split size for the build's map-only stages (id stamp,
+    * posting explode). These stages' parallelism equals their scan split
+    * count, so Spark's 128 MB default caps them below the core count on
+    * mid-size inputs — 32 MB keeps every level saturated (the ids stage
+    * measured 2.2x from 4->16 cores under the default, 128 MB / 14 splits).
     */
-  final case class ChunkRow(
-    url: String, warc_ts: Timestamp, lang: String, docpart: Int,
-    chunk_seq: Int, line: Int, rune_off: Long, rune_len: Long,
-    byte_start: Long, byte_len: Long, dl: Int, n_grams: Int,
-    chunk_text: String, terms: Array[TermFreq], grams: Array[Int],
-    explicit_grams: Array[Int] = null)
+  final val MaxPartitionBytes: Long = 32L * 1024 * 1024
 
   /** Engine stats + build params, set by commit records ([[Manifest]]).
     * Every writer after the build (update, addChunk) takes the index's own
@@ -177,10 +157,11 @@ object IndexBuild {
   def emptyTable(spark: SparkSession, table: Table): DataFrame =
     spark.createDataFrame(java.util.Collections.emptyList[Row](), table.schema)
 
-  /** Mode dispatch shared by [[chunkDoc]] and [[chunkDocMeta]] — one place
-    * decides what a "chunk" is.
+  /** Splits one document into chunks by mode — the one place that decides
+    * what a "chunk" is ([[chunkDocMeta]] here; `ChunkMetaSpec`'s full-token
+    * reference checks it against the tokenizer).
     */
-  private def chunksOf(text: String, chunkMode: String): IndexedSeq[graft.core.Chunk] =
+  private[build] def chunksOf(text: String, chunkMode: String): IndexedSeq[graft.core.Chunk] =
     chunkMode match {
       case ChunkMode.Lines => Chunker.linesLenient(text)
       case ChunkMode.Org => graft.core.OrgChunker.chunks(text)
@@ -189,23 +170,15 @@ object IndexBuild {
         0L, text.getBytes("UTF-8").length.toLong, text))
     }
 
-  /** Chunk + tokenize one document — the only place raw text is processed. */
-  def chunkDoc(url: String, warcTs: Timestamp, lang: String, docpart: Int,
-               text: String, chunkMode: String): Seq[ChunkRow] = {
-    chunksOf(text, chunkMode).zipWithIndex.map { case (c, seq) =>
-      val tfs = Tokenizer.termFreqs(c.text).map { case (t, f) => TermFreq(t, f) }
-      val dl = { var s = 0; tfs.foreach(s += _.f); s }
-      val grams = Gram.gramsSorted(partial = false, Seq(c.text))
-      ChunkRow(url, warcTs, lang, docpart, seq, c.line, c.runeOff, c.runeLen,
-        c.byteStart, c.byteLen, dl, grams.length, c.text, tfs, grams)
-    }
-  }
-
   /** Chunk-store row WITHOUT token arrays — the build scratch / docs-store
     * schema (minus doc_id). Terms and grams are deterministic functions of
     * `chunk_text`, re-derived where consumed (posting stages); serializing
     * them would double the scratch footprint and force the posting stages
     * through a scratch⋈url-base join instead of the id-stamped docs store.
+    * `explicit_grams` is null for tokenizer-derived chunks and set for
+    * caller-supplied-gram chunks (the reference `chunk` command,
+    * [[graft.maint.Maintenance.addChunk]]) — those grams are data, so they
+    * persist in the docs store and survive compaction.
     */
   final case class ChunkMeta(
     url: String, warc_ts: Timestamp, lang: String, docpart: Int,
@@ -250,7 +223,7 @@ object IndexBuild {
 
   def build(spark: SparkSession, docs: DataFrame, dir: String,
             cfg: Config = Config()): BuildStats = {
-    spark.conf.set("spark.sql.files.maxPartitionBytes", cfg.maxPartitionBytes.toString)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", MaxPartitionBytes.toString)
     val log = Manifest.open(dir)
     val resumedChunks = stageChunks(spark, docs, dir, cfg, log)
     val stats = stageIds(spark, dir, cfg, log)
@@ -439,14 +412,9 @@ object IndexBuild {
     val n = m("n").asInstanceOf[Long]
     val sumDl = Option(m("sum_dl")).map(_.asInstanceOf[Long]).getOrElse(0L)
     val wm = Option(m("wm")).map(_.toString).getOrElse("")
-    val nDocs = n
-    val nRangesEff =
-      if (cfg.targetRangeDocs > 0)
-        math.max(1L, (nDocs + cfg.targetRangeDocs - 1) / cfg.targetRangeDocs).toInt
-      else cfg.nRanges
-    val rangeSize = math.max(1L, (nDocs + nRangesEff - 1) / nRangesEff)
-    val stats = DocStats(nDocs, sumDl, if (n == 0) 1.0 else sumDl.toDouble / n,
-      rangeSize, cfg.nBuckets, nRangesEff, cfg.k1, cfg.b, wm, nextDocId = nDocs,
+    val rangeSize = math.max(1L, (n + cfg.nRanges - 1) / cfg.nRanges)
+    val stats = DocStats(n, sumDl, if (n == 0) 1.0 else sumDl.toDouble / n,
+      rangeSize, cfg.nBuckets, cfg.nRanges, cfg.k1, cfg.b, wm, nextDocId = n,
       docParts = cfg.docParts, chunkMode = cfg.chunkMode)
     Manifest.commit(dir, Record(Some(Entry("ids", "all", n, 0L, wm,
       (System.nanoTime() - t0) / 1000000)), stats = Some(stats)))

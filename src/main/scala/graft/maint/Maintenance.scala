@@ -394,7 +394,9 @@ object Maintenance {
     *
     * The chunk's postings, docs row and reserved id are ONE commit (the
     * `chunk_add` record): a crash before it leaves no trace, so a caller
-    * re-runs an add whose record is absent.
+    * re-runs an add whose record is absent. The segment merge the add
+    * triggers runs after that commit; [[flushDict]] finishes it after a
+    * crash.
     *
     * `mergeDict=false` defers the dictionary rewrite: the log counts the
     * add as pending and N deferred adds pay ONE dictionary recompute at
@@ -436,13 +438,16 @@ object Maintenance {
 
   /** Fold every pending deferred-add dictionary contribution in ONE
     * idempotent rewrite (see [[addChunk]] `mergeDict=false`); its record
-    * clears the log's pending count. Returns the number of pending chunks
-    * folded in.
+    * clears the log's pending count. Then finish any segment merge the log
+    * owes: an add commits before the merge it triggers, so a kill between
+    * the two leaves the merge to the next writer. Returns the number of
+    * pending chunks folded in.
     */
-  def flushDict(spark: SparkSession, dir: String): Long = {
-    val pending = Manifest.open(dir).pendingDict
-    if (pending > 0) rebuildDictionaries(spark, dir, "flush", "")
-    pending.toLong
+  def flushDict(spark: SparkSession, dir: String, cfg: IndexBuild.Config): Long = {
+    val log = Manifest.open(dir)
+    if (log.pendingDict > 0) rebuildDictionaries(spark, dir, "flush", "")
+    autoMergeIfNeeded(spark, dir, cfg.autoMergeSegments, log, appended = 0)
+    log.pendingDict.toLong
   }
 
   /** Automatic segment-merge policy (the reference's self-contained space

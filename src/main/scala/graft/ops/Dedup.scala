@@ -236,6 +236,11 @@ object Dedup {
       .orderBy("doc_id")
   }
 
+  /** Rounds between two lineage cuts of [[dupClusters]]' label frame: the
+    * printed plan grows ~4x per uncut round (18.7k lines after 4 rounds).
+    */
+  private final val ClusterCheckpointRounds = 3
+
   /** Connected components over a near-duplicate pair graph — the
     * cluster-then-keep-one step that follows any pair generator
     * ([[exactDupGroups]]' groups, [[minhashLshPairs]], [[simhashPairs]]):
@@ -257,6 +262,15 @@ object Dedup {
     * only ever decrease, so convergence is detected by an unchanged 1-row
     * (count, sum) fingerprint — nothing but that scalar ever reaches the
     * driver. Superseded label frames are unpersisted each round.
+    *
+    * Lineage: each round's label frame reads the previous one twice (the
+    * union and the join), so a persisted frame's plan nests every earlier
+    * round's (q61's plan reached 15.7k lines at sf0.001). Every
+    * [[ClusterCheckpointRounds]] rounds, and once more for the returned
+    * frame, the labels are `localCheckpoint`ed — one job over the cached
+    * labels — so no plan nests more than that many rounds and the result
+    * reads a leaf scan. Checkpointed blocks are released when their frame
+    * is garbage-collected.
     */
   def dupClusters(pairs: DataFrame, maxRounds: Int = 50): DataFrame = {
     val e = pairs.select(col("da").as("v"), col("db").as("n"))
@@ -285,9 +299,13 @@ object Dedup {
       val nfp = fingerprint(nxt)
       done = nfp == fp
       lab.unpersist()
-      lab = nxt
-      fp = nfp
       rounds += 1
+      lab = if (done || rounds % ClusterCheckpointRounds == 0) {
+        val cut = nxt.localCheckpoint()
+        nxt.unpersist()
+        cut
+      } else nxt
+      fp = nfp
     }
     if (!done) { // release BOTH frames before failing (round-5 nit: the
       e.unpersist(blocking = false) // failure path leaked them)

@@ -34,7 +34,8 @@ import graft.sources.WebCorpus
   *   Cli bm25 INDEXDIR K and|or TERM...
   *   Cli files INDEXDIR TERM...            (-file cover mode)
   *   Cli chunk INDEXDIR URL DATA [-gx|-gd] [--defer-dict] GRAM...
-  *   Cli flush-dict INDEXDIR               (fold deferred chunk adds in)
+  *   Cli flush-dict INDEXDIR               (fold deferred chunk adds in,
+  *                    finish a segment merge an add left owed)
   *   Cli empty INDEXDIR URL...             (chunk-less groups, skip existing)
   *   Cli update-plan INDEXDIR --synth N    (update -t dry run)
   *   Cli merge-segments INDEXDIR           (splice incremental appends)
@@ -391,7 +392,7 @@ object Cli {
         mergeDict = !rest.contains("--defer-dict"))
       println(s"added chunk doc_id=$id")
     case "flush-dict" :: dir :: Nil =>
-      val n = graft.maint.Maintenance.flushDict(session(), dir)
+      val n = graft.maint.Maintenance.flushDict(session(), dir, cfgFor(dir))
       println(s"flushed $n deferred chunk(s)")
     case "empty" :: dir :: urls if urls.nonEmpty =>
       val n = graft.maint.Maintenance.emptyGroups(session(), dir, urls)

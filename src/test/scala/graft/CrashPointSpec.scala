@@ -163,14 +163,13 @@ class CrashPointSpec extends SparkSuite {
 
   test("addChunk (deferred dictionary) + flushDict: every crash point resumes") {
     // an add is one commit; a caller re-runs it only when its record is
-    // absent (with merging off: a skipped re-run cannot finish the merge
-    // an add triggers, the next append does)
+    // absent, and the flush finishes the merge a committed add triggered
     everyCrashPoint(Some(built)) { dir =>
       if (Manifest.state(dir).completed("chunk_add").isEmpty)
         Maintenance.addChunk(spark, dir, urls.head, "okapi payload the",
           Gram.gramsSorted(partial = false, Seq("zebra okapi")).toSeq,
-          java.sql.Timestamp.valueOf("2023-01-03 00:00:00"), noMerge, mergeDict = false)
-      Maintenance.flushDict(spark, dir)
+          java.sql.Timestamp.valueOf("2023-01-03 00:00:00"), cfg, mergeDict = false)
+      Maintenance.flushDict(spark, dir, cfg)
     }
   }
 

@@ -439,8 +439,8 @@ class MaintenanceSpec extends SparkSuite {
     // no dictionary rewrite happened for any deferred add
     assert(dictState == before)
     // one flush folds all three in; second flush is a no-op
-    assert(Maintenance.flushDict(spark, dir) == 3L)
-    assert(Maintenance.flushDict(spark, dir) == 0L)
+    assert(Maintenance.flushDict(spark, dir, cfg) == 3L)
+    assert(Maintenance.flushDict(spark, dir, cfg) == 0L)
     // explicit-gram retrieval sees the batch once the dict is flushed
     assert(new Search(spark, dir).candidatesByGrams(gs).count() == 3)
     val dict = spark.read.parquet(IndexBuild.dictDir(dir))

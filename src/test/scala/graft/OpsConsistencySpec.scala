@@ -169,6 +169,19 @@ class OpsConsistencySpec extends SparkSuite {
       Seq.empty[(Long, Long)].toDF("da", "db")).collect().isEmpty)
   }
 
+  test("dupClusters on a long chain returns a plan of bounded size") {
+    // a 6-vertex path takes 6 hash-min rounds; without lineage cuts every
+    // round's persisted labels nest the previous round's plan twice, and
+    // the returned plan printed ~300k lines (18.7k on a 4-vertex path)
+    val n = 6
+    val pairs = (1 until n).map(i => (i.toLong, i + 1L)).toDF("da", "db")
+    val got = Dedup.dupClusters(pairs)
+    val lines = got.queryExecution.executedPlan.treeString.linesIterator.size
+    assert(lines < 50, s"dupClusters returned a $lines-line plan")
+    assert(got.collect().map(r => (r.getLong(0), r.getLong(1))).toList ==
+      (1L to n.toLong).map(_ -> 1L).toList)
+  }
+
   test("piiScan counts and redacts emails/phones/IPs per row") {
     def md5hex(s: String): String =
       java.security.MessageDigest.getInstance("MD5")

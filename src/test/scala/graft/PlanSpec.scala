@@ -334,6 +334,26 @@ class PlanSpec extends SparkSuite {
       "vocab membership must resolve map-side via the broadcast join")
   }
 
+  test("jaccardPairs and vocabCoverage compute their shared shuffle once (exchange reuse)") {
+    import spark.implicits._
+    // both ops read one shuffled frame (shingles, per-doc tf) several times
+    // in one plan and persist nothing: exchange reuse is what computes it
+    // once per action
+    val docs = (0L until 40L).map(i => (i, s"alpha beta gamma delta w${i % 7} epsilon"))
+      .toDF("doc_id", "text")
+    val ops = Seq(
+      "jaccardPairs" -> graft.ops.Dedup.jaccardPairs(docs, 400, maxShingleDf = 8),
+      "vocabCoverage" -> graft.ops.TextOps.vocabCoverage(docs, vocabSize = 3))
+    val recomputed = ops.filter { case (_, df) =>
+      df.collect() // reuse shows in the final adaptive plan
+      PlanSpec.Adaptive.collectWithSubqueries(df.queryExecution.executedPlan) {
+        case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => r
+      }.isEmpty
+    }
+    assert(recomputed.isEmpty, recomputed.map { case (name, df) =>
+      s"$name recomputes its shared exchange:\n${plan(df).take(1500)}" }.mkString("\n"))
+  }
+
   test("dedupLinesKeepFirst probes text through a hinted SHUFFLE_HASH join") {
     import spark.implicits._
     val docs = (0L until 60L).map(i =>
@@ -354,4 +374,9 @@ class PlanSpec extends SparkSuite {
     // codegen'd operators print as "*(n) Op" in the plan tree
     assert(p.contains("*("), p.take(400))
   }
+}
+
+object PlanSpec {
+  /** Walks adaptive plans through their query stages and subqueries. */
+  object Adaptive extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 }

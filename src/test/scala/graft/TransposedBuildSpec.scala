@@ -79,25 +79,6 @@ class TransposedBuildSpec extends SparkSuite {
       .map(r => (r.getInt(0), r.getString(1), r.getInt(2)) -> r.getString(3))
       .toMap
 
-  test("targetRangeDocs derives the range count; segments identical to explicit nRanges") {
-    val docs = WebCorpus.generate(spark, 150, seed = 19L, partitions = 2)
-    val a = tmpDir("ranges-explicit")
-    val b = tmpDir("ranges-derived")
-    IndexBuild.build(spark, docs, a, IndexBuild.Config(
-      nBuckets = 4, nRanges = 4, docParts = 2, shufflePartitions = 4))
-    val nDocs = IndexBuild.readDocStats(a).nDocs
-    // pick the per-range target that yields exactly 4 ranges
-    val target = (nDocs + 3) / 4
-    IndexBuild.build(spark, docs, b, IndexBuild.Config(
-      nBuckets = 4, nRanges = 1 /* ignored */, docParts = 2,
-      shufflePartitions = 4, targetRangeDocs = target))
-    assert(IndexBuild.readDocStats(b).nRanges == 4)
-    assert(IndexBuild.readDocStats(b).rangeSize ==
-      IndexBuild.readDocStats(a).rangeSize)
-    for (path <- Seq(IndexBuild.termPostingsDir _, IndexBuild.gramPostingsDir _))
-      assert(segDigest(a, path) == segDigest(b, path))
-  }
-
   test("wide-resume gram stage prunes the shuffle map-side (shuffle-bytes probe)") {
     import java.nio.file.Paths
     val docs = WebCorpus.generate(spark, 300, seed = 14L, partitions = 2)
