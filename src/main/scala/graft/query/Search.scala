@@ -1,8 +1,10 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 import graft.build.IndexBuild
 import graft.build.IndexBuild.readTable
 import graft.core.{Gram, Tokenizer}
@@ -28,19 +30,29 @@ import graft.core.{Gram, Tokenizer}
   *    decided per query by the df sum of the query keys — the exact number
   *    of postings the pruned scan reads ([[perRangeKernel]]): at most
   *    `maxInlinePostings` ([[Search.DefaultMaxInlinePostings]]) with the
-  *    dead-doc set inline, the scan is collected in ONE job and the kernels
-  *    run on the driver, which returns a local relation (BM25 already
-  *    merged to the global top-k); above the gate, or with the dead-doc set
-  *    distributed, the segments are grouped by range_id across the cluster
-  *    (two jobs: the scan's shuffle and the result).
+  *    dead-doc set inline, the kernels run on the driver over the keys'
+  *    segments, which the Search keeps in a driver cache
+  *    ([[Search.SegmentCache]], bounded by the same gate): the keys it
+  *    misses are fetched by ONE collect of the pruned scan, and a query
+  *    whose keys are all cached runs no Spark job. The driver kernels
+  *    return a local relation (BM25 already merged to the global top-k).
+  *    Above the gate, or with the dead-doc set distributed, the segments
+  *    are grouped by range_id across the cluster (two jobs: the scan's
+  *    shuffle and the result);
+  *  - a search whose candidates fit the hydration gate
+  *    (`maxInlineCandidates`) collects its verified rows in ONE job and
+  *    sorts them on the driver into a local relation; above it the ids are
+  *    shuffle-joined to the docs store and sorted across the cluster.
   *
   * Snapshot contract: a Search pins the index as it is at construction —
   * `stats` and the file lists of the docs, postings, dictionary,
   * tombstone and empty-groups tables are fixed then, and every query
   * filters those relations (reference analog: one read transaction per
-  * search, fts-lmdb.go:1691-1721). Open a new Search after any write. A Search
-  * opened before a `compact`, `mergeSegments` or dictionary rewrite may
-  * hit files those operations deleted.
+  * search, fts-lmdb.go:1691-1721). So the posting segments it caches never
+  * go stale: they are the segments of the index it pinned. Open a new
+  * Search after any write. A Search opened before a `compact`,
+  * `mergeSegments` or dictionary rewrite may hit files those operations
+  * deleted.
   */
 class Search(spark: SparkSession, dir: String,
              /** see [[Search.DefaultMaxInlineCandidates]]; tests inject 0
@@ -87,27 +99,41 @@ class Search(spark: SparkSession, dir: String,
     case None => df.join(tombstones.select("doc_id"), Seq("doc_id"), "left_anti")
   }
 
-  /** Run a per-range posting kernel over `segs`, whose key dfs sum to
-    * `postings` (df is the keys' `n_docs` summed over their segments, so
-    * this is exactly the number of postings the scan reads):
+  /** The driver placement's posting segments, kept for the life of this
+    * Search (see [[Search.SegmentCache]]); never shipped in a closure.
+    */
+  @transient private val segCache = new Search.SegmentCache
+
+  /** Dictionary df total of the keys [[segCache]] holds; at most
+    * `maxInlinePostings` as it stood at the last fetch.
+    */
+  private[graft] def cachedPostings: Long = segCache.postings
+
+  /** Run a per-range posting kernel over the segments of `keys` (each with
+    * its dictionary df, the key's `n_docs` summed over its segments, so
+    * the dfs sum to exactly the number of postings the scan reads):
     *  - `Left`, on the driver: with [[deadIds]] inline and at most
-    *    `maxInlinePostings` postings, the pruned scan is collected in one
-    *    job, grouped by range_id, and each range's kernel runs with the
-    *    exact dead set;
+    *    `maxInlinePostings` postings, the keys' segments come from
+    *    [[segCache]], whose misses are fetched by one collect of the
+    *    pruned scan (no job when every key is cached); they are grouped by
+    *    range_id, and each range's kernel runs with the exact dead set;
     *  - `Right`, distributed: the segments are grouped by range_id across
     *    the cluster, the inline dead set travelling in the closure or,
     *    above the tombstone gate, the tombstone ids cogrouped into each
     *    range by range_id — a hot key's postings and a bulk-delete backlog
     *    never reach the driver.
     */
-  private def perRangeKernel[T: Encoder](segs: Dataset[Seg], postings: Long)(
-      kernel: (Iterator[Seg], Long => Boolean) => Iterator[T]): Either[Seq[T], Dataset[T]] =
+  private def perRangeKernel[T: Encoder](keys: Seq[(String, Long)], gramsTable: Boolean)(
+      kernel: (Iterator[Seg], Long => Boolean) => Iterator[T]): Either[Seq[T], Dataset[T]] = {
+    def segs = segments(keys.map(_._1), gramsTable)
+    val gate = maxInlinePostings
     deadIds match {
       case Some(dead) =>
         val live: Long => Boolean =
           if (dead.isEmpty) _ => true else d => !dead.contains(d)
-        if (postings <= maxInlinePostings)
-          Left(segs.collect().groupBy(_.range_id).toSeq.sortBy(_._1)
+        if (keys.map(_._2).sum <= gate)
+          Left(segCache.rows(gramsTable, keys, gate)(segments(_, gramsTable).collect())
+            .groupBy(_.range_id).toSeq.sortBy(_._1)
             .flatMap { case (_, rows) => kernel(rows.iterator, live) })
         else Right(segs.groupByKey(_.range_id).flatMapGroups((_, it) => kernel(it, live)))
       case None =>
@@ -121,6 +147,7 @@ class Search(spark: SparkSession, dir: String,
           kernel(segIt, d => !ds.contains(d))
         })
     }
+  }
 
   /** A [[perRangeKernel]] result as a Dataset: the driver rows as a local
     * relation, which `collect` answers without a job.
@@ -204,7 +231,7 @@ class Search(spark: SparkSession, dir: String,
     val (k1, b, avgdl) = (stats.k1, stats.b, stats.avgdl)
     val nTerms = effective.size
     val conj = conjunctive
-    perRangeKernel(segments(effective, gramsTable = false), effective.map(dict).sum) {
+    perRangeKernel(effective.map(t => t -> dict(t)), gramsTable = false) {
       (rows, live) =>
         val cursors = Search.cursors(rows, idfs, k1, b)
         if (conj && cursors.length != nTerms) Iterator.empty
@@ -290,9 +317,8 @@ class Search(spark: SparkSession, dir: String,
   private def candidatesFromGrams(grams: Array[Int],
                                   df: Map[Int, Long]): Either[Seq[Long], Dataset[Long]] = {
     if (Search.unmatchable(grams, df)) return Left(Seq.empty)
-    val keys = grams.map(IndexBuild.gramKey).toSeq
-    val nKeys = keys.size
-    perRangeKernel(segments(keys, gramsTable = true), grams.map(df).sum) { (rows, live) =>
+    val nKeys = grams.length
+    perRangeKernel(Search.gramKeys(grams, df), gramsTable = true) { (rows, live) =>
       val cursors = Search.cursors(rows, _ => 0.0, 1.2, 0.75)
       if (cursors.length != nKeys) Iterator.empty
       else Wand.intersect(cursors, live)
@@ -313,8 +339,7 @@ class Search(spark: SparkSession, dir: String,
         lit(0.0).as("ratio"))
     val q = grams.length.toDouble
     val minR = minRatio
-    asDataset(perRangeKernel(segments(grams.map(IndexBuild.gramKey).toSeq, gramsTable = true),
-      grams.map(df).sum) { (rows, live) =>
+    asDataset(perRangeKernel(Search.gramKeys(grams, df), gramsTable = true) { (rows, live) =>
         Wand.overlapCounts(Search.cursors(rows, _ => 0.0, 1.2, 0.75), live)
           .filter { case (_, hits) => hits / q >= minR }
           .map { case (d, hits) => (d, hits.toLong, hits / q) }
@@ -416,8 +441,9 @@ class Search(spark: SparkSession, dir: String,
     val dfs = gramDictLookup(grams.toSeq)
     val minDf = if (Search.unmatchable(grams, dfs)) 0L else grams.map(dfs).min
     val cands = candidatesFromGrams(grams, dfs) // dictionary looked up once
+    val inline = minDf <= maxInlineCandidates
     val hydrated0 =
-      if (minDf <= maxInlineCandidates)
+      if (inline)
         docs.where($"doc_id".isInCollection(cands.fold(identity, _.collect().toSeq)))
       else
         // SHUFFLE_HASH with the id-only candidate side as build: a sort-
@@ -433,6 +459,9 @@ class Search(spark: SparkSession, dir: String,
     val hydrated = regexFiltered
       .withColumn("offset", verifyCol($"chunk_text", args, partial))
       .where($"offset" >= 0)
+    val cols = Seq($"url", $"doc_id", $"line", ($"rune_off" + 1).as("position"),
+      $"offset", $"chunk_text", $"byte_start")
+    if (inline) return sortedOnDriver(hydrated.select(cols: _*), limitPerGroup)
     // W5 limit-per-group window only when a limit is actually set — with
     // the default unlimited it would add a whole shuffle just to compute a
     // row number the projection drops
@@ -443,11 +472,29 @@ class Search(spark: SparkSession, dir: String,
         hydrated.withColumn("rn", row_number().over(w))
           .where($"rn" <= limitPerGroup)
       }
-    limited
-      .select($"url", $"doc_id", $"line", ($"rune_off" + 1).as("position"),
-        $"offset", $"chunk_text", $"byte_start")
+    limited.select(cols: _*)
       .orderBy($"url", $"byte_start")
       .drop("byte_start")
+  }
+
+  /** [[search]]'s output below the hydration gate, where the rows number
+    * at most `maxInlineCandidates`: `rows` (url, doc_id, ..., byte_start)
+    * collected in one job, sorted like `orderBy(url, byte_start)` (url in
+    * UTF-8 byte order, as Spark compares strings, not Java's UTF-16 order;
+    * ties by doc_id), cut to the first `limitPerGroup` rows of each url and
+    * returned without byte_start as a local relation.
+    */
+  private def sortedOnDriver(rows: DataFrame, limitPerGroup: Int): DataFrame = {
+    val sorted = rows.collect()
+      .map(r => ((UTF8String.fromString(r.getString(0)), r.getLong(6), r.getLong(1)), r))
+      .sortBy(_._1)(Ordering.Tuple3(Search.Utf8Order, Ordering.Long, Ordering.Long))
+      .map(_._2)
+    val perUrl = scala.collection.mutable.HashMap.empty[String, Int].withDefaultValue(0)
+    val kept =
+      if (limitPerGroup == Int.MaxValue) sorted
+      else sorted.filter { r => perUrl(r.getString(0)) += 1; perUrl(r.getString(0)) <= limitPerGroup }
+    spark.createDataFrame(java.util.Arrays.asList(kept.map(r => Row.fromSeq(r.toSeq.init)): _*),
+      StructType(rows.schema.init))
   }
 
   /** Search-time staleness check (reference findBadFiles,
@@ -687,7 +734,10 @@ object Search {
     * unmeasured (the index's vocabulary runs out first). Hot slices of that
     * index sit far below the gate: BM25 `the of and` 33,264 term postings,
     * candidates `the and` 72,996 gram postings, search `the` 48,081. A hot
-    * key of a 10^12-doc corpus never reaches the driver.
+    * key of a 10^12-doc corpus never reaches the driver. The gate also
+    * bounds the df total of the segments a Search keeps cached on the
+    * driver ([[SegmentCache]]): about 1 MB per million postings on that
+    * index, so a few MB at most.
     */
   final val DefaultMaxInlinePostings = 1000000L
 
@@ -714,6 +764,68 @@ object Search {
       case ((key, segs), i) =>
         new Wand.TermCursor(i, idf(key), segs.sortBy(_.first_doc).map(_.postings), k1, b)
     }
+
+  /** Spark's string order: UTF-8 bytes, unsigned. */
+  private val Utf8Order: Ordering[UTF8String] = _ compareTo _
+
+  /** The (gram-postings key, df) pairs of a gram query's grams. */
+  private def gramKeys(grams: Array[Int], df: Map[Int, Long]): Seq[(String, Long)] =
+    grams.toSeq.map(g => IndexBuild.gramKey(g) -> df(g))
+
+  /** The driver placement's posting segments of one Search: for each
+    * (table, key), that key's `Seg` rows for every range and its
+    * dictionary df. The dfs of the held keys sum to at most the bound of
+    * the last [[rows]] call, the same gate that bounds what one query may
+    * hold on the driver (on a 5k-page index about 1 byte per posting:
+    * 34,622 segment bytes for the 33,264 postings of BM25 `the of and`).
+    * The index a Search pins never changes under it, so an entry never
+    * goes stale; least-recently-used keys make room. A lock guards the
+    * map and the fetch job runs outside it, so concurrent queries on one
+    * Search are safe and wait for each other only at the map.
+    */
+  private[query] final class SegmentCache {
+    private val lru =
+      new java.util.LinkedHashMap[(Boolean, String), (Long, Array[Seg])](16, 0.75f, true)
+    private var total = 0L
+
+    def postings: Long = synchronized(total)
+
+    /** The segments of `keys` (key, df) of one table, whose dfs sum to at
+      * most `bound`: cached keys are read from the map, the missing ones
+      * fetched together by `fetch` (no call when none is missing) and kept
+      * after evicting least-recently-used keys outside `keys` until the
+      * held dfs plus theirs fit `bound`.
+      */
+    def rows(gramsTable: Boolean, keys: Seq[(String, Long)], bound: Long)(
+        fetch: Seq[String] => Array[Seg]): Array[Seg] = {
+      val (hits, missing) = synchronized {
+        keys.partitionMap { case kd @ (k, _) =>
+          Option(lru.get((gramsTable, k))).map(_._2).toLeft(kd)
+        }
+      }
+      if (missing.isEmpty) return hits.flatten.toArray
+      val fetched = fetch(missing.map(_._1))
+      synchronized {
+        val query = keys.map(k => (gramsTable, k._1)).toSet
+        // a concurrent query may have fetched some of them meanwhile
+        val incoming = missing.filterNot(k => lru.containsKey((gramsTable, k._1)))
+        val need = incoming.map(_._2).sum
+        val it = lru.entrySet.iterator // least recently used first
+        while (total + need > bound && it.hasNext) {
+          val e = it.next()
+          if (!query(e.getKey)) { total -= e.getValue._1; it.remove() }
+        }
+        if (total + need <= bound) {
+          val byKey = fetched.groupBy(_.key)
+          incoming.foreach { case (k, df) =>
+            lru.put((gramsTable, k), (df, byKey.getOrElse(k, Array.empty[Seg])))
+            total += df
+          }
+        }
+      }
+      hits.flatten.toArray ++ fetched
+    }
+  }
 
   /** A gram query matches nothing when it has no grams or one of them is
     * absent from the gram dictionary (reference exits 1,

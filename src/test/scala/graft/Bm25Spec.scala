@@ -77,6 +77,70 @@ class Bm25Spec extends SparkSuite {
       .forall(r => !dead.contains(r._1)))
   }
 
+  /** Each query, both modes, k = 10: the oracle's answers. */
+  private def bruteAnswers(s: Search, qs: Seq[Seq[String]]): Map[(Seq[String], Boolean), Seq[(Long, Double)]] =
+    (for (q <- qs; conj <- Seq(false, true))
+      yield (q, conj) -> collectTopK(s.bm25BruteForce(q, 10, conj))).toMap
+
+  /** Runs every query forward then backward, `rounds` times, on `s` and
+    * checks each answer against `want`; `after` runs after every query.
+    */
+  private def assertRepeatsAreBrute(s: Search, qs: Seq[Seq[String]], rounds: Int,
+                                    want: Map[(Seq[String], Boolean), Seq[(Long, Double)]],
+                                    after: () => Unit = () => ()): Unit =
+    for (_ <- 1 to rounds; q <- qs ++ qs.reverse; conj <- Seq(false, true)) {
+      assert(collectTopK(s.bm25TopK(q, 10, conj)) == want((q, conj)), s"q=$q conjunctive=$conj")
+      after()
+    }
+
+  test("repeated and interleaved queries on one Search == brute force, fresh and churned") {
+    val churned = ChurnedIndex(spark, tmpDir("bm25-repeat"),
+      graft.sources.WebCorpus.generate(spark, 200, seed = 42L, partitions = 2),
+      IndexBuild.Config(nBuckets = 4, nRanges = 4, docParts = 4,
+        shufflePartitions = 8, blockSize = 16))
+    val qs = queries :+ Seq("quagga", "the") :+ Seq("wallaby")
+    for (d <- Seq(dir, churned)) {
+      val s = new Search(spark, d)
+      assertRepeatsAreBrute(s, qs, rounds = 2, bruteAnswers(s, qs))
+      assert(s.cachedPostings > 0)
+    }
+  }
+
+  /** A Search whose posting gate holds the keys of the costliest query but
+    * not of every query, so the segment cache must evict.
+    */
+  private def smallGate(): (Search, Long) = {
+    val s = new Search(spark, dir)
+    val dfs = queries.map(q => s.dictLookup(q.flatMap(graft.core.Tokenizer.terms)))
+    val gate = dfs.map(_.values.sum).max
+    assert(dfs.flatten.toMap.values.sum > gate, "every key fits the gate")
+    (s.tap(_.maxInlinePostings = gate), gate)
+  }
+
+  test("the segment cache never holds more postings than the gate, and evictions keep answers") {
+    val (s, gate) = smallGate()
+    var peak = 0L
+    assertRepeatsAreBrute(s, queries, rounds = 2, bruteAnswers(s, queries), () => {
+      assert(s.cachedPostings <= gate, s"${s.cachedPostings} cached postings, gate $gate")
+      peak = math.max(peak, s.cachedPostings)
+    })
+    assert(peak > 0)
+  }
+
+  test("two threads querying one Search both get the brute-force answers") {
+    val (s, _) = smallGate()
+    val want = bruteAnswers(s, queries)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    val threads = Seq(queries, queries.reverse).map { qs =>
+      new Thread(() =>
+        try assertRepeatsAreBrute(s, qs, rounds = 3, want)
+        catch { case t: Throwable => failures.add(t) })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    assert(failures.isEmpty, failures.toString)
+  }
+
   test("conjunctive results are a subset of disjunctive with equal scores") {
     val conj = collectTopK(search.bm25TopK(Seq("the", "of"), 200, conjunctive = true)).toMap
     val disj = collectTopK(search.bm25TopK(Seq("the", "of"), 10000, conjunctive = false)).toMap

@@ -61,8 +61,10 @@ class ParitySpec extends SparkSuite {
         qg.forall(x => java.util.Arrays.binarySearch(g, x) >= 0)
       }.map(_._1).toSeq.sorted
     }
+    // twice over, forward then backward: repeated keys come from the driver
+    // placement's segment cache
     for (s <- Seq(new Search(spark, d), new Search(spark, d).tap(_.maxInlinePostings = 0));
-         (args, partial) <- candidateQueries) {
+         (args, partial) <- candidateQueries ++ candidateQueries.reverse) {
       val got = s.candidates(args, partial).collect().map(_.getLong(0)).sorted.toSeq
       assert(got == covering(args, partial), s"query $args partial=$partial")
     }
@@ -98,7 +100,8 @@ class ParitySpec extends SparkSuite {
       new Search(spark, d, maxInlineTombstones = 0))
     val fuzzyQueries = Seq(Seq("the") -> 1.0, Seq("quagga", "wallaby") -> 0.5,
       Seq("there", "with") -> 0.6, Seq("zzqx", "the") -> 0.1)
-    for ((s, i) <- searches.zipWithIndex) {
+    // the driver placement answers twice, its keys then cached
+    for ((s, i) <- searches.zipWithIndex :+ (searches.head -> 0)) {
       for ((args, partial) <- candidateQueries :+ (Seq("quagga") -> false)) {
         val got = s.candidates(args, partial).collect().map(_.getLong(0)).sorted.toSeq
         assert(got == covering(args, partial), s"search $i: candidates $args partial=$partial")
@@ -190,6 +193,27 @@ class ParitySpec extends SparkSuite {
       val a = search.search(q).collect().map(_.toSeq).toSeq
       val b = joinPath.search(q).collect().map(_.toSeq).toSeq
       assert(a == b, s"query $q")
+    }
+  }
+
+  test("inline search orders urls by UTF-8 bytes and limits per url like the join path") {
+    import spark.implicits._
+    // UTF-16 order would put U+1F600 (a surrogate pair) before U+FFFF
+    val urls = Seq("u\uFFFF", "u\uD83D\uDE00", "ua", "uZ")
+    val ts = java.sql.Timestamp.valueOf("2020-01-01 00:00:00")
+    val d = tmpDir("utf8-idx")
+    IndexBuild.build(spark, urls.map(u => (u, ts, "alpha beta\ngamma\nalpha delta\n", "en"))
+      .toDF("url", "warc_ts", "text", "lang"), d,
+      IndexBuild.Config(nBuckets = 4, nRanges = 2, docParts = 2, shufflePartitions = 4))
+    val inline = new Search(spark, d)
+    val joined = new Search(spark, d, maxInlineCandidates = 0)
+    for (limit <- Seq(Int.MaxValue, 1)) {
+      val a = inline.search(Seq("alpha"), limitPerGroup = limit).collect().map(_.toSeq).toSeq
+      val b = joined.search(Seq("alpha"), limitPerGroup = limit).collect().map(_.toSeq).toSeq
+      assert(a == b, s"limit $limit")
+      val want = Seq("uZ", "ua", "u\uFFFF", "u\uD83D\uDE00")
+        .flatMap(u => Seq.fill(if (limit == 1) 1 else 2)(u))
+      assert(a.map(_.head) == want, s"limit $limit")
     }
   }
 

@@ -21,6 +21,16 @@ class PlanSpec extends SparkSuite {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** The executed plan of the search's hydration collect: the one that
+    * scans the docs store's chunk text.
+    */
+  private def hydrationPlan(args: Seq[String]): String = {
+    val (_, plans) = executedPlans(search.search(args))
+    val hydration = plans.filter(_._2.contains("chunk_text"))
+    assert(hydration.map(_._1) == Seq("collect"), plans.mkString("\n"))
+    hydration.head._2
+  }
+
   test("postings scan prunes bucket partitions and pushes the key filter") {
     // posting gate 0: the distributed per-range plan is the returned frame
     val distributed = new Search(spark, dir).tap(_.maxInlinePostings = 0)
@@ -38,21 +48,9 @@ class PlanSpec extends SparkSuite {
     val s = new Search(spark, dir)
     s.dictLookup(Seq("the")) // the dictionary and dead-id probes are not planned queries
     assert(s.deadIds.contains(Set.empty))
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                             ns: Long): Unit = plans.add(f -> qe.executedPlan.toString)
-      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                             e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    val top = try {
-      val df = s.bm25TopK(Seq("the"), 5, conjunctive = false)
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      df
-    } finally spark.listenerManager.unregister(listener)
+    val (top, plans) = executedPlans(s.bm25TopK(Seq("the"), 5, conjunctive = false))
     assert(plans.size == 1, plans.toString)
-    val (f, p) = plans.peek()
+    val (f, p) = plans.head
     assert(f == "collect", f)
     assert("PartitionFilters: \\[[^\\]]*bucket".r.findFirstIn(p).nonEmpty, s"bucket pruning missing:\n$p")
     assert("PushedFilters: \\[[^\\]]*key".r.findFirstIn(p).nonEmpty, s"key pushdown missing:\n$p")
@@ -60,8 +58,13 @@ class PlanSpec extends SparkSuite {
     assert(plan(top).contains("LocalTableScan") && !plan(top).contains("Sort"), plan(top))
   }
 
-  test("docs hydration scan prunes columns (no terms/grams for search output)") {
+  test("an inline search answer is a local relation with no sort left to run") {
     val p = plan(search.search(Seq("the")))
+    assert(p.contains("LocalTableScan") && !p.contains("Sort"), p)
+  }
+
+  test("docs hydration scan prunes columns (no terms/grams for search output)") {
+    val p = hydrationPlan(Seq("the"))
     // ReadSchema of the docs scan must not include the heavy token arrays
     val readSchemas = "ReadSchema: [^\\n]*".r.findAllIn(p).toList
     val docsScans = readSchemas.filter(_.contains("chunk_text"))
@@ -129,7 +132,7 @@ class PlanSpec extends SparkSuite {
     val got = df.collect().map(r => r.getString(0) -> r.getInt(1)).toMap
     assert(got("the quick brown fox") == 4 && got("twotwo") == -1)
     // the search plan must not contain a Scala UDF anywhere
-    val p = plan(search.search(Seq("the", "of")))
+    val p = hydrationPlan(Seq("the", "of"))
     assert(!p.contains("UDF"), s"Scala UDF leaked into the search plan:\n${p.take(600)}")
     assert(p.contains("verify_match"), "native verify expression missing from the plan")
   }

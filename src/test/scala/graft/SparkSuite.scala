@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -27,6 +29,22 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     sc.setJobGroup(group, "job count")
     try { f; ListenerBusDrain(sc); n.get }
     finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+  }
+
+  /** `body`'s result and the (action, executed plan) of every query it ran. */
+  def executedPlans[T](body: => T): (T, Seq[(String, String)]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(f -> qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val r = body
+      ListenerBusDrain(spark.sparkContext)
+      (r, plans.toArray(Array.empty[(String, String)]).toSeq)
+    } finally spark.listenerManager.unregister(listener)
   }
 }
 
