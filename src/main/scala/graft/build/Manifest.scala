@@ -49,7 +49,9 @@ object Manifest {
                           resets: Seq[String] = Nil, removes: Seq[String] = Nil,
                           staging: Option[String] = None)
 
-  /** Completed units, current DocStats, pending deferred dictionary adds. */
+  /** Completed units, current DocStats, and the appends (adds, updates)
+    * committed since the last dictionary rewrite.
+    */
   final case class State(live: Vector[Entry], stats: Option[DocStats], pendingDict: Int) {
     def completed(stage: String): Set[String] = live.filter(_.stage == stage).map(_.unit).toSet
     /** A compact's swap record is committed and its rebuild is not. */
@@ -63,7 +65,7 @@ object Manifest {
       r.stats.orElse(stats),
       r.entry.map(_.stage) match {
         case Some("dictionary" | "upd_dict") => 0
-        case Some("chunk_add") => pendingDict + 1
+        case Some("chunk_add" | "update") => pendingDict + 1
         case _ => pendingDict
       })
   }

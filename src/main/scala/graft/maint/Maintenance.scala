@@ -19,14 +19,14 @@ import graft.core.Postings
   *    validity byte, fts-lmdb.go:66-69). O(deleted), no index rewrite —
   *    "DOES NOT RECLAIM SPACE" (fulltext.go:403-404).
   *  - update(newDocs): diff (url, warc_ts) against the live chunk-store
-  *    view; tombstone stale versions, then APPEND the delta only — new doc
+  *    view; tombstone stale versions and APPEND the delta only — new doc
   *    ids from the nextDocId high-water mark (reference: changed file ->
   *    old group tombstoned, re-added with fresh OIDs, openInputFile
   *    fts-lmdb.go:533-544), delta posting segments appended per
   *    (key, range_id), dictionary merged. Work is O(delta); untouched
-  *    chunk/posting files are never rewritten. Every append stage commits
-  *    one record keyed by the delta hash, so a killed update resumes
-  *    without duplicating ids or postings.
+  *    chunk/posting files are never rewritten. The tombstones, the
+  *    appends and the advanced DocStats are one commit, as the
+  *    reference's one write transaction (cmdUpdate through `env.Update`).
   *  - compact(): drop every tombstoned (url, warc_ts) version from the
   *    chunk store and rebuild the derived stages — the reference's 3-scan
   *    space reclamation; ids re-densify, avgdl/df refresh.
@@ -55,13 +55,11 @@ object Maintenance {
   private[graft] val EmptyGroupsTable = Table("empty_groups",
     StructType.fromDDL("url STRING"), optional = true)
 
-  /** The stages compact resets: the build stages its rebuild re-runs, the
-    * append counters, and update's stages (upd_docs is LAST: the docs store
-    * is the diff source, so appending it commits the whole update).
+  /** The stages compact resets: the build stages its rebuild re-runs, and
+    * the appends, merges and dictionary rewrites of the index it replaces.
     */
   private val DerivedStages = Seq("ids", "postings_terms", "postings_grams", "dictionary",
-    "cleanup", "seg_merge", "chunk_add", "upd_stats", "upd_postings_terms",
-    "upd_postings_grams", "upd_dict", "upd_docs")
+    "cleanup", "seg_merge", "chunk_add", "update", "upd_dict")
 
   /** Target delta chunks per shuffle partition for [[update]]'s adaptive
     * partition count — ~the full build's measured rows-per-partition
@@ -104,25 +102,29 @@ object Maintenance {
     docsOfUrls(readTable(spark, dir, DocsTable), stats.docParts, urls)
       .select(col("url"), col("warc_ts"), col("doc_id"))
 
-  /** Append tombstone rows for the not-yet-tombstoned ones of (url,
-    * warc_ts, doc_id) `docRows`. Idempotent: re-running tombstones nothing
-    * new (anti-join on doc_id).
+  /** The not-yet-tombstoned ones of (url, warc_ts, doc_id) `docRows`
+    * (anti-join on doc_id), cached, and their count.
     */
-  private def tombstoneRows(spark: SparkSession, dir: String,
-                            docRows: DataFrame): Long = {
-    val existing = tombstones(spark, dir)
+  private def newTombstones(spark: SparkSession, dir: String,
+                            docRows: DataFrame): (DataFrame, Long) = {
     val rows = docRows
       .select(col("url"), col("warc_ts"), col("doc_id"))
-      .join(existing.select("doc_id"), Seq("doc_id"), "left_anti")
+      .join(tombstones(spark, dir).select("doc_id"), Seq("doc_id"), "left_anti")
       .select(col("url"), col("warc_ts"), col("doc_id"))
       .cache()
-    val n = rows.count()
+    (rows, rows.count())
+  }
+
+  /** Commit tombstone rows for [[newTombstones]] of `docRows`. Idempotent:
+    * re-running tombstones nothing new.
+    */
+  private def tombstoneRows(spark: SparkSession, dir: String, docRows: DataFrame): Unit = {
+    val (rows, n) = newTombstones(spark, dir, docRows)
     if (n > 0) Manifest.commitStaged(dir) { stg =>
       rows.write.mode("append").parquet(TombstonesTable.path(stg))
       Record(None)
     }
     rows.unpersist()
-    n
   }
 
   /** Query-side live view (validity check P5): docs minus tombstoned ids. */
@@ -246,13 +248,29 @@ object Maintenance {
 
   /** M3: incremental reindex from a docs snapshot (or changelog batch with
     * `partialSnapshot=true`). Returns (nNew, nChanged, nDeleted). See the
-    * object scaladoc for the append-only model and resume guards.
+    * object scaladoc for the append-only model.
+    *
+    * The stale versions' tombstones, the delta's segments of both posting
+    * families, its docs rows and the DocStats they advance to are ONE
+    * commit, the `update` record (its unit is the delta's first doc id): a
+    * kill before it leaves no trace, so a re-run redoes the whole update.
+    * The dictionary rewrite and the segment merge follow as their own
+    * commits, as [[addChunk]]'s do; a re-run after a kill past the
+    * `update` record finds nothing changed and finishes them
+    * ([[flushDict]]).
     */
   def update(spark: SparkSession, dir: String, newDocs: DataFrame,
              cfg: IndexBuild.Config,
              partialSnapshot: Boolean = false): (Long, Long, Long) = {
     import spark.implicits._
     val log = Manifest.open(dir)
+    // an older writer committed an update as six records; one it left
+    // unfinished (ids reserved, postings maybe appended, no docs rows)
+    // would be appended again here under fresh ids
+    val unfinished = log.completed("upd_stats") -- log.completed("upd_docs")
+    if (unfinished.nonEmpty) throw new IllegalStateException(
+      s"$dir: an update an older writer left unfinished (upd_stats " +
+        s"${unfinished.mkString(", ")}); finish it with that writer or rebuild the index")
     val stats0 = log.docStats(dir)
     // partial mode: ONE cached docpart-pruned scan of the batch urls' doc
     // rows feeds BOTH the version diff and the stale-row tombstone pass
@@ -263,51 +281,41 @@ object Maintenance {
       if (partialSnapshot) Some(batchDocs(spark, dir, stats0, newDocs).cache())
       else None
     val diff = diffVersions(spark, dir, newDocs, batchRows).cache()
-    // ONE job for the three action counts AND the delta batch key (round 5
-    // ran a groupBy-count job plus a separate bit_xor job; at changelog
-    // scale each driver job is pure latency). bit_xor skips the NULLs the
-    // CASE produces for non-delta rows, so the key is identical to the
-    // round-5 delta-only aggregate.
+    // ONE job for the three action counts: at changelog scale each driver
+    // job is pure latency
     val cRow = diff.agg(
       count(when($"action" === "deleted", 1)).as("nd"),
       count(when($"action" === "added", 1)).as("na"),
-      count(when($"action" === "changed", 1)).as("nc"),
-      expr("bit_xor(CASE WHEN action IN ('added','changed') THEN " +
-        "xxhash64(url, CAST(n_ts AS string)) END)").as("h")).head()
+      count(when($"action" === "changed", 1)).as("nc")).head()
     val (nDeleted, nNew, nChanged) = (cRow.getLong(0), cRow.getLong(1), cRow.getLong(2))
     if (nDeleted + nNew + nChanged == 0) {
       diff.unpersist(); batchRows.foreach(_.unpersist())
-      // a re-run after a crash past upd_docs: finish its segment merge
-      autoMergeIfNeeded(spark, dir, cfg.autoMergeSegments, log, appended = 0)
+      // a re-run after a kill past the update record: finish its
+      // dictionary rewrite and segment merge
+      flushDict(spark, dir, cfg)
       return (0, 0, 0)
     }
 
-    // 1. tombstone every stale version (changed urls' old docs + deleted
-    //    urls) — naturally idempotent, no guard needed
+    // 1. the tombstone rows of every stale version (changed urls' old docs
+    //    + deleted urls)
     val staleUrls = diff.where($"action".isin("changed", "deleted")).select($"url")
-    tombstoneRows(spark, dir, batchRows match {
+    val staleDocs = batchRows match {
       case Some(rows) => rows.join(staleUrls.distinct(), Seq("url"))
       case None => batchDocs(spark, dir, stats0, staleUrls)
-    })
-
-    val delta = diff.where($"action".isin("added", "changed"))
-      .select($"url", $"n_ts")
-    val deltaCount = nNew + nChanged
-    if (deltaCount == 0) {
-      // deletion-only snapshot: the tombstones above are the whole update
-      // (the bit_xor of an empty delta is NULL — there is no batch to key)
+    }
+    if (nNew + nChanged == 0) {
+      // deletion-only snapshot: the tombstones are the whole update
+      tombstoneRows(spark, dir, staleDocs)
       diff.unpersist(); batchRows.foreach(_.unpersist())
       return (0L, 0L, nDeleted)
     }
-    // deterministic batch key over the delta membership (stable across
-    // partial-failure re-runs: the chunk store — the diff source — is only
-    // appended in the LAST stage). bit_xor, not sum: a sum of 64-bit
-    // hashes overflows under ANSI arithmetic on real-size deltas
-    val deltaKey = java.lang.Long.toHexString(cRow.getLong(3)) + "_" + deltaCount
+    // cached while the diff they come from still is
+    val (stale, nStale) = newTombstones(spark, dir, staleDocs)
 
     // 2. chunk + tokenize the delta only, with the index's own chunker
     //    and docpart modulus (docsOfUrls prunes with the persisted one)
-    val deltaChunks = newDocs.join(delta.select($"url"), Seq("url"))
+    val delta = diff.where($"action".isin("added", "changed")).select($"url")
+    val deltaChunks = newDocs.join(delta, Seq("url"))
       .withColumn("docpart", pmod(xxhash64($"url"), lit(stats0.docParts)).cast("int"))
       .select($"url", $"warc_ts", $"lang", $"text", $"docpart")
       .as[(String, java.sql.Timestamp, String, String, Int)]
@@ -324,35 +332,8 @@ object Maintenance {
     val nDeltaChunks = aggRow.getLong(0)
     val deltaSumDl = if (aggRow.isNullAt(1)) 0L else aggRow.getLong(1)
     val deltaWm = if (aggRow.isNullAt(2)) "" else aggRow.getString(2)
+    val base = stats0.nextDocId
 
-    val done = (stage: String) => log.completed(stage)(deltaKey)
-    // ids are reserved by the upd_stats stage; on resume, recover the base
-    // from the (deterministic) delta size
-    val base = if (done("upd_stats")) stats0.nextDocId - nDeltaChunks else stats0.nextDocId
-    def guarded(stage: String)(write: String => Unit): Unit =
-      if (!done(stage)) Manifest.commitStaged(dir) { stg =>
-        val t0 = System.nanoTime()
-        write(stg)
-        Record(Some(Entry(stage, deltaKey, nDeltaChunks, 0L, deltaWm,
-          (System.nanoTime() - t0) / 1000000)))
-      }
-
-    // 3. reserve ids + advance stats BEFORE any id-consuming append, so a
-    //    crashed batch can never collide with the next one
-    if (!done("upd_stats")) {
-      val wm = if (deltaWm > stats0.watermark) deltaWm else stats0.watermark
-      Manifest.commit(dir, Record(Some(Entry("upd_stats", deltaKey, nDeltaChunks, 0L, deltaWm, 0L)),
-        stats = Some(stats0.copy(
-          nDocs = stats0.nDocs + nDeltaChunks,
-          sumDl = stats0.sumDl + deltaSumDl,
-          nextDocId = base + nDeltaChunks,
-          watermark = wm))))
-    }
-
-    // 4-6. append the delta's posting segments (both families), recompute
-    //    the dictionaries, and LAST append its docs store rows — the diff
-    //    source, so completing it makes the whole update a no-op on re-run
-    //    ([[appendDelta]]; every write commits its own record).
     // SCALE-ADAPTIVE shuffle partitioning (not the full-build constant): a
     // changelog delta is usually a tiny fraction of the corpus, and pushing
     // its few thousand rows through the full build's partition count pays
@@ -368,17 +349,28 @@ object Maintenance {
     // cache the id-stamped delta: three consumers (two posting appends +
     // the docs append) would otherwise each re-run the sort + url-base join
     val withIds = withIds0.cache()
-    // the dictionary step is an idempotent full recompute from segment
-    // metadata — this batch's appended segments AND any pending
-    // deferred-add contributions are all published by then
-    appendDelta(spark, withIds, deltaCfg, stats0)(guarded) {
-      if (!done("upd_dict")) rebuildDictionaries(spark, dir, deltaKey, deltaWm)
+    // 3. the one commit: tombstones, both posting families, docs rows and
+    //    the advanced DocStats
+    Manifest.commitStaged(dir) { stg =>
+      val t0 = System.nanoTime()
+      if (nStale > 0) stale.write.mode("append").parquet(TombstonesTable.path(stg))
+      appendDelta(spark, withIds, deltaCfg, stats0, stg)
+      Record(Some(Entry("update", base.toString, nDeltaChunks, 0L, deltaWm,
+          (System.nanoTime() - t0) / 1000000)),
+        stats = Some(stats0.copy(
+          nDocs = stats0.nDocs + nDeltaChunks,
+          sumDl = stats0.sumDl + deltaSumDl,
+          nextDocId = base + nDeltaChunks,
+          watermark = if (deltaWm > stats0.watermark) deltaWm else stats0.watermark)))
     }
+    stale.unpersist()
     cleanup()
     withIds.unpersist()
     deltaChunks.unpersist()
-    autoMergeIfNeeded(spark, dir, cfg.autoMergeSegments, log,
-      appended = if (done("upd_docs")) 0 else 1)
+    // 4. the dictionary recompute (from segment metadata: this batch's
+    //    segments AND any pending deferred-add contributions), then the merge
+    rebuildDictionaries(spark, dir, s"update_$base", deltaWm)
+    autoMergeIfNeeded(spark, dir, cfg.autoMergeSegments, log, appended = 1)
     (nNew, nChanged, nDeleted)
   }
 
@@ -426,7 +418,7 @@ object Maintenance {
       gs.length, data, explicit_grams = gs)
     val withId = Seq(row).toDS().toDF().withColumn("doc_id", lit(docId))
     Manifest.commitStaged(dir) { stg =>
-      appendDelta(spark, withId, cfg, stats0)(_ => write => write(stg))(())
+      appendDelta(spark, withId, cfg, stats0, stg)
       Record(Some(Entry("chunk_add", docId.toString, 1L, 0L, "", 0L)),
         stats = Some(stats0.copy(nDocs = stats0.nDocs + 1, sumDl = stats0.sumDl + dl,
           nextDocId = docId + 1)))
@@ -436,12 +428,13 @@ object Maintenance {
     docId
   }
 
-  /** Fold every pending deferred-add dictionary contribution in ONE
-    * idempotent rewrite (see [[addChunk]] `mergeDict=false`); its record
-    * clears the log's pending count. Then finish any segment merge the log
-    * owes: an add commits before the merge it triggers, so a kill between
+  /** Fold every pending dictionary contribution — deferred adds (see
+    * [[addChunk]] `mergeDict=false`) and an update killed before its
+    * dictionary rewrite — in ONE idempotent rewrite; its record clears the
+    * log's pending count. Then finish any segment merge the log owes: an
+    * add or update commits before the merge it triggers, so a kill between
     * the two leaves the merge to the next writer. Returns the number of
-    * pending chunks folded in.
+    * pending appends folded in.
     */
   def flushDict(spark: SparkSession, dir: String, cfg: IndexBuild.Config): Long = {
     val log = Manifest.open(dir)
@@ -460,7 +453,7 @@ object Maintenance {
     */
   private def autoMergeIfNeeded(spark: SparkSession, dir: String, threshold: Int,
                                 log: Manifest.State, appended: Int): Unit = {
-    val appends = log.completed("upd_docs").size + log.completed("chunk_add").size + appended
+    val appends = log.completed("update").size + log.completed("chunk_add").size + appended
     val mergedAt = log.completed("seg_merge").map(_.toInt).foldLeft(0)(math.max)
     if (threshold > 0 && appends - mergedAt >= threshold) {
       val n = mergeSegments(spark, dir, gramsTable = false) +
@@ -490,36 +483,27 @@ object Maintenance {
         removes = Seq(IndexBuild.DictTable.name, IndexBuild.GramDictTable.name))
     }
 
-  /** The append path shared by [[update]] and [[addChunk]], for an
-    * id-stamped delta of docs-store rows, in commit order:
-    *  1. its segments of both posting families — independent jobs over
-    *     the same delta with separate outputs, overlapped (§2.6);
-    *  2. `dict`, the caller's dictionary step;
-    *  3. LAST its docs-store rows: the docs store is the diff source and
-    *     the live view, so this append commits the delta.
-    * `step(stage)(write)` runs each write with the root dir it writes
-    * under: [[update]] commits each as its own record keyed by its delta
-    * (a killed update resumes without duplicating postings), [[addChunk]]
-    * writes all of them into its one staging dir.
+  /** The append path shared by [[update]] and [[addChunk]]: write an
+    * id-stamped delta of docs-store rows under `root`, the caller's
+    * staging dir — its segments of both posting families (independent
+    * jobs over the same delta with separate outputs, overlapped, §2.6),
+    * then its docs-store rows. The caller commits them as one record.
+    * (Overlapping the docs write too cost update one more Spark job on
+    * perfbench `churn --seed 1`: 42.5 jobs per update against 41.5.)
     */
   private def appendDelta(spark: SparkSession, withIds: DataFrame,
-                          cfg: IndexBuild.Config, stats: IndexBuild.DocStats)(
-      step: String => (String => Unit) => Unit)(dict: => Unit): Unit = {
-    def postings(grams: Boolean)(root: String): Unit =
+                          cfg: IndexBuild.Config, stats: IndexBuild.DocStats,
+                          root: String): Unit = {
+    def postings(grams: Boolean)(): Unit =
       IndexBuild.buildSegRows(spark, withIds, cfg, stats, grams, 0 until stats.nBuckets)
         .write.mode("append").partitionBy("bucket")
         .parquet(if (grams) IndexBuild.gramPostingsDir(root)
                  else IndexBuild.termPostingsDir(root))
-    IndexBuild.inParallel(
-      () => step("upd_postings_terms")(postings(grams = false)),
-      () => step("upd_postings_grams")(postings(grams = true)))
-    dict
-    step("upd_docs") { root =>
+    IndexBuild.inParallel(postings(grams = false), postings(grams = true))
       // align column order with the docs-store schema
       withIds.select(DocsTable.schema.fieldNames.map(col).toIndexedSeq: _*)
         .write.mode("append").partitionBy("docpart")
         .parquet(IndexBuild.docsDir(root))
-    }
   }
 
   /** Coalesce multi-segment (key, range_id) groups left by incremental

@@ -15,8 +15,9 @@ import graft.maint.Maintenance
   *
   * Shape: `readStream` over a docs changelog -> `foreachBatch` running the
   * incremental [[Maintenance.update]] against the index snapshot. Each
-  * micro-batch is checkpointed by Spark (exactly-once foreachBatch with the
-  * idempotent, manifest-guarded build stages).
+  * micro-batch is checkpointed by Spark (exactly-once foreachBatch with
+  * the update committed as one record of the index's commit log, so a
+  * replayed batch finds its update done or redoes it whole).
   */
 object StreamingIndex {
 

@@ -1,12 +1,15 @@
 package graft
 
 import graft.build.{IndexBuild, Manifest}
+import graft.build.Manifest.{Entry, Record}
+import graft.maint.Maintenance
 import graft.query.Search
 import graft.sources.WebCorpus
 import java.nio.file.{Files, Paths}
 
 /** The commit log fails fast, naming the path, on an index it cannot
-  * read: one written before the log existed, or one with a corrupt record.
+  * read: one written before the log existed, one with a corrupt record, or
+  * one an older writer's update left unfinished.
   */
 class CommitLogSpec extends SparkSuite {
 
@@ -42,5 +45,18 @@ class CommitLogSpec extends SparkSuite {
     assert(e.getMessage.contains(last.toString), e.getMessage)
     val e2 = intercept[IllegalStateException](Manifest.exists(dir))
     assert(e2.getMessage.contains(last.toString), e2.getMessage)
+  }
+
+  test("an update an older writer left unfinished fails naming the index; a finished one is inert") {
+    // the older writer reserved an update's ids in an upd_stats record and
+    // committed its docs rows last, in an upd_docs record of the same unit
+    val dir = tmpDir("log-older-update")
+    val docs = WebCorpus.readmeCorpus(spark)
+    IndexBuild.build(spark, docs, dir, cfg)
+    Manifest.commit(dir, Record(Some(Entry("upd_stats", "5f3a_2", 2L, 0L, "", 0L))))
+    val e = intercept[IllegalStateException](Maintenance.update(spark, dir, docs, cfg))
+    assert(e.getMessage.contains(dir), e.getMessage)
+    Manifest.commit(dir, Record(Some(Entry("upd_docs", "5f3a_2", 2L, 0L, "", 0L))))
+    assert(Maintenance.update(spark, dir, docs, cfg) == ((0L, 0L, 0L)))
   }
 }

@@ -107,21 +107,32 @@ class CrashPointSpec extends SparkSuite {
   }
   private object Capture
 
-  /** Every crash point of `op` on a copy of `base` (an empty dir when
-    * None) resumes, by running `op` again, to the uninterrupted result.
-    * One uninterrupted run captures the index before each of its durable
-    * steps (the state a kill at that step leaves); each captured state is
-    * then resumed, three at a time. Returns the number of crash points.
+  /** One uninterrupted run of `op` on a copy of `base` (an empty dir when
+    * None), capturing the index before each of its durable steps: the
+    * state a kill at that step leaves. Returns the finished copy and the
+    * (label, captured dir) of steps 1 to n.
     */
-  private def everyCrashPoint(base: Option[String])(op: String => Unit): Long = {
+  private def crashStates(base: Option[String])(
+      op: String => Unit): (String, IndexedSeq[(String, String)]) = {
     val ref = base.fold(tmpDir("crash-empty"))(copyOf)
     val states = new java.util.concurrent.ConcurrentHashMap[Long, (String, String)]
     Manifest.arm((k, label) => { states.put(k, (label, capture(ref))); false })
     op(ref)
     val n = Manifest.disarm()
+    (ref, (1L to n).map(states.get))
+  }
+
+  /** Every crash point of `op` on a copy of `base` resumes, by running
+    * `op` again, to the uninterrupted result ([[crashStates]]); the
+    * captured states are resumed three at a time. Returns the number of
+    * crash points.
+    */
+  private def everyCrashPoint(base: Option[String])(op: String => Unit): Long = {
+    val (ref, states) = crashStates(base)(op)
+    val n = states.size.toLong
     val want = snapshot(ref)
     def check(k: Long): Option[String] = {
-      val (label, dir) = states.get(k)
+      val (label, dir) = states((k - 1).toInt)
       op(dir)
       val got = snapshot(dir)
       val differs = got.productElementNames.zip(got.productIterator.zip(want.productIterator))
@@ -155,6 +166,50 @@ class CrashPointSpec extends SparkSuite {
     everyCrashPoint(Some(built)) { dir =>
       Maintenance.update(spark, dir, batch, cfg, partialSnapshot = true)
     }
+  }
+
+  /** What recovery must leave whole: the live (url, chunk_seq) set, the
+    * tombstoned (url, warc_ts) set and the DocStats.
+    */
+  private def visible(dir: String) = (
+    Maintenance.liveDocs(spark, dir).select($"url", $"chunk_seq").as[(String, Int)]
+      .collect().toSet,
+    Maintenance.tombstones(spark, dir).select($"url", $"warc_ts")
+      .as[(String, java.sql.Timestamp)].collect().toSet,
+    IndexBuild.readDocStats(dir))
+
+  /** True when a posting segment reaches a doc id past every docs row. */
+  private def orphanPostings(dir: String): Boolean = {
+    val maxDoc = IndexBuild.readTable(spark, dir, IndexBuild.DocsTable)
+      .agg(max($"doc_id")).head().getLong(0)
+    Seq(IndexBuild.TermPostingsTable, IndexBuild.GramPostingsTable).exists(t =>
+      IndexBuild.readTable(spark, dir, t).agg(max($"last_doc")).head().getLong(0) > maxDoc)
+  }
+
+  /** The recovery every next writer runs ([[Manifest.open]]) leaves an
+    * update killed at any durable step either not done or done: its
+    * tombstones, appends and DocStats are one commit. This covers writers
+    * only: a reader that lists the tables while a publish is moving files
+    * in can still see part of a commit, until readers pin a log version.
+    */
+  test("update: recovery from every crash point leaves the index before or after it") {
+    val before = visible(built)
+    val (ref, states) = crashStates(Some(built)) { dir =>
+      Maintenance.update(spark, dir, batch, cfg, partialSnapshot = true)
+    }
+    val after = visible(ref)
+    assert(before != after)
+    val failures = states.zipWithIndex.flatMap { case ((label, dir), i) =>
+      Manifest.open(dir)
+      val got = visible(dir)
+      val orphans = orphanPostings(dir)
+      FileUtils.deleteQuietly(new File(dir))
+      val at = s"crash at durable step ${i + 1} of ${states.size} ($label)"
+      if (got != before && got != after) Some(s"$at: neither the index before nor after")
+      else if (orphans) Some(s"$at: postings of doc ids with no docs row")
+      else None
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
   }
 
   test("delete: every crash point resumes") {
@@ -191,7 +246,7 @@ class CrashPointSpec extends SparkSuite {
     val want = copyOf(built)
     Maintenance.update(spark, want, batch, cfg, partialSnapshot = true)
     val killed = copyOf(built)
-    Manifest.arm((_, label) => label.startsWith("record upd_postings_terms"))
+    Manifest.arm((_, label) => label.startsWith("record update "))
     try intercept[Manifest.InjectedCrash](
       Maintenance.update(spark, killed, batch, cfg, partialSnapshot = true))
     finally Manifest.disarm()
