@@ -7,11 +7,11 @@ import graft.core.{Chunker, Gram, Postings, Tokenizer}
 import graft.build.Manifest.{Entry, Record}
 import java.sql.Timestamp
 
-/** Distributed inverted-index build: web docs table -> chunked + tokenized
-  * chunk store -> stable dense doc ids -> term/gram posting segments
+/** Distributed inverted-index build: web docs table -> chunked, id-stamped
+  * docs store (stable dense doc ids) -> term/gram posting segments
   * (delta+varint blocks with block-max metadata) -> dictionary + doc stats,
-  * with a per-partition lineage manifest so a killed job resumes without
-  * re-tokenizing completed partitions.
+  * with a per-unit lineage record in the commit log so a killed job resumes
+  * without redoing completed units.
   *
   * This is the Spark-native rebuild of the reference's `input` path
   * (reference: cmdInput fts-lmdb.go:509-531, indexLines 578-603,
@@ -25,9 +25,10 @@ import java.sql.Timestamp
   * doc-partitioned at query time.
   *
   * Stage layout under `indexDir/`:
-  *   chunks/        partitioned by docpart (resume unit; tokenization lives
-  *                  here, checkpointed — resume never re-tokenizes)
-  *   docs/          chunk rows + dense stable doc_id, range-sorted by doc_id
+  *   docs/          chunk rows + dense stable doc_id, partitioned by
+  *                  docpart = hash(url) (stage `ids`, unit `all`: a per-url
+  *                  chunk-count pre-pass, then one chunk + stamp + write
+  *                  pass over the source)
   *   postings_terms/ bucket=N/ (term, range_id, first/last doc, stats, bytes)
   *   postings_grams/ bucket=N/ (gram, ...) — trigram candidate index
   *   dictionary/    (term, df, cf, max_tf);  gram_dict/ (gram, df)
@@ -51,7 +52,7 @@ object IndexBuild {
   final case class Config(
     nBuckets: Int = 8,          // term-hash write partitions (cluster: 100s)
     nRanges: Int = 8,           // doc-id range shards = the salt (cluster: 1000s)
-    docParts: Int = 8,          // chunk-stage resume units
+    docParts: Int = 8,          // docs-store partitions (maintenance prunes to them)
     shufflePartitions: Int = 32,
     blockSize: Int = 128,
     k1: Double = 1.2,
@@ -104,9 +105,10 @@ object IndexBuild {
                             k1: Double, b: Double, watermark: String,
                             nextDocId: Long, docParts: Int, chunkMode: String)
 
-  final case class BuildStats(nDocs: Long, nChunkParts: Int, nTermBuckets: Int,
-                              nGramBuckets: Int, resumedChunks: Int,
-                              resumedTermBuckets: Int)
+  /** `resumedTermBuckets`: the term posting buckets a previous run had
+    * already committed.
+    */
+  final case class BuildStats(nDocs: Long, resumedTermBuckets: Int)
 
   /** An engine-owned parquet table: its directory under the index dir and
     * the schema its writer produces, in the order a schema-inferring read
@@ -126,7 +128,6 @@ object IndexBuild {
     StructType(s.filterNot(_.name == part) :+ s(part))
   }
 
-  val ChunksTable = Table("chunks", readSchema[ChunkMeta]("docpart"))
   val DocsTable = Table("docs",
     readSchema[ChunkMeta]("docpart", StructField("doc_id", LongType)))
   val TermPostingsTable = Table("postings_terms", readSchema[SegRow]("bucket"))
@@ -136,7 +137,6 @@ object IndexBuild {
     StructType.fromDDL("term STRING, df BIGINT, cf BIGINT, max_tf INT"))
   val GramDictTable = Table("gram_dict", StructType.fromDDL("gram INT, df BIGINT"))
 
-  def chunksDir(dir: String) = ChunksTable.path(dir)
   def docsDir(dir: String) = DocsTable.path(dir)
   def termPostingsDir(dir: String) = TermPostingsTable.path(dir)
   def gramPostingsDir(dir: String) = GramPostingsTable.path(dir)
@@ -170,11 +170,9 @@ object IndexBuild {
         0L, text.getBytes("UTF-8").length.toLong, text))
     }
 
-  /** Chunk-store row WITHOUT token arrays — the build scratch / docs-store
-    * schema (minus doc_id). Terms and grams are deterministic functions of
-    * `chunk_text`, re-derived where consumed (posting stages); serializing
-    * them would double the scratch footprint and force the posting stages
-    * through a scratch⋈url-base join instead of the id-stamped docs store.
+  /** Docs-store row WITHOUT token arrays and doc_id. Terms and grams are
+    * deterministic functions of `chunk_text`, re-derived where consumed
+    * (posting stages); storing them would double the docs store.
     * `explicit_grams` is null for tokenizer-derived chunks and set for
     * caller-supplied-gram chunks (the reference `chunk` command,
     * [[graft.maint.Maintenance.addChunk]]) — those grams are data, so they
@@ -186,11 +184,11 @@ object IndexBuild {
     byte_start: Long, byte_len: Long, dl: Int, n_grams: Int,
     chunk_text: String, explicit_grams: Array[Int] = null)
 
-  /** Chunk one document for the build scratch: dl/n_grams are computed
+  /** Chunk one document for the docs store: dl/n_grams are computed
     * (tokenization runs) but the arrays are not carried — `docLength` is an
     * allocation-free run count and `gramCount` a bitset count (no term
-    * strings, no gram array: this stage only needs the NUMBERS; the full
-    * arrays are re-derived where consumed, in the posting stages).
+    * strings, no gram array: the docs store only needs the NUMBERS; the
+    * full arrays are re-derived where consumed, in the posting stages).
     */
   def chunkDocMeta(url: String, warcTs: Timestamp, lang: String, docpart: Int,
                    text: String, chunkMode: String): Seq[ChunkMeta] = {
@@ -225,108 +223,46 @@ object IndexBuild {
             cfg: Config = Config()): BuildStats = {
     spark.conf.set("spark.sql.files.maxPartitionBytes", MaxPartitionBytes.toString)
     val log = Manifest.open(dir)
-    val resumedChunks = stageChunks(spark, docs, dir, cfg, log)
-    val stats = stageIds(spark, dir, cfg, log)
-    // the scratch is consumed the moment the id-stamped docs store commits
-    // — dropping it HERE (not at the end) halves the build's peak storage;
-    // the posting stages read the docs store (doc ids already stamped, no
-    // url-base join) and re-derive token arrays from chunk text
-    stageCleanup(dir, log)
-    // term + gram posting builds are independent (separate scans, separate
-    // shuffles, separate output dirs, separate log stages) — OVERLAP
-    // them so each one's kernel-stage stragglers back-fill with the other's
-    // tasks instead of idling the cluster (guide §2.6). Trade-off at scale:
-    // both families' shuffles are in flight at once (2x transient shuffle
-    // disk); kernel memory bounds are per-task and unchanged.
+    val stats = stageIds(spark, docs, dir, cfg, log)
+    val resumedTerm = stageDerived(spark, dir, cfg, stats, log)
+    BuildStats(stats.nDocs, resumedTerm)
+  }
+
+  /** The stages downstream of the docs store: both posting families, then
+    * the dictionaries. Term + gram posting builds are independent
+    * (separate scans, shuffles, output dirs and log stages) — OVERLAP them
+    * so each one's kernel-stage stragglers back-fill with the other's tasks
+    * instead of idling the cluster (guide §2.6). Trade-off at scale: both
+    * families' shuffles are in flight at once (2x transient shuffle disk);
+    * kernel memory bounds are per-task and unchanged. Returns the term
+    * buckets a previous run had committed.
+    */
+  private[graft] def stageDerived(spark: SparkSession, dir: String, cfg: Config,
+                                  stats: DocStats, log: Manifest.State): Int = {
     var resumedTerm = 0
     inParallel(
       () => resumedTerm = stagePostings(spark, dir, cfg, stats, grams = false, log),
       () => stagePostings(spark, dir, cfg, stats, grams = true, log))
     stageDictionary(spark, dir, log)
-    BuildStats(stats.nDocs, cfg.docParts, cfg.nBuckets, cfg.nBuckets,
-      resumedChunks, resumedTerm)
-  }
-
-  /** Drop the build scratch (pre-id chunk store) once the docs store has
-    * committed. The docs store keeps the same rows (chunk metadata + text,
-    * docpart-partitioned) plus doc_id; token arrays are deterministic
-    * functions of the text and are never stored at all — the reference's
-    * index is ~2x raw text (README.org:2-4) and ours meets that only
-    * without duplicate copies of the corpus. Resume is unaffected: every
-    * stage after `ids` reads the docs store.
-    */
-  private def stageCleanup(dir: String, log: Manifest.State): Unit =
-    if (!log.completed("cleanup")("all"))
-      Manifest.commitStaged(dir)(_ =>
-        Record(Some(Entry("cleanup", "all", 0L, 0L, "", 0L)), removes = Seq(ChunksTable.name)))
-
-  /** Stage 1 — chunk + tokenize, partitioned by docpart = hash(url).
-    * Resume unit: docpart. Completed parts are never re-read/re-tokenized.
-    */
-  private[graft] def stageChunks(spark: SparkSession, docs: DataFrame, dir: String,
-                          cfg: Config, log: Manifest.State): Int = {
-    import spark.implicits._
-    val done = log.completed("chunks")
-    val missing = (0 until cfg.docParts).filterNot(p => done(p.toString))
-    if (missing.isEmpty) return cfg.docParts
-    val t0 = System.nanoTime()
-    val src = docs
-      .withColumn("docpart", pmod(xxhash64(col("url")), lit(cfg.docParts)).cast("int"))
-      .where(col("docpart").isin(missing: _*))
-      .select($"url", $"warc_ts", $"lang", $"text", $"docpart")
-      .as[(String, Timestamp, String, String, Int)]
-    // NO shuffle here: tokenizing in-place off the source scan avoids moving
-    // raw text across the wire (at 100TB that shuffle would dominate the
-    // build). Each scan task writes to the docpart dirs it encounters —
-    // more, smaller files, which Iceberg/bin-packing compacts in production.
-    val chunked = src.flatMap { case (url, ts, lang, text, part) =>
-      chunkDocMeta(url, ts, lang, part, text, cfg.chunkMode)
-    }
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    chunked.toDF()
-      .write.mode("overwrite").partitionBy("docpart").parquet(chunksDir(dir))
-    val wallMs = (System.nanoTime() - t0) / 1000000
-    // per-unit row counts + per-PART watermarks in one small scan of the
-    // fresh chunk store (count is footer metadata; max(warc_ts) reads one
-    // tiny column). Each docpart's record holds its own true max — the
-    // log is the durable audit record, and a batch-global max would
-    // overstate parts whose real watermark is lower.
-    val stats = readTable(spark, dir, ChunksTable)
-      .where(col("docpart").isin(missing: _*))
-      .groupBy("docpart").agg(count(lit(1)).as("rows"),
-        max($"warc_ts").cast("string").as("wm"))
-      .collect()
-    val byPart = stats.map(r =>
-      r.getInt(0) -> (r.getLong(1), if (r.isNullAt(2)) "" else r.getString(2))).toMap
-    missing.foreach { p =>
-      val (rows, wm) = byPart.getOrElse(p, (0L, ""))
-      val bytes = dirBytes(s"${chunksDir(dir)}/docpart=$p")
-      Manifest.commit(dir, Record(Some(Entry("chunks", p.toString, rows, bytes, wm, wallMs / missing.size))))
-    }
-    done.size
-  }
-
-  private def dirBytes(path: String): Long = {
-    val f = new java.io.File(path)
-    if (!f.isDirectory) 0L
-    else org.apache.commons.io.FileUtils.sizeOfDirectory(f)
+    resumedTerm
   }
 
   /** Stamp dense, deterministic doc ids `base + rank(url, chunk_seq)` onto
-    * chunk rows via a distributed prefix sum: only tiny (url, count) pairs
-    * shuffle; the heavy chunk rows are id-stamped map-side. Returns the
-    * stamped frame and a cleanup thunk — call it after the action that
-    * consumes the frame (the cached prefix-sum RDD is re-evaluated by that
-    * action).
+    * chunk rows via a distributed prefix sum over `counts`, the per-url
+    * chunk counts (url, cnt) of `chunks`: only those tiny pairs shuffle; the
+    * heavy chunk rows are id-stamped map-side. Returns the stamped frame,
+    * the chunk total the counts sum to and a cleanup thunk — call it after
+    * the action that consumes the frame (the cached prefix-sum RDD is
+    * re-evaluated by that action).
     */
-  private[graft] def assignIds(spark: SparkSession, chunks: DataFrame,
-                               base: Long, cfg: Config): (DataFrame, () => Unit) = {
+  private[graft] def assignIds(spark: SparkSession, chunks: DataFrame, counts: DataFrame,
+                               base: Long, cfg: Config): (DataFrame, Long, () => Unit) = {
     import spark.implicits._
     // NOTE: repartitionByRange's sampling pass evaluates the aggregate
     // twice; persisting it first was measured SLOWER (cache
-    // materialization of the (url,cnt) rows costs more than the repeated
-    // url-column scan, which parquet column pruning keeps tiny)
-    val perUrl = chunks.groupBy($"url").agg(count(lit(1)).as("cnt"))
+    // materialization of the (url,cnt) rows costs more than re-reading the
+    // aggregate's shuffle output)
+    val perUrl = counts.select($"url", $"cnt")
       .repartitionByRange(cfg.shufflePartitions, $"url")
       .sortWithinPartitions($"url")
       .as[(String, Long)]
@@ -356,9 +292,11 @@ object IndexBuild {
     //
     // Either way the rows reach the writer sorted by (docpart, url,
     // chunk_seq): docpart leads so the partitioned docs write needs no
-    // extra sort of its own, and url-order implies doc_id-ascending
-    // output files (base is allocated in url rank order) — parquet
-    // row-group min/max stats prune doc_id point lookups.
+    // extra sort of its own. Each written file is therefore doc_id-
+    // ascending (base is allocated in url rank order), but docpart =
+    // hash(url) spreads every url rank over every docpart, so each file
+    // spans nearly the whole id range: its min/max stats prune no doc_id
+    // lookup.
     val withIds =
       if (nUrls <= cfg.broadcastUrlLimit)
         chunks // map-only id stamp: chunk rows never shuffle
@@ -372,51 +310,75 @@ object IndexBuild {
           .withColumn("doc_id", $"base" + $"chunk_seq")
           .drop("base")
           .sortWithinPartitions($"docpart", $"url", $"chunk_seq")
-    (withIds, () => { perUrl.unpersist(blocking = false); () })
+    (withIds, offsets.last - base, () => { perUrl.unpersist(blocking = false); () })
   }
 
-  /** Stage 2 — stable dense doc ids: global rank in (url, chunk_seq) order,
-    * computed as a distributed prefix sum over per-url chunk counts
-    * (doc_id = base(url) + chunk_seq; chunk_seq is dense 0..n-1 per url, so
-    * this equals the global rank). Deterministic and independent of
-    * partition count (reference analog: monotone OID allocation,
-    * fts-lmdb.go:855-867, made reproducible per SURVEY §2.6 M6).
-    *
-    * Below the broadcast gate only the tiny (url, count) pairs shuffle;
-    * the heavy chunk rows (text) are id-stamped map-side and written
-    * straight back out — at the 10^12-doc target the docs write is
-    * embarrassingly parallel. Above the gate see the shuffle-hash note in
-    * [[assignIds]]; in production the same join runs as an Iceberg
-    * storage-partitioned join on the shared hash(url) bucketing with no
-    * big-side shuffle either.
+  /** Stamp doc ids from 0 onto `chunks` ([[assignIds]] over their per-url
+    * `counts`) and write them as the docs store under `root`. The
+    * DocStats (n_docs, sum_dl, watermark) ride along with the write
+    * (Observation): no extra pass. `cfg` supplies the parameters the
+    * DocStats record. Fails, naming `root`, when the rows written are not
+    * the rows `counts` counted: the ids would then not be dense.
     */
-  private[graft] def stageIds(spark: SparkSession, dir: String, cfg: Config,
-                              log: Manifest.State): DocStats = {
+  private[graft] def writeDocs(spark: SparkSession, chunks: DataFrame, counts: DataFrame,
+                               root: String, cfg: Config): DocStats = {
     import spark.implicits._
-    if (log.completed("ids")("all")) return log.docStats(dir)
-    val t0 = System.nanoTime()
-    val chunks = readTable(spark, dir, ChunksTable)
-    val (withIds, cleanup) = assignIds(spark, chunks, 0L, cfg)
-    // doc stats ride along with the write (Observation): no extra pass.
-    // docpart partitioning makes the docs store the maintenance diff
-    // source (partition-pruned changelog updates) — the chunk scratch is
-    // dropped right after this stage commits (stageCleanup).
+    val (withIds, counted, cleanup) = assignIds(spark, chunks, counts, 0L, cfg)
     val obs = org.apache.spark.sql.Observation()
     withIds
       .observe(obs, count(lit(1)).as("n"),
         sum($"dl".cast("long")).as("sum_dl"),
         max($"warc_ts").cast("string").as("wm"))
-      .write.mode("overwrite").partitionBy("docpart").parquet(docsDir(dir))
+      .write.mode("overwrite").partitionBy("docpart").parquet(docsDir(root))
     cleanup()
     val m = obs.get
     val n = m("n").asInstanceOf[Long]
+    if (n != counted) throw new IllegalStateException(
+      s"$root: wrote $n chunk rows but counted $counted: the source changed between the " +
+        "count pre-pass and the docs write; re-run the build over a stable source")
     val sumDl = Option(m("sum_dl")).map(_.asInstanceOf[Long]).getOrElse(0L)
     val wm = Option(m("wm")).map(_.toString).getOrElse("")
-    val rangeSize = math.max(1L, (n + cfg.nRanges - 1) / cfg.nRanges)
-    val stats = DocStats(n, sumDl, if (n == 0) 1.0 else sumDl.toDouble / n,
-      rangeSize, cfg.nBuckets, cfg.nRanges, cfg.k1, cfg.b, wm, nextDocId = n,
-      docParts = cfg.docParts, chunkMode = cfg.chunkMode)
-    Manifest.commit(dir, Record(Some(Entry("ids", "all", n, 0L, wm,
+    DocStats(n, sumDl, if (n == 0) 1.0 else sumDl.toDouble / n,
+      math.max(1L, (n + cfg.nRanges - 1) / cfg.nRanges), cfg.nBuckets, cfg.nRanges,
+      cfg.k1, cfg.b, wm, nextDocId = n, docParts = cfg.docParts, chunkMode = cfg.chunkMode)
+  }
+
+  /** Stage 1 — the docs store: stable dense doc ids, the global rank in
+    * (url, chunk_seq) order, as a distributed prefix sum over per-url chunk
+    * counts (doc_id = base(url) + chunk_seq; chunk_seq is dense 0..n-1 per
+    * url, so this equals the global rank). Deterministic and independent of
+    * partition count (reference analog: monotone OID allocation,
+    * fts-lmdb.go:855-867, made reproducible per SURVEY §2.6 M6).
+    *
+    * Two passes over the source, neither of which shuffles text: a
+    * pre-pass that only chunks (no tokenizing) to count chunks per url,
+    * then one pass that chunks and count-tokenizes each document in its
+    * scan task, stamps the ids map-side ([[assignIds]]) and writes the
+    * docs store, partitioned by docpart = hash(url) — the maintenance diff
+    * source (partition-pruned changelog updates). Resume unit: `all`; a
+    * kill inside the stage redoes both passes. The docs store of a
+    * compact's swap ([[graft.maint.Maintenance.compact]]) stands in for
+    * this stage until the compact finishes: the source is never read then.
+    */
+  private def stageIds(spark: SparkSession, docs: DataFrame, dir: String, cfg: Config,
+                       log: Manifest.State): DocStats = {
+    import spark.implicits._
+    if (log.completed("ids")("all") || log.compactPending) return log.docStats(dir)
+    val t0 = System.nanoTime()
+    val mode = cfg.chunkMode
+    val counts = docs.select($"url", $"text").as[(String, String)]
+      .map { case (url, text) => (url, chunksOf(text, mode).size.toLong) }
+      .toDF("url", "n")
+      .groupBy($"url").agg(sum($"n").as("cnt"))
+    val chunks = docs
+      .withColumn("docpart", pmod(xxhash64(col("url")), lit(cfg.docParts)).cast("int"))
+      .select($"url", $"warc_ts", $"lang", $"text", $"docpart")
+      .as[(String, Timestamp, String, String, Int)]
+      .flatMap { case (url, ts, lang, text, part) =>
+        chunkDocMeta(url, ts, lang, part, text, mode)
+      }.toDF()
+    val stats = writeDocs(spark, chunks, counts, dir, cfg)
+    Manifest.commit(dir, Record(Some(Entry("ids", "all", stats.nDocs, 0L, stats.watermark,
       (System.nanoTime() - t0) / 1000000)), stats = Some(stats)))
     stats
   }
@@ -536,7 +498,7 @@ object IndexBuild {
 
   /** Posting segment rows of id-stamped docs-store rows (`docs`: doc_id,
     * dl, chunk_text, explicit_grams) for the given buckets. ONE shuffle per
-    * family, then [[SegmentKernel]]; shared by the full build (stage 3/4)
+    * family, then [[SegmentKernel]]; shared by the full build (stages 2/3)
     * and the maintenance appends ([[graft.maint.Maintenance.update]],
     * [[graft.maint.Maintenance.addChunk]]). Bucket count, k1 and b come
     * from `stats` — the index's own parameters — so an append lands in the
@@ -687,7 +649,7 @@ object IndexBuild {
     }
   }
 
-  /** Stage 3/4 — posting segments. Resume unit: bucket. */
+  /** Stages 2/3 — posting segments. Resume unit: bucket. */
   private[graft] def stagePostings(spark: SparkSession, dir: String, cfg: Config,
                             stats: DocStats, grams: Boolean, log: Manifest.State): Int = {
     import spark.implicits._
@@ -697,10 +659,9 @@ object IndexBuild {
     val missing = (0 until stats.nBuckets).filterNot(b => done(b.toString))
     if (missing.isEmpty) return stats.nBuckets
     val t0 = System.nanoTime()
-    val segRows = buildSegRows(spark, readTable(spark, dir, DocsTable), cfg,
-      stats, grams, missing)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    segRows.write.mode("overwrite").partitionBy("bucket").parquet(table.path(dir))
+    buildSegRows(spark, readTable(spark, dir, DocsTable), cfg, stats, grams, missing)
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("bucket").parquet(table.path(dir))
     val wallMs = (System.nanoTime() - t0) / 1000000
     val m = readTable(spark, dir, table).where(col("bucket").isin(missing: _*))
       .groupBy("bucket")
@@ -714,7 +675,7 @@ object IndexBuild {
     done.size
   }
 
-  /** Stage 5 — the dictionaries ([[writeDictionaries]]). */
+  /** Stage 4 — the dictionaries ([[writeDictionaries]]). */
   private[graft] def stageDictionary(spark: SparkSession, dir: String,
                                      log: Manifest.State): Unit = {
     if (log.completed("dictionary")("all")) return

@@ -55,11 +55,12 @@ object Maintenance {
   private[graft] val EmptyGroupsTable = Table("empty_groups",
     StructType.fromDDL("url STRING"), optional = true)
 
-  /** The stages compact resets: the build stages its rebuild re-runs, and
-    * the appends, merges and dictionary rewrites of the index it replaces.
+  /** The stages compact resets: the build stages its swap and rebuild
+    * replace, and the appends, merges and dictionary rewrites of the index
+    * it replaces.
     */
   private val DerivedStages = Seq("ids", "postings_terms", "postings_grams", "dictionary",
-    "cleanup", "seg_merge", "chunk_add", "update", "upd_dict")
+    "seg_merge", "chunk_add", "update", "upd_dict")
 
   /** Target delta chunks per shuffle partition for [[update]]'s adaptive
     * partition count — ~the full build's measured rows-per-partition
@@ -156,48 +157,56 @@ object Maintenance {
   def emptyGroupUrls(spark: SparkSession, dir: String): DataFrame =
     readTable(spark, dir, EmptyGroupsTable)
 
-  /** M2: reclaim space — rewrite the corpus without tombstoned
-    * (url, warc_ts) versions (docs store minus doc_id, back into the
-    * build's chunk-scratch layout), then rebuild ids/postings/dictionary
-    * via the normal build stages (ids re-densify, stats refresh, scratch
-    * dropped again at the end).
+  /** M2: reclaim space — rewrite the docs store without tombstoned
+    * (url, warc_ts) versions, its ids re-densified from 0 and its DocStats
+    * refreshed, then rebuild the postings and dictionaries with the build's
+    * own stages. A Delta-style rewrite: the compacted docs store goes in as
+    * one commit. The kept rows keep their docpart and chunking, so the
+    * index's `docParts` and `chunkMode` come from its DocStats; `cfg`
+    * supplies the rest (bucket count, ranges, k1/b), which compact may
+    * change, since it rewrites every posting.
     *
-    * The swap record stages the kept rows as the chunk scratch, resets
-    * every derived stage and removes the docs store, the tombstones and
-    * the derived tables; its `compact` entry marks the compact unfinished
-    * ([[Manifest.State.compactPending]]) until the final record resets it. A crash before
-    * the swap leaves the old index intact (a re-run starts over); after it,
-    * a re-run resumes the rebuild. Publish removes the tombstones once, so
-    * a delete issued during a crashed rebuild survives the re-run. Publish
-    * removes the docs store before the tombstones, so a search during a
-    * crashed compact sees the tombstone-filtered view or fails fast on the
-    * missing docs dir, never resurrected documents.
+    * The swap record stages the compacted docs store, sets its DocStats,
+    * resets every derived stage and removes the docs store, the tombstones
+    * and the derived tables; its `compact` entry marks the compact
+    * unfinished ([[Manifest.State.compactPending]]) until the final record
+    * replaces it with the `ids` entry of the new docs store. A crash before
+    * the swap leaves the old index intact (a re-run starts over); after
+    * it, a re-run resumes the rebuild. Publish removes the tombstones once,
+    * so a delete issued during a crashed rebuild survives the re-run.
+    * Publish removes the docs store before the tombstones, so a search
+    * during a crashed compact sees the tombstone-filtered view or fails
+    * fast on the missing docs dir, never resurrected documents.
     */
   def compact(spark: SparkSession, dir: String, cfg: IndexBuild.Config): Unit = {
-    import spark.implicits._
-    if (!Manifest.open(dir).compactPending) {
+    val log0 = Manifest.open(dir)
+    if (log0.completed("compact")("swap")) throw new IllegalStateException(
+      s"$dir: a compact an older writer left unfinished (its chunk-scratch swap); " +
+        "finish it with that writer or rebuild the index")
+    if (!log0.compactPending) {
       val t = tombstones(spark, dir)
       if (t.isEmpty) return
-      val docs = readTable(spark, dir, DocsTable)
-      // pure projection: the scratch carries no token arrays (posting stages
-      // re-derive them from chunk text; explicit grams are data and ride in
-      // their own column), so compaction is an anti-join + rewrite
-      val kept = docs.join(t.select("url", "warc_ts").distinct(),
-          Seq("url", "warc_ts"), "left_anti")
-        .select(IndexBuild.ChunksTable.schema.fieldNames.map(col).toIndexedSeq: _*)
+      val s0 = log0.docStats(dir)
+      val kept = readTable(spark, dir, DocsTable).drop("doc_id")
+        .join(t.select("url", "warc_ts").distinct(), Seq("url", "warc_ts"), "left_anti")
       Manifest.commitStaged(dir) { stg =>
-        kept.write.mode("overwrite").partitionBy("docpart").parquet(IndexBuild.chunksDir(stg))
-        Record(Some(Entry("compact", "swap", 0L, 0L, "", 0L)),
-          resets = DerivedStages,
-          removes = Seq(DocsTable, TombstonesTable, IndexBuild.ChunksTable,
+        val t0 = System.nanoTime()
+        val stats = IndexBuild.writeDocs(spark, kept,
+          kept.groupBy("url").agg(count(lit(1)).as("cnt")), stg,
+          cfg.copy(docParts = s0.docParts, chunkMode = s0.chunkMode))
+        Record(Some(Entry("compact", "docs", stats.nDocs, 0L, stats.watermark,
+            (System.nanoTime() - t0) / 1000000)),
+          stats = Some(stats), resets = DerivedStages,
+          removes = Seq(DocsTable, TombstonesTable,
             IndexBuild.TermPostingsTable, IndexBuild.GramPostingsTable,
             IndexBuild.DictTable, IndexBuild.GramDictTable).map(_.name))
       }
     }
-    // re-run the build with chunks complete: only derived stages execute
-    IndexBuild.build(spark, IndexBuild.emptyTable(spark, IndexBuild.ChunksTable)
-      .select(col("url"), col("warc_ts"), col("lang"), col("chunk_text").as("text")), dir, cfg)
-    Manifest.commit(dir, Record(None, resets = Seq("compact")))
+    val log = Manifest.open(dir)
+    IndexBuild.stageDerived(spark, dir, cfg, log.docStats(dir), log)
+    val swap = log.live.find(_.stage == "compact").get
+    Manifest.commit(dir, Record(Some(swap.copy(stage = "ids", unit = "all")),
+      resets = Seq("compact")))
   }
 
   /** M3 `-t` dry run (reference cmdUpdate print-plan, fts-lmdb.go:987-1026):
@@ -345,7 +354,8 @@ object Maintenance {
       math.min(8L, cfg.shufflePartitions.toLong), // floor: never a serial kernel
       math.min(cfg.shufflePartitions.toLong,
         (nDeltaChunks + UpdateChunksPerPartition - 1) / UpdateChunksPerPartition)).toInt)
-    val (withIds0, cleanup) = IndexBuild.assignIds(spark, deltaChunks, base, deltaCfg)
+    val (withIds0, _, cleanup) = IndexBuild.assignIds(spark, deltaChunks,
+      deltaChunks.groupBy($"url").agg(count(lit(1)).as("cnt")), base, deltaCfg)
     // cache the id-stamped delta: three consumers (two posting appends +
     // the docs append) would otherwise each re-run the sort + url-base join
     val withIds = withIds0.cache()

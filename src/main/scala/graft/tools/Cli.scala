@@ -252,8 +252,7 @@ object Cli {
           if (rest.contains("--org")) IndexBuild.ChunkMode.Org
           else if (rest.contains("--doc")) IndexBuild.ChunkMode.Doc
           else IndexBuild.ChunkMode.Lines))
-      println(s"indexed n_docs=${stats.nDocs} resumedChunkParts=${stats.resumedChunks} " +
-        s"resumedTermBuckets=${stats.resumedTermBuckets}")
+      println(s"indexed n_docs=${stats.nDocs} resumedTermBuckets=${stats.resumedTermBuckets}")
     case "search" :: dir :: rest if rest.nonEmpty =>
       // reference display contract (fts-lmdb.go:56-62, 1375-1388):
       //   --format FMT / --sexp / -n / --start-format F / --end-format F

@@ -9,7 +9,7 @@ import java.nio.file.{Files, Paths}
 
 /** The commit log fails fast, naming the path, on an index it cannot
   * read: one written before the log existed, one with a corrupt record, or
-  * one an older writer's update left unfinished.
+  * one an older writer's update or compact left unfinished.
   */
 class CommitLogSpec extends SparkSuite {
 
@@ -58,5 +58,15 @@ class CommitLogSpec extends SparkSuite {
     assert(e.getMessage.contains(dir), e.getMessage)
     Manifest.commit(dir, Record(Some(Entry("upd_docs", "5f3a_2", 2L, 0L, "", 0L))))
     assert(Maintenance.update(spark, dir, docs, cfg) == ((0L, 0L, 0L)))
+  }
+
+  test("a compact an older writer left unfinished fails naming the index") {
+    // the older writer staged the kept rows as a chunk scratch in a
+    // `compact swap` record and rebuilt the docs store from it
+    val dir = tmpDir("log-older-compact")
+    IndexBuild.build(spark, WebCorpus.readmeCorpus(spark), dir, cfg)
+    Manifest.commit(dir, Record(Some(Entry("compact", "swap", 0L, 0L, "", 0L))))
+    val e = intercept[IllegalStateException](Maintenance.compact(spark, dir, cfg))
+    assert(e.getMessage.contains(dir), e.getMessage)
   }
 }

@@ -289,16 +289,15 @@ class MaintenanceSpec extends SparkSuite {
     val wantUrls = new Search(spark, compactedCopy(dir, "maint-crash-ref")).search(Seq("the"))
       .select("url").distinct().as[String].collect().toSet
 
-    // the mid-compact crash state: compacted chunks swapped in,
-    // tombstones+docs already destroyed, derived stages reset, compact
-    // pending — the swap's publish dies at its last step, before the
-    // rebuild starts. The window the pre-marker compact could not recover
-    // from (tombstones empty -> re-run no-oped with no docs store left)
+    // the mid-compact crash state: compacted docs store swapped in,
+    // tombstones and postings already destroyed, derived stages reset,
+    // compact pending — the swap's publish dies at its last step, before
+    // the rebuild starts. The window the pre-marker compact could not
+    // recover from (tombstones empty -> re-run no-oped)
     crashCompactAt(dir, "finish ")
     assert(Manifest.state(dir).compactPending)
-    assert(!Files.exists(Paths.get(IndexBuild.docsDir(dir))))
+    assert(IndexBuild.readTable(spark, dir, IndexBuild.DocsTable).where($"url" === victim).isEmpty)
     assert(!Files.exists(Paths.get(dir, "tombstones")))
-    assert(Files.exists(Paths.get(IndexBuild.chunksDir(dir))))
 
     Maintenance.compact(spark, dir, cfg) // resume: no tombstones, compact pending
     assert(!Manifest.state(dir).compactPending)
@@ -351,13 +350,12 @@ class MaintenanceSpec extends SparkSuite {
     val want = new Search(spark, compactedCopy(dir, "maint-crash2-ref")).search(Seq("the"))
       .select("url").distinct().as[String].collect().toSet
 
-    // crash window: the rebuild got past ids+cleanup (chunk scratch
-    // consumed, docs store committed) but died committing the first term
-    // postings bucket — chunks/ is GONE and docs/ is the ONLY corpus copy.
-    // A resume that blindly deletes docs/ destroys the index.
+    // crash window: the swap committed the compacted docs store but the
+    // rebuild died committing the first term postings bucket — docs/ is
+    // the ONLY corpus copy. A resume that blindly deletes docs/ destroys
+    // the index.
     crashCompactAt(dir, "record postings_terms 0")
     assert(Manifest.state(dir).compactPending)
-    assert(!Files.exists(Paths.get(dir, "chunks"))) // cleanup already ran
     // a delete issued INSIDE the crash window (between crash and resume)
     // must survive the resumed compact, not be silently dropped with the
     // pre-compact tombstones
@@ -370,6 +368,47 @@ class MaintenanceSpec extends SparkSuite {
     val got = new Search(spark, dir).search(Seq("the"))
       .select("url").distinct().as[String].collect().toSet
     assert(got == want - lateVictim, "late delete lost or resume diverged")
+  }
+
+  test("compact keeps the index's docParts and chunkMode: a later delete still tombstones") {
+    val dir = tmpDir("maint-compact-parts")
+    val docs = WebCorpus.generate(spark, 40, seed = 37L, partitions = 2)
+    IndexBuild.build(spark, docs, dir, cfg)
+    val urls = docs.select("url").orderBy("url").as[String].collect().toSeq
+    Maintenance.delete(spark, dir, Seq(urls.head))
+    Maintenance.compact(spark, dir, cfg.copy(docParts = 3, chunkMode = IndexBuild.ChunkMode.Doc))
+    val stats = IndexBuild.readDocStats(dir)
+    assert((stats.docParts, stats.chunkMode) == ((cfg.docParts, cfg.chunkMode)))
+    // every url of a later delete is found in the docpart it lives in
+    Maintenance.delete(spark, dir, urls.tail)
+    assert(Maintenance.tombstones(spark, dir).select("url").distinct().count() == urls.size - 1)
+    assert(Maintenance.liveDocs(spark, dir).isEmpty)
+  }
+
+  test("a build over a compacted or compact-pending index never rewrites docs/ from its source") {
+    val dir = tmpDir("maint-compact-build")
+    val docs = WebCorpus.generate(spark, 40, seed = 41L, partitions = 2)
+    val other = WebCorpus.generate(spark, 30, seed = 43L, partitions = 2)
+    IndexBuild.build(spark, docs, dir, cfg)
+    Maintenance.delete(spark, dir, Seq(docs.select("url").orderBy("url").head().getString(0)))
+    val want = compactedCopy(dir, "maint-compact-build-ref")
+    def docsRows(d: String) = IndexBuild.readTable(spark, d, IndexBuild.DocsTable)
+    def sameDocs(a: String, b: String) =
+      docsRows(a).exceptAll(docsRows(b)).isEmpty && docsRows(b).exceptAll(docsRows(a)).isEmpty
+
+    // pending: the swap committed the compacted docs store, the rebuild died
+    crashCompactAt(dir, "record postings_terms 0")
+    IndexBuild.build(spark, other, dir, cfg)
+    assert(Manifest.state(dir).compactPending)
+    assert(sameDocs(dir, want))
+    Maintenance.compact(spark, dir, cfg)
+    assert(!Manifest.state(dir).compactPending)
+    assert(IndexDigests(spark, dir) == IndexDigests(spark, want))
+
+    // compacted: the final record carries the docs store's ids entry
+    IndexBuild.build(spark, other, dir, cfg)
+    assert(sameDocs(dir, want))
+    assert(IndexBuild.readDocStats(dir) == IndexBuild.readDocStats(want))
   }
 
   test("deletion-only snapshot update tombstones and returns (0,0,n)") {

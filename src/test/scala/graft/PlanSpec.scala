@@ -84,10 +84,11 @@ class PlanSpec extends SparkSuite {
 
   test("doc-id base join broadcast is size-gated (no broadcast above the url limit)") {
     import org.apache.spark.sql.functions._
-    // chunk-shaped input: the docs store minus doc_id (scratch is dropped)
+    // chunk-shaped input: the docs store minus doc_id
     val chunks = spark.read.parquet(IndexBuild.docsDir(dir)).drop("doc_id")
+    val counts = chunks.groupBy("url").agg(count(lit(1)).as("cnt"))
     def idPlan(limit: Long): org.apache.spark.sql.DataFrame = {
-      val (withIds, cleanup) = IndexBuild.assignIds(spark, chunks, 0L,
+      val (withIds, _, cleanup) = IndexBuild.assignIds(spark, chunks, counts, 0L,
         IndexBuild.Config(shufflePartitions = 4, broadcastUrlLimit = limit))
       val df = withIds.select("url", "doc_id")
       cleanup(); df

@@ -47,10 +47,8 @@ class ResumeSpec extends SparkSuite {
     Manifest.arm((_, label) => label == "record postings_terms 3")
     try intercept[Manifest.InjectedCrash](IndexBuild.build(spark, docs, dir, cfg))
     finally Manifest.disarm()
-    // the chunk scratch is dropped once the docs store commits; the docs
-    // store carries the tokenized corpus — untouched docs == no
-    // re-tokenization
-    assert(fileMTimes(IndexBuild.chunksDir(dir)).isEmpty)
+    // the docs store carries the chunked corpus — untouched docs == no
+    // re-chunking
     val docsBefore = fileMTimes(IndexBuild.docsDir(dir))
     assert(docsBefore.nonEmpty)
 
@@ -70,13 +68,63 @@ class ResumeSpec extends SparkSuite {
     assert(resumed == baseline)
   }
 
+  test("a build killed as it commits the docs store redoes only that stage") {
+    val dir = tmpDir("resume-ids")
+    val ref = tmpDir("resume-ids-ref")
+    IndexBuild.build(spark, docs, ref, cfg)
+    Manifest.arm((_, label) => label == "record ids all")
+    try intercept[Manifest.InjectedCrash](IndexBuild.build(spark, docs, dir, cfg))
+    finally Manifest.disarm()
+    // the docs store is written, uncommitted, and nothing downstream ran
+    assert(fileMTimes(IndexBuild.docsDir(dir)).nonEmpty)
+    assert(Manifest.state(dir).stats.isEmpty)
+    Seq(IndexBuild.termPostingsDir(dir), IndexBuild.gramPostingsDir(dir), IndexBuild.dictDir(dir))
+      .foreach(p => assert(!Files.exists(Paths.get(p)), p))
+    IndexBuild.build(spark, docs, dir, cfg)
+    assert(IndexDigests(spark, dir) == IndexDigests(spark, ref))
+    val rows = (d: String) => IndexBuild.readTable(spark, d, IndexBuild.DocsTable)
+    assert(rows(dir).exceptAll(rows(ref)).isEmpty && rows(ref).exceptAll(rows(dir)).isEmpty)
+    assert(IndexBuild.readDocStats(dir) == IndexBuild.readDocStats(ref))
+  }
+
   test("manifest records rows/bytes per unit (lineage metrics)") {
     val dir = tmpDir("resume-idx3")
-    IndexBuild.build(spark, docs, dir, cfg)
+    val stats = IndexBuild.build(spark, docs, dir, cfg)
     val lines = Manifest.entries(dir)
-    assert(lines.count(_.contains(""""stage":"chunks"""")) == cfg.docParts)
+    assert(lines.count(_.contains(""""stage":"ids"""")) == 1)
+    assert(lines.exists(l => l.contains(""""stage":"ids","unit":"all"""") &&
+      l.contains(s""""rows":${stats.nDocs},""")))
+    assert(stats.nDocs > 0)
     assert(lines.count(_.contains(""""stage":"postings_terms"""")) == cfg.nBuckets)
     assert(lines.forall(_.contains(""""status":"complete"""")))
-    assert(lines.exists(l => l.contains(""""stage":"chunks"""") && !l.contains(""""rows":0""")))
   }
+
+  test("the build leaves the session's partitionOverwriteMode as it found it") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "static")
+    IndexBuild.build(spark, docs, tmpDir("resume-conf"), cfg)
+    assert(spark.conf.get(key) == "static")
+  }
+
+  test("a source that changes between the build's two reads fails the build, naming the index") {
+    val dir = tmpDir("resume-unstable")
+    val n = 20
+    // the first n evaluations (the count pre-pass) see two lines per page,
+    // every later one (the docs write) one
+    ResumeSpec.reads.set(0)
+    val text = org.apache.spark.sql.functions.udf { () =>
+      if (ResumeSpec.reads.getAndIncrement() < n) "one two\nthree four\n" else "one two\n"
+    }.asNondeterministic()
+    val unstable = spark.range(n).selectExpr("concat('https://u.example/', id) AS url",
+        "timestamp'2020-01-01 00:00:00' AS warc_ts", "'en' AS lang")
+      .withColumn("text", text())
+    val e = intercept[IllegalStateException](IndexBuild.build(spark, unstable, dir, cfg))
+    assert(e.getMessage.contains(dir), e.getMessage)
+    assert(Manifest.state(dir).stats.isEmpty)
+  }
+}
+
+object ResumeSpec {
+  /** Evaluations of the unstable source's text (tasks run in this JVM). */
+  val reads = new java.util.concurrent.atomic.AtomicInteger
 }

@@ -32,8 +32,6 @@ class TableSchemaSpec extends SparkSuite {
   test("declared table schemas match the writers' output after build and maintenance") {
     val dir = tmpDir("schema-idx")
     val base = WebCorpus.generate(spark, 60, seed = 44L, partitions = 2).cache()
-    IndexBuild.stageChunks(spark, base, dir, cfg, Manifest.open(dir))
-    check(dir, "chunks")(IndexBuild.ChunksTable)
     IndexBuild.build(spark, base, dir, cfg)
     check(dir, "build")(derived: _*)
 
