@@ -221,11 +221,17 @@ object IndexBuild {
 
   def build(spark: SparkSession, docs: DataFrame, dir: String,
             cfg: Config = Config()): BuildStats = {
-    spark.conf.set("spark.sql.files.maxPartitionBytes", MaxPartitionBytes.toString)
-    val log = Manifest.open(dir)
-    val stats = stageIds(spark, docs, dir, cfg, log)
-    val resumedTerm = stageDerived(spark, dir, cfg, stats, log)
-    BuildStats(stats.nDocs, resumedTerm)
+    // the build's own reads split at MaxPartitionBytes; the caller's
+    // session gets its setting back, also when the build fails
+    val key = "spark.sql.files.maxPartitionBytes"
+    val callers = spark.conf.getAll.get(key)
+    spark.conf.set(key, MaxPartitionBytes.toString)
+    try {
+      val log = Manifest.open(dir)
+      val stats = stageIds(spark, docs, dir, cfg, log)
+      val resumedTerm = stageDerived(spark, dir, cfg, stats, log)
+      BuildStats(stats.nDocs, resumedTerm)
+    } finally callers.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   /** The stages downstream of the docs store: both posting families, then

@@ -186,13 +186,22 @@ class ParitySpec extends SparkSuite {
 
   test("inline-id and shuffle-join hydration paths return identical results") {
     // inline gate 0: shuffle-joined ids, from the driver kernels' local
-    // relation or, with posting gate 0 too, from the distributed kernels
+    // relation or, with posting gate 0 too, from the distributed kernels;
+    // the inline path filters, verifies and limits on the driver, the join
+    // path in Catalyst
     val joinPaths = Seq(new Search(spark, dir, maxInlineCandidates = 0),
       new Search(spark, dir, maxInlineCandidates = 0).tap(_.maxInlinePostings = 0))
-    for (q <- Seq(Seq("one"), Seq("one", "two")); joinPath <- joinPaths) {
-      val a = search.search(q).collect().map(_.toSeq).toSeq
-      val b = joinPath.search(q).collect().map(_.toSeq).toSeq
-      assert(a == b, s"query $q")
+    val queries = Seq[(Seq[String], Boolean, Int, Option[String])](
+      (Seq("one"), false, Int.MaxValue, None), (Seq("one", "two"), false, Int.MaxValue, None),
+      (Seq("fou"), true, Int.MaxValue, None), (Seq("fou"), false, Int.MaxValue, None),
+      (Seq("one"), false, Int.MaxValue, Some("thr+ee")), (Seq("one"), false, 2, None),
+      (Seq("o", "t"), true, 2, Some("(?i)THREE|five")), (Seq("zzqx"), false, Int.MaxValue, None))
+    for ((q, partial, limit, re) <- queries; joinPath <- joinPaths) {
+      val a = search.search(q, partial, limit, re)
+      val b = joinPath.search(q, partial, limit, re)
+      assert(a.schema == b.schema, s"query $q")
+      assert(a.collect().map(_.toSeq).toSeq == b.collect().map(_.toSeq).toSeq,
+        s"query $q partial=$partial limit=$limit regex=$re")
     }
   }
 

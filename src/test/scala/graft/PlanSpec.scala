@@ -21,14 +21,14 @@ class PlanSpec extends SparkSuite {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  /** The executed plan of the search's hydration collect: the one that
-    * scans the docs store's chunk text.
+  /** The query execution of a cold inline search's row fetch: the one
+    * collect that scans the docs store's chunk text.
     */
-  private def hydrationPlan(args: Seq[String]): String = {
-    val (_, plans) = executedPlans(search.search(args))
-    val hydration = plans.filter(_._2.contains("chunk_text"))
-    assert(hydration.map(_._1) == Seq("collect"), plans.mkString("\n"))
-    hydration.head._2
+  private def rowFetch(args: Seq[String]): org.apache.spark.sql.execution.QueryExecution = {
+    val (_, qes) = queryExecutions(new Search(spark, dir).search(args))
+    val fetch = qes.filter(_._2.executedPlan.toString.contains("chunk_text"))
+    assert(fetch.map(_._1) == Seq("collect"), qes.map(_._2.executedPlan).mkString("\n"))
+    fetch.head._2
   }
 
   test("postings scan prunes bucket partitions and pushes the key filter") {
@@ -63,8 +63,27 @@ class PlanSpec extends SparkSuite {
     assert(p.contains("LocalTableScan") && !p.contains("Sort"), p)
   }
 
+  test("inline hydration fetches its rows under one InSet id filter, pushed to the docs scan") {
+    import org.apache.spark.sql.catalyst.expressions.{InSet, Literal}
+    val ids = search.candidates(Seq("the")).count()
+    assert(ids > 10) // above the optimizer's own In-to-InSet conversion threshold
+    val qe = rowFetch(Seq("the"))
+    val conditions = qe.analyzed.collect { case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition }
+    assert(conditions.length == 1, qe.analyzed)
+    // one InSet node holding every id, not an IN list of one literal per id
+    assert(conditions.head.collect { case i: InSet => i.hset.size } == Seq(ids), conditions.head)
+    assert(conditions.head.collect { case l: Literal => l }.isEmpty, conditions.head)
+    val scans = PlanSpec.Adaptive.collect(qe.executedPlan) {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    }
+    assert(scans.length == 1, qe.executedPlan)
+    assert(scans.head.dataFilters.exists(_.isInstanceOf[InSet]), scans.head.dataFilters)
+    assert("PushedFilters: \\[[^\\]]*In\\(doc_id".r.findFirstIn(scans.head.toString).nonEmpty,
+      s"doc_id pushdown missing:\n${scans.head}")
+  }
+
   test("docs hydration scan prunes columns (no terms/grams for search output)") {
-    val p = hydrationPlan(Seq("the"))
+    val p = rowFetch(Seq("the")).executedPlan.toString
     // ReadSchema of the docs scan must not include the heavy token arrays
     val readSchemas = "ReadSchema: [^\\n]*".r.findAllIn(p).toList
     val docsScans = readSchemas.filter(_.contains("chunk_text"))
@@ -132,8 +151,11 @@ class PlanSpec extends SparkSuite {
       .withColumn("off", graft.functions.VerifyMatch(col("chunk_text"), Seq("quick", "fox"), false))
     val got = df.collect().map(r => r.getString(0) -> r.getInt(1)).toMap
     assert(got("the quick brown fox") == 4 && got("twotwo") == -1)
-    // the search plan must not contain a Scala UDF anywhere
-    val p = hydrationPlan(Seq("the", "of"))
+    // the join path's search plan must not contain a Scala UDF anywhere
+    // (the inline path verifies on the driver with the same static verify)
+    val joined = new Search(spark, dir, maxInlineCandidates = 0).search(Seq("the", "of"))
+    joined.collect()
+    val p = plan(joined)
     assert(!p.contains("UDF"), s"Scala UDF leaked into the search plan:\n${p.take(600)}")
     assert(p.contains("verify_match"), "native verify expression missing from the plan")
   }

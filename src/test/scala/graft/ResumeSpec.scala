@@ -106,6 +106,18 @@ class ResumeSpec extends SparkSuite {
     assert(spark.conf.get(key) == "static")
   }
 
+  test("the build leaves the session conf as it found it, also when it fails") {
+    val key = "spark.sql.files.maxPartitionBytes"
+    for (callers <- Seq(Some("7m"), None)) {
+      callers.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      val before = spark.conf.getAll
+      IndexBuild.build(spark, docs, tmpDir("resume-split"), cfg)
+      assert(spark.conf.getAll == before, s"caller's $key: $callers")
+      intercept[Exception](IndexBuild.build(spark, docs.drop("text"), tmpDir("resume-split"), cfg))
+      assert(spark.conf.getAll == before, s"caller's $key: $callers, after a failed build")
+    }
+  }
+
   test("a source that changes between the build's two reads fails the build, naming the index") {
     val dir = tmpDir("resume-unstable")
     val n = 20

@@ -9,7 +9,8 @@ import graft.sources.WebCorpus
   * reads use declared schemas, so no query runs a schema-inference job, the
   * relations are resolved once per Search, a tombstoned index adds one
   * bounded dead-id probe per Search, not per query, and a repeated query
-  * key is served from the Search's segment cache without a job.
+  * key or search candidate is served from the Search's caches without a
+  * job.
   */
 class SearchJobsSpec extends SparkSuite {
   private val cfg = IndexBuild.Config(nBuckets = 4, nRanges = 2, docParts = 4,
@@ -84,13 +85,58 @@ class SearchJobsSpec extends SparkSuite {
     assert(jobs(s.bm25TopK(Seq("and"), 5, conjunctive = false).collect()) == 0)
   }
 
-  test("an inline search runs exactly 2 jobs cold and 1 warm") {
+  test("an inline search runs exactly 2 jobs cold and 0 warm") {
     val s = opened()
     val q = () => assert(s.search(Seq("the")).collect().nonEmpty)
     val first = jobs(q())
     val second = jobs(q())
-    // the segment fetch and the hydration collect; warm, the hydration only
-    assert(first == 2 && second == 1, s"$first jobs cold, $second warm")
+    // the segment fetch and the row fetch; warm, both caches answer
+    assert(first == 2 && second == 0, s"$first jobs cold, $second warm")
+  }
+
+  test("a search whose candidates are partly cached runs 1 job, and its pushed filter lists only the missing ids") {
+    val ids = (q: Seq[String]) => opened().candidates(q).collect().map(_.getLong(0)).toSet
+    val (cached, all) = (ids(Seq("the", "of")), ids(Seq("the")))
+    // "the of" has the grams of "the" and more: its candidates are a subset
+    assert(cached.nonEmpty && cached.subsetOf(all) && all.size > cached.size)
+    val s = opened()
+    s.search(Seq("the", "of")).collect()
+    var n = 0
+    val (_, qes) = queryExecutions { n = jobs(s.search(Seq("the")).collect()) }
+    assert(n == 1, s"$n jobs")
+    val scans = qes.flatMap { case (_, qe) =>
+      PlanSpec.Adaptive.collect(qe.executedPlan) {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+      }
+    }
+    assert(scans.length == 1, scans.mkString("\n"))
+    val idSets = scans.head.dataFilters.collect {
+      case i: org.apache.spark.sql.catalyst.expressions.InSet => i.hset
+    }
+    assert(idSets == Seq(all -- cached), s"id filter: $idSets")
+    assert("PushedFilters: \\[[^\\]]*In\\(doc_id".r.findFirstIn(scans.head.toString).nonEmpty,
+      s"doc_id pushdown missing:\n${scans.head}")
+  }
+
+  test("the row cache never holds more than maxInlineCandidates rows, and evictions keep answers") {
+    val qs = Seq(Seq("of"), Seq("and"), Seq("the", "of"), Seq("to"), Seq("of"))
+    val want = qs.map(q => q -> new Search(spark, dir).search(q).collect().toSeq).toMap
+    val probe = opened()
+    // every query hydrates inline (its least frequent gram's df bounds its
+    // candidates), but not every query's rows fit the cache at once
+    val gate = qs.map { q =>
+      probe.gramDictLookup(graft.core.Gram.gramsSorted(partial = false, q).toSeq).values.min
+    }.max.toInt
+    val candidates = qs.flatMap(q => probe.candidates(q).collect().map(_.getLong(0))).toSet
+    assert(candidates.size > gate, s"${candidates.size} candidates fit the gate $gate")
+    val s = new Search(spark, dir, maxInlineCandidates = gate)
+    var peak = 0L
+    for (_ <- 1 to 2; q <- qs) {
+      assert(s.search(q).collect().toSeq == want(q), s"query $q")
+      assert(s.cachedRows <= gate, s"${s.cachedRows} cached rows, gate $gate")
+      peak = math.max(peak, s.cachedRows)
+    }
+    assert(peak > 0)
   }
 
   test("a tombstoned index: opening, lookups and the first bm25TopK run at most 4 jobs") {

@@ -31,20 +31,25 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
   }
 
-  /** `body`'s result and the (action, executed plan) of every query it ran. */
-  def executedPlans[T](body: => T): (T, Seq[(String, String)]) = {
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+  /** `body`'s result and the (action, query execution) of every query it ran. */
+  def queryExecutions[T](body: => T): (T, Seq[(String, QueryExecution)]) = {
+    val qes = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]
     val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(f -> qe.executedPlan.toString)
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = qes.add(f -> qe)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
     try {
       val r = body
       ListenerBusDrain(spark.sparkContext)
-      (r, plans.toArray(Array.empty[(String, String)]).toSeq)
+      (r, qes.toArray(Array.empty[(String, QueryExecution)]).toSeq)
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** `body`'s result and the (action, executed plan) of every query it ran. */
+  def executedPlans[T](body: => T): (T, Seq[(String, String)]) = {
+    val (r, qes) = queryExecutions(body)
+    (r, qes.map { case (f, qe) => f -> qe.executedPlan.toString })
   }
 }
 
