@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.build.IndexBuild
 import graft.build.IndexBuild.readTable
 import graft.core.{Gram, Tokenizer}
-import graft.functions.VerifyMatch
+import graft.functions.{DocIdIn, VerifyMatch}
 
 /** Query engine over a built index directory — the Spark-native rebuild of
   * the reference's `search` path (reference: cmdSearch fts-lmdb.go:1046-1081,
@@ -46,12 +46,16 @@ import graft.functions.VerifyMatch
   *    (`maxInlineCandidates`) is hydrated on the driver: the Search keeps
   *    docs rows by doc_id in a second [[Search.LruCache]] (bounded by that
   *    gate), the ids it misses are fetched by ONE collect of the docs scan
-  *    under one `InSet` id filter ([[Search.inSet]]), and the regex
-  *    filter, the whole-word verify and the sort run on the driver into a
-  *    local relation. Such a search runs 2 jobs cold (the segment fetch
-  *    and the row fetch) and none warm. Above the gate the ids are
-  *    shuffle-joined to the docs store, verified in Catalyst and sorted
-  *    across the cluster.
+  *    under one codegen'd id-set predicate ([[graft.functions.DocIdIn]]),
+  *    and the regex filter, the whole-word verify and the sort run on the
+  *    driver into a local relation. Such a search runs 2 jobs cold (the
+  *    segment fetch and the row fetch) and none warm. Above the gate, ids
+  *    on the driver filter the docs scan map-side under the same
+  *    predicate, the regex filter and the verify run in that scan's stage,
+  *    and one exchange to a single partition sorts the rows and serves the
+  *    per-url limit (2 jobs: the scan and the result); only distributed
+  *    ids are still shuffle-joined to the docs store and sorted across
+  *    the cluster.
   *
   * Snapshot contract: a Search pins the index as it is at construction —
   * `stats` and the file lists of the docs, postings, dictionary,
@@ -99,12 +103,13 @@ class Search(spark: SparkSession, dir: String,
       .map(_.toSet)
 
   /** Drop dead docs from a relational input with a `doc_id` column: a
-    * pushed-down id filter over [[deadIds]], or a left-anti join against
-    * the tombstone table above the gate.
+    * map-side id-set filter over [[deadIds]] ([[graft.functions.DocIdIn]],
+    * a sorted `long[]`: 16 MB at the 2M-id gate), or a left-anti join
+    * against the tombstone table above the gate.
     */
   private def liveFilter(df: DataFrame): DataFrame = deadIds match {
     case Some(dead) if dead.isEmpty => df
-    case Some(dead) => df.where(!Search.inSet($"doc_id", dead))
+    case Some(dead) => df.where(!DocIdIn($"doc_id", dead))
     case None => df.join(tombstones.select("doc_id"), Seq("doc_id"), "left_anti")
   }
 
@@ -468,8 +473,8 @@ class Search(spark: SparkSession, dir: String,
              filterRegex: Option[String] = None): DataFrame = {
     // |candidates| <= min gram df, so the broadcast dictionary decides the
     // hydration plan BEFORE any kernel runs: small bound -> the ids are
-    // hydrated on the driver; huge bound -> shuffle join, and distributed
-    // ids never touch the driver.
+    // hydrated on the driver; huge bound -> the docs scan is filtered in
+    // Spark, and distributed ids never touch the driver.
     val grams = Gram.gramsSorted(partial, args)
     val dfs = gramDictLookup(grams.toSeq)
     val minDf = if (Search.unmatchable(grams, dfs)) 0L else grams.map(dfs).min
@@ -477,19 +482,27 @@ class Search(spark: SparkSession, dir: String,
     if (minDf <= maxInlineCandidates)
       return searchOnDriver(cands.fold(identity, _.collect().toSeq), args, partial,
         limitPerGroup, filterRegex)
-    // SHUFFLE_HASH with the id-only candidate side as build: a sort-merge
-    // join would sort the heavy chunk-text rows by doc_id just to probe
-    // them (the same anti-pattern the id stamp avoids)
-    val hydrated0 = docs.join(asDataset(cands).toDF("doc_id").hint("SHUFFLE_HASH"), Seq("doc_id"))
+    val hydrated0 = cands match {
+      // ids on the driver (at most minDf <= maxInlinePostings of them):
+      // a map-side filter, so the docs store never shuffles
+      case Left(ids) => docs.where(DocIdIn($"doc_id", ids))
+      // SHUFFLE_HASH with the id-only candidate side as build: a sort-merge
+      // join would sort the heavy chunk-text rows by doc_id just to probe
+      // them (the same anti-pattern the id stamp avoids)
+      case Right(ids) => docs.join(ids.toDF("doc_id").hint("SHUFFLE_HASH"), Seq("doc_id"))
+    }
     val regexFiltered = filterRegex match {
       // reference -filter (fts-lmdb.go:1094-1099, applied at 1272); Java
       // dialect here vs the reference's RE2 — documented divergence
       case Some(re) => hydrated0.where($"chunk_text".rlike(re))
       case None => hydrated0
     }
-    val hydrated = regexFiltered
+    val verified = regexFiltered
       .withColumn("offset", verifyCol($"chunk_text", args, partial))
       .where($"offset" >= 0)
+    // the verified rows of driver-held ids number at most minDf: one
+    // partition sorts them and serves the window, with no range sampling
+    val hydrated = if (cands.isLeft) verified.repartition(1) else verified
     // W5 limit-per-group window only when a limit is actually set — with
     // the default unlimited it would add a whole shuffle just to compute a
     // row number the projection drops
@@ -500,9 +513,10 @@ class Search(spark: SparkSession, dir: String,
         hydrated.withColumn("rn", row_number().over(w))
           .where($"rn" <= limitPerGroup)
       }
-    limited.select($"url", $"doc_id", $"line", ($"rune_off" + 1).as("position"),
-        $"offset", $"chunk_text", $"byte_start")
-      .orderBy($"url", $"byte_start")
+    val hits = limited.select($"url", $"doc_id", $"line", ($"rune_off" + 1).as("position"),
+      $"offset", $"chunk_text", $"byte_start")
+    val order = Seq($"url", $"byte_start", $"doc_id") // searchOnDriver's order
+    (if (cands.isLeft) hits.sortWithinPartitions(order: _*) else hits.orderBy(order: _*))
       .drop("byte_start")
   }
 
@@ -536,10 +550,10 @@ class Search(spark: SparkSession, dir: String,
   }
 
   /** The docs rows of `ids`, in one collect of the docs scan filtered by
-    * one `InSet` of the ids.
+    * one [[graft.functions.DocIdIn]] of the ids.
     */
   private def fetchDocRows(ids: Seq[Long]): Map[Long, Search.DocRow] =
-    docs.where(Search.inSet($"doc_id", ids))
+    docs.where(DocIdIn($"doc_id", ids))
       .select($"doc_id", $"url", $"line", $"rune_off", $"chunk_text", $"byte_start")
       .collect().map { r =>
         r.getLong(0) -> Search.DocRow(r.getLong(0), r.getString(1), r.getInt(2), r.getLong(3),
@@ -739,20 +753,24 @@ object Search {
   /** Candidate sets up to this size hydrate on the driver
     * ([[Search.search]]): their docs rows come from the Search's row cache,
     * and the ids it misses are fetched by one collect of the docs scan
-    * under one pushed-down `InSet` id filter — the analog of the
-    * reference's per-OID chunk lookups (getChunk fts-lmdb.go:1640-1642),
-    * without a shuffle join against the full docs store. The filter saves
-    * the shuffle, not the scan: docpart = hash(url) spreads every url rank
-    * over every docpart, so each docs file spans nearly the whole doc_id
-    * range and its min/max stats prune no file (every docs file of the
-    * 5k-page perfbench index, 22,539 chunks, spans doc_id ≈300..22,360 or
-    * wider).
+    * under one id-set predicate ([[graft.functions.DocIdIn]]) — the analog
+    * of the reference's per-OID chunk lookups (getChunk
+    * fts-lmdb.go:1640-1642), without a shuffle join against the full docs
+    * store. The filter saves the shuffle, not the scan: docpart =
+    * hash(url) spreads every url rank over every docpart, so each docs
+    * file spans nearly the whole doc_id range and its min/max stats prune
+    * no file (every docs file of the 5k-page perfbench index, 22,539
+    * chunks, spans doc_id ≈300..22,360 or wider).
     * The gate also bounds the rows the row cache holds: on the perfbench
     * index (about 100 url and chunk-text chars per row) a cached row takes
     * about 310 bytes of driver heap (Spark's `SizeEstimator` over 12,500
     * random rows: 3.9 MB), so about 31 MB at this default.
-    * Above the gate, fall back to the join: a hot-term candidate list must
-    * never be collected to the driver.
+    * Above the gate the rows are not collected: candidate ids already on
+    * the driver (the kernels ran there, at most `maxInlinePostings` of
+    * them) filter the docs scan map-side under the same predicate and are
+    * sorted in one partition; only distributed ids — a hot-term candidate
+    * list that must never reach the driver — are shuffle-joined to the
+    * docs store.
     */
   final val DefaultMaxInlineCandidates = 100000
 
@@ -884,19 +902,25 @@ object Search {
   private[query] final case class DocRow(doc_id: Long, url: String, line: Int, rune_off: Long,
                                          chunk_text: String, byte_start: Long)
 
-  /** [[Search.search]]'s output schema, as the join path derives it from
+  /** [[Search.search]]'s output schema, as its Spark plans derive it from
     * the docs store's nullable read schema.
     */
   private val HitSchema = StructType.fromDDL(
     "url STRING, doc_id BIGINT, line INT, position BIGINT, offset INT, chunk_text STRING")
 
-  /** `col IN values` as ONE Catalyst `InSet` expression; `values` are of
-    * `col`'s Scala type (Long for a BIGINT column, String for a STRING
-    * one). It plans in the same ~10 ms at any size, where `isInCollection`
-    * plans one literal per value (22 ms at 500 ids, 353 ms at 12,500), and
-    * pushes down to a parquet scan like an `IN` list.
+  /** `col IN values` as ONE Catalyst `InSet` expression, for the bad-url
+    * strings of [[searchFresh]]. It plans in the same ~10 ms at any size,
+    * where `isInCollection` plans one literal per value (22 ms at 500 ids,
+    * 353 ms at 12,500), and pushes down to a parquet scan like an `IN`
+    * list. Doc ids do not use it: that pushdown costs task CPU that grows
+    * with the set, and the docs store's min/max stats prune no file (see
+    * [[DefaultMaxInlineCandidates]]). Collecting docs rows by doc id on a
+    * 5k-page index (4 vCPUs, `local[4]`) took, under `InSet` against
+    * [[graft.functions.DocIdIn]]: 88–101 vs 67 ms wall (86–95 vs 50–52 ms
+    * task CPU) at 476 ids, 138–144 vs 71–85 ms (195–199 vs 54–57) at
+    * 2,500 and 327–377 vs 85 ms (653–699 vs 69–72) at 12,500.
     */
-  def inSet(col: Column, values: Iterable[Any]): Column =
+  def inSet(col: Column, values: Iterable[String]): Column =
     GraftBridge.column(InSet(GraftBridge.expression(col),
       values.iterator.map(CatalystTypeConverters.convertToCatalyst).toSet))
 

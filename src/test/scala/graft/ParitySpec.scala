@@ -22,6 +22,11 @@ class ParitySpec extends SparkSuite {
   /** The same index with the per-range kernels forced onto the cluster. */
   private lazy val distributed = new Search(spark, dir).tap(_.maxInlinePostings = 0)
 
+  /** An 80-page index after two updates and a delete (see [[ChurnedIndex]]). */
+  private lazy val churned = ChurnedIndex(spark, tmpDir("parity-churned"),
+    WebCorpus.generate(spark, 80, seed = 13L, partitions = 2),
+    IndexBuild.Config(nBuckets = 4, nRanges = 4, docParts = 2, shufflePartitions = 4))
+
   private val candidateQueries = Seq(Seq("the") -> false, Seq("the", "of") -> false,
     Seq("and", "you", "that") -> false, Seq(WebCorpus.Vocab(60)) -> false,
     Seq("zzqx") -> false, Seq("the", "zzqx") -> false,
@@ -75,9 +80,7 @@ class ParitySpec extends SparkSuite {
 
   test("after an update and a delete: candidates and fuzzy equal a brute-force scan in every placement") {
     import graft.core.Gram
-    val d = ChurnedIndex(spark, tmpDir("parity-churned"),
-      WebCorpus.generate(spark, 80, seed = 13L, partitions = 2),
-      IndexBuild.Config(nBuckets = 4, nRanges = 4, docParts = 2, shufflePartitions = 4))
+    val d = churned
     val dead = ChurnedIndex.deadIds(spark, d)
     assert(dead.nonEmpty)
     val all = spark.read.parquet(IndexBuild.docsDir(d)).select("doc_id", "chunk_text")
@@ -185,10 +188,10 @@ class ParitySpec extends SparkSuite {
   }
 
   test("inline-id and shuffle-join hydration paths return identical results") {
-    // inline gate 0: shuffle-joined ids, from the driver kernels' local
-    // relation or, with posting gate 0 too, from the distributed kernels;
-    // the inline path filters, verifies and limits on the driver, the join
-    // path in Catalyst
+    // inline gate 0: the driver kernels' ids filter the docs scan map-side
+    // or, with posting gate 0 too, the distributed kernels' ids are
+    // shuffle-joined; the inline path filters, verifies and limits on the
+    // driver, the other two in Catalyst
     val joinPaths = Seq(new Search(spark, dir, maxInlineCandidates = 0),
       new Search(spark, dir, maxInlineCandidates = 0).tap(_.maxInlinePostings = 0))
     val queries = Seq[(Seq[String], Boolean, Int, Option[String])](
@@ -202,6 +205,32 @@ class ParitySpec extends SparkSuite {
       assert(a.schema == b.schema, s"query $q")
       assert(a.collect().map(_.toSeq).toSeq == b.collect().map(_.toSeq).toSeq,
         s"query $q partial=$partial limit=$limit regex=$re")
+    }
+  }
+
+  test("on a tombstoned index the three hydration placements return identical live rows") {
+    val d = churned
+    val dead = ChurnedIndex.deadIds(spark, d)
+    val docs = spark.read.parquet(IndexBuild.docsDir(d)).select("doc_id", "url", "chunk_text")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+    val liveUrls = docs.collect { case (id, u, _) if !dead.contains(id) => u }.toSet
+    val deletedUrls = docs.map(_._2).toSet -- liveUrls
+    // a deleted url still holds chunks "the" verifies in: the placements must drop them
+    assert(docs.exists { case (_, u, text) =>
+      deletedUrls(u) && graft.core.Tokenizer.verifyAll(text, Seq("the"), false) >= 0 })
+    // inline; driver-held ids above the hydration gate; distributed ids
+    val placements = Seq(new Search(spark, d), new Search(spark, d, maxInlineCandidates = 0),
+      new Search(spark, d, maxInlineCandidates = 0).tap(_.maxInlinePostings = 0))
+    val queries = Seq[(Seq[String], Boolean, Int, Option[String])](
+      (Seq("the"), false, Int.MaxValue, None), (Seq("quagga"), false, Int.MaxValue, None),
+      (Seq("the", "of"), false, 2, None), (Seq("the"), false, 1, Some("(?i)wallaby|the")),
+      (Seq("ther"), true, Int.MaxValue, None))
+    for ((q, partial, limit, re) <- queries) {
+      val Seq(a, b, c) = placements.map(_.search(q, partial, limit, re).collect().map(_.toSeq).toSeq)
+      val what = s"query $q partial=$partial limit=$limit regex=$re"
+      assert(a.nonEmpty && a == b && a == c, what)
+      assert(a.forall(r => !dead.contains(r(1).asInstanceOf[Long])), s"$what: a dead doc")
+      assert(a.forall(r => !deletedUrls.contains(r.head.asInstanceOf[String])), s"$what: a deleted url")
     }
   }
 

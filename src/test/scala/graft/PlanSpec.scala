@@ -63,23 +63,46 @@ class PlanSpec extends SparkSuite {
     assert(p.contains("LocalTableScan") && !p.contains("Sort"), p)
   }
 
-  test("inline hydration fetches its rows under one InSet id filter, pushed to the docs scan") {
-    import org.apache.spark.sql.catalyst.expressions.{InSet, Literal}
-    val ids = search.candidates(Seq("the")).count()
-    assert(ids > 10) // above the optimizer's own In-to-InSet conversion threshold
+  test("inline hydration fetches its rows under one DocIdIn id filter on the docs scan, not pushed to parquet") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val ids = search.candidates(Seq("the")).collect().map(_.getLong(0)).toSet
+    assert(ids.size > 10)
     val qe = rowFetch(Seq("the"))
     val conditions = qe.analyzed.collect { case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition }
     assert(conditions.length == 1, qe.analyzed)
-    // one InSet node holding every id, not an IN list of one literal per id
-    assert(conditions.head.collect { case i: InSet => i.hset.size } == Seq(ids), conditions.head)
+    // one predicate holding every id, not an IN list of one literal per id
+    assert(PlanSpec.docIdSets(conditions) == Seq(ids), conditions.head)
     assert(conditions.head.collect { case l: Literal => l }.isEmpty, conditions.head)
     val scans = PlanSpec.Adaptive.collect(qe.executedPlan) {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }
     assert(scans.length == 1, qe.executedPlan)
-    assert(scans.head.dataFilters.exists(_.isInstanceOf[InSet]), scans.head.dataFilters)
-    assert("PushedFilters: \\[[^\\]]*In\\(doc_id".r.findFirstIn(scans.head.toString).nonEmpty,
-      s"doc_id pushdown missing:\n${scans.head}")
+    assert(PlanSpec.docIdSets(scans.head.dataFilters) == Seq(ids), scans.head.dataFilters)
+    assert(PlanSpec.pushedDocIdIn(scans.head).isEmpty, s"doc_id In pushed down:\n${scans.head}")
+  }
+
+  test("driver-held ids above the hydration gate filter the docs scan map-side and sort in one partition") {
+    import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    def executed(s: Search, limit: Int) = {
+      val df = s.search(Seq("the"), limitPerGroup = limit)
+      assert(df.collect().nonEmpty)
+      df.queryExecution.executedPlan
+    }
+    // hydration gate 0, default posting gate: the ids are on the driver
+    for (limit <- Seq(Int.MaxValue, 2)) {
+      val p = executed(new Search(spark, dir, maxInlineCandidates = 0), limit)
+      assert(PlanSpec.Adaptive.collect(p) { case j: BaseJoinExec => j }.isEmpty, s"limit $limit joins:\n$p")
+      val exchanges = PlanSpec.Adaptive.collect(p) { case e: ShuffleExchangeExec => e.outputPartitioning }
+      assert(exchanges == Seq(SinglePartition), s"limit $limit exchanges $exchanges:\n$p")
+      assert(!exchanges.exists(_.isInstanceOf[RangePartitioning]))
+      assert(p.toString.contains("doc_id_in"), p)
+    }
+    // posting gate 0 too: the ids are distributed and still join
+    val p = executed(new Search(spark, dir, maxInlineCandidates = 0).tap(_.maxInlinePostings = 0),
+      Int.MaxValue)
+    assert(p.toString.contains("ShuffledHashJoin"), p)
   }
 
   test("docs hydration scan prunes columns (no terms/grams for search output)") {
@@ -151,7 +174,7 @@ class PlanSpec extends SparkSuite {
       .withColumn("off", graft.functions.VerifyMatch(col("chunk_text"), Seq("quick", "fox"), false))
     val got = df.collect().map(r => r.getString(0) -> r.getInt(1)).toMap
     assert(got("the quick brown fox") == 4 && got("twotwo") == -1)
-    // the join path's search plan must not contain a Scala UDF anywhere
+    // the above-gate search plan must not contain a Scala UDF anywhere
     // (the inline path verifies on the driver with the same static verify)
     val joined = new Search(spark, dir, maxInlineCandidates = 0).search(Seq("the", "of"))
     joined.collect()
@@ -161,10 +184,9 @@ class PlanSpec extends SparkSuite {
   }
 
   test("join-path hydration never sort-merge-joins the chunk store") {
-    // force the join path (inline gate 0): heavy chunk-text rows must be
-    // hash-probed, not sorted by doc_id for the join, whether the
-    // candidate ids come from the driver kernels or (posting gate 0) the
-    // distributed ones
+    // inline gate 0: wherever the chunk-text rows are joined (fuzzySearch
+    // always, search with the distributed kernels' ids at posting gate 0)
+    // they must be hash-probed, not sorted by doc_id for the join
     for (joinPath <- Seq(new Search(spark, dir, maxInlineCandidates = 0),
                          new Search(spark, dir, maxInlineCandidates = 0).tap(_.maxInlinePostings = 0));
          df <- Seq(joinPath.search(Seq("the")), joinPath.fuzzySearch(Seq("the"), 0.3))) {
@@ -405,4 +427,12 @@ class PlanSpec extends SparkSuite {
 object PlanSpec {
   /** Walks adaptive plans through their query stages and subqueries. */
   object Adaptive extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** The id sets of every [[graft.functions.DocIdIn]] in `exprs`. */
+  def docIdSets(exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Seq[Set[Long]] =
+    exprs.flatMap(_.collect { case d: graft.functions.DocIdIn => d.ids.toSet })
+
+  /** A doc_id `In` among the scan's parquet pushed filters, if any. */
+  def pushedDocIdIn(scan: org.apache.spark.sql.execution.FileSourceScanExec): Option[String] =
+    "PushedFilters: \\[[^\\]]*In\\(doc_id".r.findFirstIn(scan.toString)
 }

@@ -52,11 +52,13 @@ class SearchJobsSpec extends SparkSuite {
     }
   }
 
-  /** A Search on the clean index with posting gate `gate`, its dictionary
-    * and dead-id probes already run.
+  /** A Search on the clean index with posting gate `gate` and hydration
+    * gate `maxInlineCandidates`, its dictionary and dead-id probes already
+    * run.
     */
-  private def opened(gate: Long = Search.DefaultMaxInlinePostings): Search = {
-    val s = new Search(spark, dir).tap(_.maxInlinePostings = gate)
+  private def opened(gate: Long = Search.DefaultMaxInlinePostings,
+                     maxInlineCandidates: Int = Search.DefaultMaxInlineCandidates): Search = {
+    val s = new Search(spark, dir, maxInlineCandidates).tap(_.maxInlinePostings = gate)
     s.dictLookup(Seq("the"))
     s.gramDictLookup(Seq(0))
     assert(s.deadIds.contains(Set.empty)) // a clean index: the probe runs no job
@@ -94,7 +96,7 @@ class SearchJobsSpec extends SparkSuite {
     assert(first == 2 && second == 0, s"$first jobs cold, $second warm")
   }
 
-  test("a search whose candidates are partly cached runs 1 job, and its pushed filter lists only the missing ids") {
+  test("a search whose candidates are partly cached runs 1 job, and its id filter holds only the missing ids") {
     val ids = (q: Seq[String]) => opened().candidates(q).collect().map(_.getLong(0)).toSet
     val (cached, all) = (ids(Seq("the", "of")), ids(Seq("the")))
     // "the of" has the grams of "the" and more: its candidates are a subset
@@ -110,12 +112,20 @@ class SearchJobsSpec extends SparkSuite {
       }
     }
     assert(scans.length == 1, scans.mkString("\n"))
-    val idSets = scans.head.dataFilters.collect {
-      case i: org.apache.spark.sql.catalyst.expressions.InSet => i.hset
-    }
+    val idSets = PlanSpec.docIdSets(scans.head.dataFilters)
     assert(idSets == Seq(all -- cached), s"id filter: $idSets")
-    assert("PushedFilters: \\[[^\\]]*In\\(doc_id".r.findFirstIn(scans.head.toString).nonEmpty,
-      s"doc_id pushdown missing:\n${scans.head}")
+    assert(PlanSpec.pushedDocIdIn(scans.head).isEmpty, s"doc_id In pushed down:\n${scans.head}")
+  }
+
+  test("a warm above-gate search with driver-held ids runs exactly 2 jobs") {
+    val s = opened(maxInlineCandidates = 0)
+    for (limit <- Seq(Int.MaxValue, 2)) {
+      val q = () => assert(s.search(Seq("the"), limitPerGroup = limit).collect().nonEmpty)
+      q() // the segments are cached from here on
+      val warm = jobs(q())
+      // the filtered docs scan's shuffle stage and the one-partition result
+      assert(warm == 2, s"limit $limit: $warm jobs warm")
+    }
   }
 
   test("the row cache never holds more than maxInlineCandidates rows, and evictions keep answers") {

@@ -37,6 +37,28 @@ class SqlFunctionsSpec extends SparkSuite {
     assert(got.toSeq == want)
   }
 
+  test("DocIdIn: codegen and interpreted eval agree with set membership; ids compare by value and print as a count") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.types.LongType
+    import graft.functions.DocIdIn
+    val ids = Seq(42L, 7L, 1000000007L, -3L)
+    val probes = (-5L until 50L) ++ (1000000005L until 1000000010L)
+    val want = probes.filter(ids.contains)
+    val codegen = spark.range(-5, 50).union(spark.range(1000000005L, 1000000010L)).toDF("doc_id")
+      .where(DocIdIn(col("doc_id"), ids)).collect().map(_.getLong(0)).sorted.toSeq
+    assert(codegen == want)
+    val in = DocIdIn(BoundReference(0, LongType, nullable = true), ids.sorted.toArray)
+    assert(probes.filter(p => in.eval(InternalRow(p)) == true) == want)
+    assert(in.eval(InternalRow(null)) == null)
+    // equal ids in another array: equal expressions, so plans compare and cache by value
+    val same = in.copy(ids = ids.sorted.toArray)
+    assert(same == in && same.hashCode == in.hashCode)
+    assert(in.copy(ids = Array(7L)) != in)
+    assert(in.toString.contains("4 ids") && !in.toString.contains("1000000007"), in.toString)
+    assert(!in.sql.contains("1000000007"), in.sql)
+  }
+
   test("non-constant args to verify_match are rejected") {
     graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
